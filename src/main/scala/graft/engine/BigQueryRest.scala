@@ -170,7 +170,7 @@ final case class BigQueryTableTarget(baseUrl: String, project: String,
       * + MERGE). Chunks additionally cap at ~9000 bound parameters
       * per request (the API's 10k limit). `<= 0` falls back to the
       * reference-faithful per-row MERGE (bigquery/_target.py:509-523). */
-    bulkBatch: Int = 500) extends Target {
+    bulkBatch: Int = 500) extends WireTarget {
 
   import BigQueryRest._
   import BigQueryTableTarget._
@@ -184,13 +184,11 @@ final case class BigQueryTableTarget(baseUrl: String, project: String,
 
   private def qname = s"`$project.$dataset.$table`"
 
-  private def client() = new Client(baseUrl, project, token)
-
   override def containerSignature: String =
     s"bigquery;$baseUrl;$project.$dataset.$table;pk=$RowKey"
 
   override def truncate(spark: SparkSession): Unit = {
-    client().query(s"DROP TABLE IF EXISTS $qname"); ()
+    withConn(_.query(s"DROP TABLE IF EXISTS $qname")); ()
   }
 
   private def ensureTable(c: Client, schema: StructType,
@@ -228,81 +226,58 @@ final case class BigQueryTableTarget(baseUrl: String, project: String,
     }
   }
 
-  def apply(spark: SparkSession, upserts: DataFrame,
-      deleteKeys: DataFrame): TargetStats = {
-    val up = upserts.cache()
-    val del = deleteKeys.select(col(RowKey)).cache()
-    try {
-      val (nUp, nDel) = TargetStats.countPair(up, del)
-      if (nUp == 0 && nDel == 0) return TargetStats(0, 0)
+  protected type Conn = Client
+  protected type Container = Vector[(String, String)]
 
-      // observe ONCE; a delete-only apply against an absent table is
-      // already converged — running the DELETEs would 404
-      val c0 = client()
-      val observed = c0.getTable(dataset, table)
-      if (nUp > 0 || observed.isDefined) ensureTable(c0, up.schema, observed)
-      else return TargetStats(0, 0)
+  protected def connect(): Client = new Client(baseUrl, project, token)
 
-      val (url, proj, tok, qn) = (baseUrl, project, token, qname)
-      if (nUp > 0) {
-        val schema = up.schema
-        val bb = bulkBatch
-        val (ds, tbl) = (dataset, table)
-        up.repartition(writePartitions, col(RowKey)).foreachPartition {
-          rows: Iterator[Row] =>
-            if (rows.hasNext) {
-              val c = new Client(url, proj, tok)
-              if (bb > 0) {
-                val sfx = java.util.UUID.randomUUID().toString
-                  .replace("-", "").take(8)
-                val stage = s"`$proj.$ds.${tbl}__stage_$sfx`"
-                c.query(createStageSql(stage, schema))
-                try {
-                  // stay under the API's named-parameter cap as well
-                  // as the row batch size
-                  val ncols = schema.fields.length.max(1)
-                  val chunkRows = bb.min((9000 / ncols).max(1))
-                  rows.grouped(chunkRows).foreach { chunk =>
-                    val (sql, params) = insertStageSql(stage, chunk, schema)
-                    c.query(sql, params)
-                    ()
-                  }
-                  c.query(mergeFromStageSql(qn, stage, schema))
-                  ()
-                } finally c.query(s"DROP TABLE IF EXISTS $stage")
-              } else rows.foreach { row =>
-                val (sql, params) = mergeSql(qn, row, schema)
-                c.query(sql, params)
-                ()
-              }
+  protected def observe(c: Client): Option[Vector[(String, String)]] =
+    c.getTable(dataset, table)
+
+  protected def prepare(c: Client, schema: StructType,
+      existing: Option[Vector[(String, String)]]): WireWriter[Client] = {
+    ensureTable(c, schema, existing)
+    val (proj, ds, tbl, qn) = (project, dataset, table, qname)
+    val (bb, bs) = (bulkBatch, deleteBatch)
+    WireWriter(
+      upsert = (c, rows) =>
+        if (bb > 0) {
+          val sfx = java.util.UUID.randomUUID().toString
+            .replace("-", "").take(8)
+          val stage = s"`$proj.$ds.${tbl}__stage_$sfx`"
+          c.query(createStageSql(stage, schema))
+          try {
+            // stay under the API's named-parameter cap as well as the
+            // row batch size
+            val ncols = schema.fields.length.max(1)
+            val chunkRows = bb.min((9000 / ncols).max(1))
+            rows.grouped(chunkRows).foreach { chunk =>
+              val (sql, params) = insertStageSql(stage, chunk, schema)
+              c.query(sql, params)
+              ()
             }
+            c.query(mergeFromStageSql(qn, stage, schema))
+            ()
+          } finally c.query(s"DROP TABLE IF EXISTS $stage")
+        } else rows.foreach { row =>
+          val (sql, params) = mergeSql(qn, row, schema)
+          c.query(sql, params)
+          ()
+        },
+      delete = (c, keys) => keys.grouped(bs).foreach { chunk =>
+        val params = chunk.zipWithIndex.map { case (k, i) =>
+          BqParam(s"p$i", "STRING", Some(k))
         }
-      }
-      if (nDel > 0) {
-        val bs = deleteBatch
-        del.repartition(writePartitions, col(RowKey)).foreachPartition {
-          rows: Iterator[Row] =>
-            if (rows.hasNext) {
-              val c = new Client(url, proj, tok)
-              rows.grouped(bs).foreach { chunk =>
-                val params = chunk.zipWithIndex.map { case (r, i) =>
-                  BqParam(s"p$i", "STRING", Some(r.getString(0)))
-                }
-                c.query(s"DELETE FROM $qn WHERE `$RowKey` IN (" +
-                  params.map("@" + _.name).mkString(", ") + ")", params)
-                ()
-              }
-            }
-        }
-      }
-      TargetStats(nUp, nDel)
-    } finally { up.unpersist(); del.unpersist() }
+        c.query(s"DELETE FROM $qn WHERE `$RowKey` IN (" +
+          params.map("@" + _.name).mkString(", ") + ")", params)
+        ()
+      })
   }
 
   /** Read back: `SELECT * FROM t` decoded by the result schema —
     * driver-side, gate/serve-sized. */
   def read(spark: SparkSession): DataFrame = {
-    val res = client().query(s"SELECT * FROM $qname")
+    val res = withConn(_.query(s"SELECT * FROM $qname"))
     val schema = StructType(res.fields.map { case (n, t) =>
       StructField(n, sparkTypeOf(t), nullable = true)
     })

@@ -48,23 +48,18 @@ final case class DorisTableTarget(host: String, mysqlPort: Int,
     user: String = "root", password: String = "",
     vectorIndexes: Seq[DorisVectorIndex] = Nil,
     invertedIndexes: Seq[DorisInvertedIndex] = Nil,
-    writePartitions: Int = 4, batchSize: Int = 4096) extends Target {
+    writePartitions: Int = 4, batchSize: Int = 4096) extends WireTarget {
 
   import DorisTableTarget._
 
   SurrealTableTarget.validateIdentifier(database, "database name")
   SurrealTableTarget.validateIdentifier(table, "table name")
 
-  private def withMysql[T](f: MysqlWire.Client => T): T = {
-    val c = new MysqlWire.Client(host, mysqlPort, user, database, password)
-    try f(c) finally c.close()
-  }
-
   override def containerSignature: String =
     s"doris;$host:$mysqlPort/$database;table=$table;pk=$RowKey"
 
   override def truncate(spark: SparkSession): Unit =
-    withMysql { c =>
+    withConn { c =>
       c.query(s"DROP TABLE IF EXISTS `$database`.`$table`"); ()
     }
 
@@ -142,68 +137,49 @@ final case class DorisTableTarget(host: String, mysqlPort: Int,
       }
   }
 
-  def apply(spark: SparkSession, upserts: DataFrame,
+  /** Records vector dims for the ANN DDL before the table exists
+    * (one bounded peek per not-yet-seen vector column), then the
+    * shared wire apply. */
+  override def apply(spark: SparkSession, upserts: DataFrame,
       deleteKeys: DataFrame): TargetStats = {
-    val up = upserts.cache()
-    val del = deleteKeys.select(col(RowKey)).cache()
-    try {
-      val (nUp, nDel) = TargetStats.countPair(up, del)
-      if (nUp == 0 && nDel == 0) return TargetStats(0, 0)
+    upserts.schema.fields.foreach { f =>
+      f.dataType match {
+        case ArrayType(FloatType, _) if !observedDims.contains(f.name) =>
+          upserts.select(size(col(f.name)).as("d")).filter(col("d") > 0)
+            .limit(1).collect().headOption
+            .foreach(r => observedDims += f.name -> r.getInt(0))
+        case _ => ()
+      }
+    }
+    super.apply(spark, upserts, deleteKeys)
+  }
 
-      // record vector dims for the ANN DDL before the table exists
-      up.schema.fields.foreach { f =>
-        f.dataType match {
-          case ArrayType(FloatType, _) if !observedDims.contains(f.name) =>
-            up.select(size(col(f.name)).as("d")).filter(col("d") > 0)
-              .limit(1).collect().headOption
-              .foreach(r => observedDims += f.name -> r.getInt(0))
-          case _ => ()
-        }
-      }
-      // observe ONCE; a delete-only apply against an absent table is
-      // already converged — running the DELETEs would fail on 1146
-      val proceed = withMysql { c =>
-        val observed = observedColumns(c)
-        if (nUp > 0 || observed.nonEmpty) {
-          ensureTable(c, up.schema, observed); true
-        } else false
-      }
-      if (!proceed) return TargetStats(0, 0)
+  protected type Conn = MysqlWire.Client
+  protected type Container = Map[String, String]
 
-      val (h, mp, hp, db, usr, pw, t, bs) =
-        (host, mysqlPort, httpPort, database, user, password, table, batchSize)
-      if (nUp > 0) {
-        val schema = up.schema
-        val keyIdx = schema.fieldIndex(RowKey)
-        up.repartition(writePartitions, col(RowKey)).foreachPartition {
-          rows: Iterator[Row] =>
-            if (rows.hasNext) {
-              val c = new MysqlWire.Client(h, mp, usr, db, pw)
-              try rows.grouped(bs).foreach { chunk =>
-                // delete-before-insert: the DUPLICATE KEY model has
-                // no ON CONFLICT — convergence comes from clearing
-                // the keys first (:875-888)
-                c.query(deleteSql(db, t,
-                  chunk.map(_.getString(keyIdx))))
-                streamLoad(h, hp, db, t, usr, pw,
-                  chunk.map(rowJson(_, schema)))
-              } finally c.close()
-            }
-        }
-      }
-      if (nDel > 0) {
-        del.repartition(writePartitions, col(RowKey)).foreachPartition {
-          rows: Iterator[Row] =>
-            if (rows.hasNext) {
-              val c = new MysqlWire.Client(h, mp, usr, db, pw)
-              try rows.grouped(bs).foreach { chunk =>
-                c.query(deleteSql(db, t, chunk.map(_.getString(0))))
-              } finally c.close()
-            }
-        }
-      }
-      TargetStats(nUp, nDel)
-    } finally { up.unpersist(); del.unpersist() }
+  protected def connect(): MysqlWire.Client =
+    new MysqlWire.Client(host, mysqlPort, user, database, password)
+
+  protected def observe(c: MysqlWire.Client): Option[Map[String, String]] =
+    Some(observedColumns(c)).filter(_.nonEmpty)
+
+  protected def prepare(c: MysqlWire.Client, schema: StructType,
+      existing: Option[Map[String, String]]): WireWriter[MysqlWire.Client] = {
+    ensureTable(c, schema, existing.getOrElse(Map.empty))
+    val (h, hp, db, usr, pw, t, bs) =
+      (host, httpPort, database, user, password, table, batchSize)
+    val keyIdx = schema.fieldIndex(RowKey)
+    WireWriter(
+      upsert = (c, rows) => rows.grouped(bs).foreach { chunk =>
+        // delete-before-insert: the DUPLICATE KEY model has no ON
+        // CONFLICT — convergence comes from clearing the keys first
+        // (:875-888)
+        c.query(deleteSql(db, t, chunk.map(_.getString(keyIdx))))
+        streamLoad(h, hp, db, t, usr, pw, chunk.map(rowJson(_, schema)))
+      },
+      delete = (c, keys) => keys.grouped(bs).foreach { chunk =>
+        c.query(deleteSql(db, t, chunk))
+      })
   }
 
   /** Doris's ANN serving query over the MySQL wire — the reference's
@@ -232,7 +208,7 @@ final case class DorisTableTarget(host: String, mysqlPort: Int,
       s"SELECT $select, $fn(`$vectorCol`, $vecLit) as _distance\n" +
         s"FROM `$database`.`$table`\n" +
         s"ORDER BY _distance $order, `$RowKey`\nLIMIT $k"
-    val (types, res) = withMysql { c =>
+    val (types, res) = withConn { c =>
       val desc = c.query(s"DESC `$database`.`$table`").rows
         .map(r => r(0).get -> r(1).getOrElse("TEXT")).toMap
       (desc, c.query(sql))
@@ -254,7 +230,7 @@ final case class DorisTableTarget(host: String, mysqlPort: Int,
   /** Read back over the MySQL wire — driver-side, gate/serve-sized;
     * values decode by the DESC-observed column types. */
   def read(spark: SparkSession): DataFrame = {
-    val (types, res) = withMysql { c =>
+    val (types, res) = withConn { c =>
       val desc = c.query(s"DESC `$database`.`$table`").rows
         .map(r => r(0).get -> r(1).getOrElse("TEXT"))
       (desc, c.query(s"SELECT * FROM `$database`.`$table`"))

@@ -3,7 +3,6 @@ package graft.engine
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** FalkorDB property-graph target: Cypher over the RESP wire
@@ -41,7 +40,7 @@ final case class FalkorGraphTarget(host: String, port: Int, graph: String,
     pkField: String = "id",
     nodeProps: Seq[(String, DataType)] = Nil,
     edgeProps: Seq[(String, DataType)] = Nil,
-    writePartitions: Int = 4, batchSize: Int = 64) extends Target {
+    writePartitions: Int = 4, batchSize: Int = 64) extends WireTarget {
 
   import FalkorGraphTarget._
 
@@ -50,58 +49,33 @@ final case class FalkorGraphTarget(host: String, port: Int, graph: String,
   override def containerSignature: String =
     s"falkordb;$host:$port;graph=$graph;pk=$pkField"
 
-  private def withClient[T](f: RespClient => T): T = {
-    val c = new RespClient(host, port)
-    try f(c) finally c.close()
-  }
+  protected type Conn = RespClient
+  /** The graph key is created by its first write. */
+  protected type Container = Unit
 
-  def apply(spark: SparkSession, upserts: DataFrame,
-      deleteKeys: DataFrame): TargetStats = {
-    val isNode = (c: org.apache.spark.sql.Column) => c.startsWith("n:")
-    val up = upserts.cache()
-    val del = deleteKeys.select(RowKey).cache()
-    try {
-      val (nUp, nDel) = TargetStats.countPair(up, del)
-      if (nUp == 0 && nDel == 0) return TargetStats(0, 0)
+  protected def connect(): RespClient = new RespClient(host, port)
 
-      val (h, p, g, pk, bs) = (host, port, graph, pkField, batchSize)
-      val schema = up.schema
-      def send(df: DataFrame, mk: (Row, StructType) => String): Unit =
-        df.repartition(writePartitions, col(RowKey)).foreachPartition {
-          rows: Iterator[Row] =>
-            val c = new RespClient(h, p)
-            try rows.grouped(bs).foreach { batch =>
-              c.pipeline(batch.map(r => Seq(
-                "GRAPH.QUERY".getBytes(UTF_8), g.getBytes(UTF_8),
-                mk(r, schema).getBytes(UTF_8)))).foreach(_.orThrow)
-            } finally c.close()
-        }
-      def sendKeys(df: DataFrame, mk: String => String): Unit =
-        df.repartition(writePartitions, col(RowKey)).foreachPartition {
-          rows: Iterator[Row] =>
-            val c = new RespClient(h, p)
-            try rows.grouped(bs).foreach { batch =>
-              c.pipeline(batch.map(r => Seq(
-                "GRAPH.QUERY".getBytes(UTF_8), g.getBytes(UTF_8),
-                mk(r.getString(0)).getBytes(UTF_8)))).foreach(_.orThrow)
-            } finally c.close()
-        }
+  protected def observe(c: RespClient): Option[Unit] = Some(())
 
-      // the reference's v0 ordering (_target.py:448-452)
-      if (nUp > 0) {
-        send(up.filter(isNode(col(RowKey))), nodeUpsertQuery(pk))
-        send(up.filter(!isNode(col(RowKey))), edgeUpsertQuery(pk))
+  override protected def phases = WireTarget.GraphPhases
+
+  protected def prepare(c: RespClient, schema: StructType,
+      existing: Option[Unit]): WireWriter[RespClient] = {
+    val (g, pk, bs) = (graph, pkField, batchSize)
+    def query(c: RespClient, stmts: Iterator[String]): Unit =
+      stmts.grouped(bs).foreach { batch =>
+        c.pipeline(batch.map(q => Seq("GRAPH.QUERY".getBytes(UTF_8),
+          g.getBytes(UTF_8), q.getBytes(UTF_8)))).foreach(_.orThrow)
       }
-      if (nDel > 0) {
-        sendKeys(del.filter(!isNode(col(RowKey))), key =>
-          Cypher.paramsPrefix(Seq("key_0" -> stripped(key))) +
-            Cypher.relationshipDelete(None, Seq(pk)))
-        sendKeys(del.filter(isNode(col(RowKey))), key =>
-          Cypher.paramsPrefix(Seq("key_0" -> stripped(key))) +
-            Cypher.nodeDelete(None, Seq(pk)))
-      }
-      TargetStats(nUp, nDel)
-    } finally { up.unpersist(); del.unpersist() }
+    val keyIdx = schema.fieldIndex(RowKey)
+    WireWriter(
+      upsert = (c, rows) => query(c, rows.map(r =>
+        if (r.getString(keyIdx).startsWith("n:")) nodeUpsertQuery(pk)(r, schema)
+        else edgeUpsertQuery(pk)(r, schema))),
+      delete = (c, keys) => query(c, keys.map(key =>
+        Cypher.paramsPrefix(Seq("key_0" -> stripped(key))) +
+          (if (key.startsWith("n:")) Cypher.nodeDelete(None, Seq(pk))
+           else Cypher.relationshipDelete(None, Seq(pk))))))
   }
 
   /** Read back through canonical `MATCH … RETURN` queries (the
@@ -112,7 +86,7 @@ final case class FalkorGraphTarget(host: String, port: Int, graph: String,
     * regardless of the statement-side pk field name — `pkField`
     * names the Cypher property, not the reply key. */
   def read(spark: SparkSession): DataFrame = {
-    val (nodes, edges) = withClient { c =>
+    val (nodes, edges) = withConn { c =>
       def rowsOf(q: String): Vector[Map[String, String]] =
         c.commandS("GRAPH.QUERY", graph, q).orThrow.items match {
           case Vector(_, RespValue.Arr(rows)) =>
@@ -156,7 +130,7 @@ final case class FalkorGraphTarget(host: String, port: Int, graph: String,
   /** `GRAPH.DELETE` drops the whole graph key — the destructive
     * container transition (per-graph multitenancy makes this safe for
     * neighbors). */
-  override def truncate(spark: SparkSession): Unit = withClient { c =>
+  override def truncate(spark: SparkSession): Unit = withConn { c =>
     c.commandS("GRAPH.DELETE", graph) match {
       case RespValue.Err(m) if m.toLowerCase.contains("empty key") => ()
       case other => other.orThrow

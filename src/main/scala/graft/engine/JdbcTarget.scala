@@ -52,7 +52,7 @@ final case class JdbcTableTarget(url: String, table: String,
       * Doris generate their reference connectors' exact SQL through
       * the same engine machinery. */
     dialect: SqlDialect = SqlDialect.Derby)
-    extends Target {
+    extends WireTarget {
 
   import JdbcTableTarget._
 
@@ -66,14 +66,14 @@ final case class JdbcTableTarget(url: String, table: String,
     s"jdbc;url=$url;table=$table;pk=row_key"
 
   override def truncate(spark: SparkSession): Unit =
-    withConnection(url) { conn =>
+    withConn { conn =>
       execIgnoring(conn, s"DROP TABLE ${qi(table)}",
         dialect.ddlMissingStates) // no such table — already converged
     }
 
   override def execAttachmentSql(spark: SparkSession, sql: String,
       tolerateMissing: Boolean): Unit =
-    withConnection(url) { conn =>
+    withConn { conn =>
       execIgnoring(conn, sql,
         if (tolerateMissing) // teardown: object may already be gone
           dialect.ddlExistsStates ++ dialect.ddlMissingStates
@@ -119,9 +119,10 @@ final case class JdbcTableTarget(url: String, table: String,
     * deletion-only apply sees a key-only schema and must not destroy
     * payload columns (same stance as the parquet target's
     * allowMissingColumns union). */
-  private def ensureTable(conn: Connection, schema: StructType): Unit = {
+  private def ensureTable(conn: Connection, schema: StructType,
+      existing: Boolean): Unit = {
     val valueCols = schema.fields.filter(_.name != RowKey)
-    if (!exists(conn)) {
+    if (!existing) {
       val ddl = dialect.createTableSql(table, RowKey, KeyLen,
         valueCols.toSeq.map(f => f.name -> dialect.sqlType(f.dataType)))
       execIgnoring(conn, ddl, dialect.ddlExistsStates) // concurrent creator won
@@ -148,68 +149,51 @@ final case class JdbcTableTarget(url: String, table: String,
     sqlAttachments.foreach(execIgnoring(conn, _, dialect.ddlExistsStates))
   }
 
-  def apply(spark: SparkSession, upserts: DataFrame,
-      deleteKeys: DataFrame): TargetStats = {
-    val up = upserts.cache()
-    val del = deleteKeys.select(col(RowKey)).cache()
-    try {
-      val (nUp, nDel) = TargetStats.countPair(up, del)
-      if (nUp == 0 && nDel == 0) return TargetStats(0, 0)
+  protected type Conn = Connection
+  protected type Container = Unit
 
-      withConnection(url) { conn =>
-        if (nUp > 0 || exists(conn)) ensureTable(conn, up.schema)
-      }
+  protected def connect(): Connection = DriverManager.getConnection(url)
 
-      val (u, t, bs, dia) = (url, table, batchSize, dialect)
-      // see SqlDialect.concurrentWriters — stores whose engine can't
-      // take concurrent writer connections (embedded Derby) serialize
-      val parts =
-        if (dialect.concurrentWriters) writePartitions else 1
-      if (nUp > 0) {
-        val schema = up.schema
-        val valueFields = schema.fields.filter(_.name != RowKey).toSeq
-        val keyIdx = schema.fieldIndex(RowKey)
-        val merge = dia.upsertSql(t, KeyLen, valueFields.map(_.name))
-        val reps = if (dia.bindTwice) 2 else 1
-        // hash-partition BY KEY, not round-robin: every key has
-        // exactly one writer connection, so concurrent MERGEs can
-        // never race the same key into a spurious duplicate-key
-        // abort (observed as Derby 23505 under load at sf0.1), and a
-        // task retry re-sends a deterministic key set
-        up.repartition(parts, col(RowKey)).foreachPartition {
-          rows: Iterator[Row] =>
-            writeChunked(u, merge, rows, bs, dia) { (ps, row) =>
-              // the (key, values…) tuple, bound once or twice per the
-              // dialect's statement shape
-              var i = 1
-              (0 until reps).foreach { _ =>
-                ps.setString(i, row.getString(keyIdx)); i += 1
-                valueFields.foreach { f =>
-                  bind(ps, i, f.dataType, row, schema.fieldIndex(f.name))
-                  i += 1
-                }
-              }
+  // see SqlDialect.concurrentWriters — stores whose engine can't take
+  // concurrent writer connections (embedded Derby) serialize
+  override protected def writerTasks: Int =
+    if (dialect.concurrentWriters) writePartitions else 1
+
+  protected def observe(conn: Connection): Option[Unit] =
+    if (exists(conn)) Some(()) else None
+
+  protected def prepare(conn: Connection, schema: StructType,
+      existing: Option[Unit]): WireWriter[Connection] = {
+    ensureTable(conn, schema, existing.isDefined)
+    val (bs, dia) = (batchSize, dialect)
+    val valueFields = schema.fields.filter(_.name != RowKey).toSeq
+    val keyIdx = schema.fieldIndex(RowKey)
+    val merge = dia.upsertSql(table, KeyLen, valueFields.map(_.name))
+    val delSql = dia.deleteSql(table, RowKey)
+    val reps = if (dia.bindTwice) 2 else 1
+    WireWriter(
+      upsert = (conn, rows) =>
+        writeChunked(conn, merge, rows, bs, dia) { (ps, row) =>
+          // the (key, values…) tuple, bound once or twice per the
+          // dialect's statement shape
+          var i = 1
+          (0 until reps).foreach { _ =>
+            ps.setString(i, row.getString(keyIdx)); i += 1
+            valueFields.foreach { f =>
+              bind(ps, i, f.dataType, row, schema.fieldIndex(f.name))
+              i += 1
             }
-        }
-      }
-      if (nDel > 0) {
-        val delSql = dia.deleteSql(t, RowKey)
-        del.repartition(parts, col(RowKey)).foreachPartition {
-          rows: Iterator[Row] =>
-            writeChunked(u, delSql, rows, bs, dia) { (ps, row) =>
-              ps.setString(1, row.getString(0))
-            }
-        }
-      }
-      TargetStats(nUp, nDel)
-    } finally { up.unpersist(); del.unpersist() }
+          }
+        },
+      delete = (conn, keys) =>
+        writeChunked(conn, delSql, keys, bs, dia)(_.setString(1, _)))
   }
 
   /** Read back through Spark's JDBC source (single partition by
     * default — pass partitioning options at the call site for large
     * tables; correctness reads here are dimension-sized). */
   def read(spark: SparkSession): DataFrame = {
-    val present = withConnection(url)(exists)
+    val present = withConn(exists)
     if (!present)
       throw new IllegalStateException(s"jdbc target $table not yet written")
     spark.read.format("jdbc")
@@ -366,55 +350,53 @@ object JdbcTableTarget {
     f(c)
   }
 
-  /** Rows loop → fixed-size chunks → one JDBC batch per chunk, with
-    * rebind-and-retry on the dialect's lock-conflict states (Derby
+  /** Items → fixed-size chunks → one JDBC batch per chunk over `conn`,
+    * with rebind-and-retry on the dialect's lock-conflict states (Derby
     * 40001 deadlock / 40XL1 lock timeout; postgres 40001/40P01/55P03):
     * the chunk is the retry unit, so a batch that died mid-flight
-    * re-executes its upserts idempotently. */
-  private def writeChunked(url: String, sql: String, rows: Iterator[Row],
-      batchSize: Int, dialect: SqlDialect)
-      (bindRow: (PreparedStatement, Row) => Unit): Unit = {
-    if (!rows.hasNext) return
-    withConnection(url) { conn =>
-      conn.setAutoCommit(false)
-      val ps = conn.prepareStatement(sql)
-      try rows.grouped(batchSize).foreach { chunk =>
-        var attempt = 0
-        var done = false
-        while (!done) {
-          try {
-            chunk.foreach { r => bindRow(ps, r); ps.addBatch() }
-            ps.executeBatch()
-            conn.commit()
-            done = true
-          } catch {
-            // lock conflicts AND duplicate-key aborts both retry: a
-            // MERGE that lost a race to a concurrent committer finds
-            // the row WHEN MATCHED on the rerun and updates it — the
-            // convergent-upsert contract (belt-and-braces; key-hashed
-            // write partitioning already serializes same-key writes)
-            case e: SQLException
-                if (retriableState(e, dialect.retriableStates) ||
-                  retriableState(e, DuplicateKeyStates)) &&
-                  attempt < MaxRetries =>
-              conn.rollback()
-              ps.clearBatch()
-              attempt += 1
-              Thread.sleep(50L << attempt)
-          }
+    * re-executes its upserts idempotently. Every chunk commits, so the
+    * connection leaves with no open transaction. */
+  private def writeChunked[A](conn: Connection, sql: String,
+      items: Iterator[A], batchSize: Int, dialect: SqlDialect)
+      (bindItem: (PreparedStatement, A) => Unit): Unit = {
+    conn.setAutoCommit(false)
+    val ps = conn.prepareStatement(sql)
+    try items.grouped(batchSize).foreach { chunk =>
+      var attempt = 0
+      var done = false
+      while (!done) {
+        try {
+          chunk.foreach { r => bindItem(ps, r); ps.addBatch() }
+          ps.executeBatch()
+          conn.commit()
+          done = true
+        } catch {
+          // lock conflicts AND duplicate-key aborts both retry: a
+          // MERGE that lost a race to a concurrent committer finds
+          // the row WHEN MATCHED on the rerun and updates it — the
+          // convergent-upsert contract (belt-and-braces; key-hashed
+          // write partitioning already serializes same-key writes)
+          case e: SQLException
+              if (retriableState(e, dialect.retriableStates) ||
+                retriableState(e, DuplicateKeyStates)) &&
+                attempt < MaxRetries =>
+            conn.rollback()
+            ps.clearBatch()
+            attempt += 1
+            Thread.sleep(50L << attempt)
         }
-      } catch {
-        // roll back the open transaction before the connection
-        // closes: Derby refuses to close mid-transaction, and that
-        // secondary error would MASK the real failure (first seen as
-        // q81 "Cannot close a connection while a transaction is
-        // still active" hiding the actual batch exception)
-        case t: Throwable =>
-          try conn.rollback()
-          catch { case s: Throwable => t.addSuppressed(s) }
-          throw t
-      } finally ps.close()
-    }
+      }
+    } catch {
+      // roll back the open transaction before the connection
+      // closes: Derby refuses to close mid-transaction, and that
+      // secondary error would MASK the real failure (first seen as
+      // q81 "Cannot close a connection while a transaction is
+      // still active" hiding the actual batch exception)
+      case t: Throwable =>
+        try conn.rollback()
+        catch { case s: Throwable => t.addSuppressed(s) }
+        throw t
+    } finally ps.close()
   }
 
   private val MaxRetries = 5

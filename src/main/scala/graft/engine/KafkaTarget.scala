@@ -3,7 +3,6 @@ package graft.engine
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** Kafka topic target over the real wire protocol — the reference's
@@ -38,64 +37,47 @@ import org.apache.spark.sql.types._
   */
 final case class KafkaWireTopicTarget(host: String, port: Int,
     topic: String, writePartitions: Int = 2, batchSize: Int = 256)
-    extends Target {
+    extends WireTarget {
 
   import KafkaWireTopicTarget._
 
   override def containerSignature: String =
     s"kafka;$host:$port;topic=$topic"
 
-  private def numPartitions(): Int = {
-    val c = new KafkaWireClient(host, port)
-    try {
-      val meta = c.metadata(Seq(topic))
-      meta.find(_.name == topic)
-        .getOrElse(throw new IllegalStateException(s"no topic $topic"))
-        .partitions.length
-    } finally c.close()
-  }
+  protected type Conn = KafkaWireClient
+  /** The topic's partition count (the topic is user-managed: it is
+    * never created here). */
+  protected type Container = Int
 
-  def apply(spark: SparkSession, upserts: DataFrame,
-      deleteKeys: DataFrame): TargetStats = {
-    val up = upserts.cache()
-    val del = deleteKeys.select(RowKey).cache()
-    try {
-      val (nUp, nDel) = TargetStats.countPair(up, del)
-      if (nUp == 0 && nDel == 0) return TargetStats(0, 0)
+  protected def connect(): KafkaWireClient = new KafkaWireClient(host, port)
 
-      val nParts = numPartitions()
-      val (h, p, t, bs) = (host, port, topic, batchSize)
+  protected def observe(c: KafkaWireClient): Option[Int] =
+    c.metadata(Seq(topic)).find(_.name == topic).map(_.partitions.length)
 
-      def send(df: DataFrame, mk: Row => (Array[Byte], Array[Byte])): Unit =
-        df.repartition(writePartitions, col(RowKey)).foreachPartition {
-          rows: Iterator[Row] =>
-            val c = new KafkaWireClient(h, p)
-            try rows.grouped(bs).foreach { slice =>
-              val now = System.currentTimeMillis()
-              slice.map(mk).groupBy { case (k, _) =>
-                KafkaWire.partitionFor(k, nParts)
-              }.foreach { case (part, records) =>
-                c.produce(t, part, records, now)
-              }
-            } finally c.close()
-        }
+  private def noTopic = new IllegalStateException(s"no topic $topic")
 
-      if (nUp > 0) {
-        val schema = up.schema
-        val keyIdx = schema.fieldIndex(RowKey)
-        val valIdx = schema.fieldIndex(ValueCol)
-        val valBinary = schema(valIdx).dataType == BinaryType
-        send(up, r => (
-          r.getString(keyIdx).getBytes(UTF_8),
-          if (r.isNullAt(valIdx)) null
-          else if (valBinary) r.getAs[Array[Byte]](valIdx)
-          else r.getString(valIdx).getBytes(UTF_8)))
+  protected def prepare(c: KafkaWireClient, schema: StructType,
+      existing: Option[Int]): WireWriter[KafkaWireClient] = {
+    val nParts = existing.getOrElse(throw noTopic)
+    val (t, bs) = (topic, batchSize)
+    def send(c: KafkaWireClient,
+        records: Iterator[(Array[Byte], Array[Byte])]): Unit =
+      records.grouped(bs).foreach { slice =>
+        val now = System.currentTimeMillis()
+        slice.groupBy { case (k, _) => KafkaWire.partitionFor(k, nParts) }
+          .foreach { case (part, recs) => c.produce(t, part, recs, now) }
       }
-      if (nDel > 0)
-        send(del, r => (r.getString(0).getBytes(UTF_8), null)) // tombstone
-
-      TargetStats(nUp, nDel)
-    } finally { up.unpersist(); del.unpersist() }
+    val keyIdx = schema.fieldIndex(RowKey)
+    val valIdx = schema.fieldIndex(ValueCol)
+    val valBinary = schema(valIdx).dataType == BinaryType
+    WireWriter(
+      upsert = (c, rows) => send(c, rows.map(r => (
+        r.getString(keyIdx).getBytes(UTF_8),
+        if (r.isNullAt(valIdx)) null
+        else if (valBinary) r.getAs[Array[Byte]](valIdx)
+        else r.getString(valIdx).getBytes(UTF_8)))),
+      delete = (c, keys) => // tombstones
+        send(c, keys.map(k => (k.getBytes(UTF_8), null: Array[Byte]))))
   }
 
   /** The compacted view: one executor task per kafka partition
@@ -103,7 +85,7 @@ final case class KafkaWireTopicTarget(host: String, port: Int,
     * (per-partition offset order is total per key because keys are
     * partition-sticky); tombstones drop. Columns: (key, value). */
   def read(spark: SparkSession): DataFrame = {
-    val nParts = numPartitions()
+    val nParts = withConn(observe).getOrElse(throw noTopic)
     val (h, p, t) = (host, port, topic)
     val rdd = spark.sparkContext
       .parallelize(0 until nParts, nParts)
@@ -140,14 +122,12 @@ final case class KafkaWireTopicTarget(host: String, port: Int,
 
   /** The raw log of one partition (assertion helper): (offset, key,
     * value|null). */
-  def log(spark: SparkSession, partition: Int): Seq[(Long, String, Option[String])] = {
-    val c = new KafkaWireClient(host, port)
-    try {
+  def log(spark: SparkSession, partition: Int): Seq[(Long, String, Option[String])] =
+    withConn { c =>
       val (records, _) = c.fetch(topic, partition, 0L)
       records.map(r => (r.offset, new String(r.key, UTF_8),
         Option(r.value).map(new String(_, UTF_8))))
-    } finally c.close()
-  }
+    }
 }
 
 object KafkaWireTopicTarget {

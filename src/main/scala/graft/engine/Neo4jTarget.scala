@@ -1,7 +1,6 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Neo4j property-graph target over real Bolt — the reference's
@@ -39,7 +38,7 @@ final case class Neo4jBoltTarget(host: String, port: Int,
       * apply batch in ONE tx so partial writes roll back together
       * (neo4j/_target.py:487-530); chunking bounds server-side tx
       * state on huge partitions. */
-    txBatch: Int = 500) extends Target {
+    txBatch: Int = 500) extends WireTarget {
 
   import FalkorGraphTarget.{RowKey, propsOf, strCol, stripped}
 
@@ -48,93 +47,68 @@ final case class Neo4jBoltTarget(host: String, port: Int,
   override def containerSignature: String =
     s"neo4j;$host:$port;pk=$pkField"
 
-  private def withClient[T](f: BoltWire.Client => T): T = {
-    val c = new BoltWire.Client(host, port, user, password)
-    try f(c) finally c.close()
-  }
+  protected type Conn = BoltWire.Client
+  /** A neo4j database has no per-target container to create. */
+  protected type Container = Unit
 
-  def apply(spark: SparkSession, upserts: DataFrame,
-      deleteKeys: DataFrame): TargetStats = {
-    val isNode = (c: org.apache.spark.sql.Column) => c.startsWith("n:")
-    val up = upserts.cache()
-    val del = deleteKeys.select(RowKey).cache()
-    try {
-      val (nUp, nDel) = TargetStats.countPair(up, del)
-      if (nUp == 0 && nDel == 0) return TargetStats(0, 0)
+  protected def connect(): BoltWire.Client =
+    new BoltWire.Client(host, port, user, password)
 
-      val (h, p, u, pw, pk) = (host, port, user, password, pkField)
-      val tb = txBatch
-      val schema = up.schema
-      // each chunk commits as ONE explicit transaction (the
-      // reference's per-batch atomicity, neo4j/_target.py:487), and
-      // the chunk's statements are PIPELINED — one flush, one round
-      // trip for the whole batch (runPipelined), so a chunk costs 3
-      // synchronous exchanges (BEGIN + batch + COMMIT), not 2 + k.
-      // A failing statement FAILUREs, the pipelined drain RESETs the
-      // connection — which aborts the open tx server-side — and the
-      // error propagates; the rerun re-applies the whole chunk
-      // idempotently. txBatch also bounds the response backlog a
-      // pipelined batch buffers (~2 small summaries per statement),
-      // keeping it far under socket-buffer deadlock territory.
-      def inTx(rows: Iterator[(String, Map[String, Any])]): Unit =
-        if (rows.hasNext) {
-          val c = new BoltWire.Client(h, p, u, pw)
-          try rows.grouped(tb).foreach { chunk =>
-            c.begin()
-            c.runPipelined(chunk)
-            c.commit()
-          } finally c.close()
-        }
-      def send(df: DataFrame,
-          mk: (Row, StructType) => (String, Map[String, Any])): Unit =
-        df.repartition(writePartitions, col(RowKey)).foreachPartition {
-          rows: Iterator[Row] => inTx(rows.map(mk(_, schema)))
-        }
-      def sendKeys(df: DataFrame,
-          mk: String => (String, Map[String, Any])): Unit =
-        df.repartition(writePartitions, col(RowKey)).foreachPartition {
-          rows: Iterator[Row] => inTx(rows.map(r => mk(r.getString(0))))
-        }
+  protected def observe(c: BoltWire.Client): Option[Unit] = Some(())
 
-      // the reference's v0 ordering
-      if (nUp > 0) {
-        send(up.filter(isNode(col(RowKey))), (row, sch) => {
-          val label = strCol(row, sch, "label").getOrElse(
-            throw new IllegalArgumentException(
-              s"node row ${row.getString(sch.fieldIndex(RowKey))} has no label"))
-          val props = propsOf(row, sch)
-          (Cypher.nodeUpsert(label, Seq(pk), props.nonEmpty),
-            Map[String, Any]("key_0" ->
-              stripped(row.getString(sch.fieldIndex(RowKey)))) ++
-              (if (props.nonEmpty) Map("props" -> props) else Map.empty))
-        })
-        send(up.filter(!isNode(col(RowKey))), (row, sch) => {
-          val relType = strCol(row, sch, "rel_type").getOrElse(
-            throw new IllegalArgumentException(
-              s"edge row ${row.getString(sch.fieldIndex(RowKey))} has no rel_type"))
-          val props = propsOf(row, sch)
-          (Cypher.relationshipUpsert(relType,
-            strCol(row, sch, "src_label"), Seq(pk),
-            strCol(row, sch, "dst_label"), Seq(pk),
-            Seq(pk), props.nonEmpty),
-            Map[String, Any](
-              "from_key_0" -> strCol(row, sch, "src").get,
-              "to_key_0" -> strCol(row, sch, "dst").get,
-              "rel_key_0" ->
-                stripped(row.getString(sch.fieldIndex(RowKey)))) ++
-              (if (props.nonEmpty) Map("props" -> props) else Map.empty))
-        })
+  override protected def phases = WireTarget.GraphPhases
+
+  protected def prepare(c: BoltWire.Client, schema: StructType,
+      existing: Option[Unit]): WireWriter[BoltWire.Client] = {
+    val (pk, tb) = (pkField, txBatch)
+    val keyIdx = schema.fieldIndex(RowKey)
+    // each chunk commits as ONE explicit transaction (the reference's
+    // per-batch atomicity, neo4j/_target.py:487), and the chunk's
+    // statements are PIPELINED — one flush, one round trip for the
+    // whole batch (runPipelined), so a chunk costs 3 synchronous
+    // exchanges (BEGIN + batch + COMMIT), not 2 + k. A failing
+    // statement FAILUREs, the pipelined drain RESETs the connection —
+    // which aborts the open tx server-side — and the error
+    // propagates; the rerun re-applies the whole chunk idempotently.
+    // txBatch also bounds the response backlog a pipelined batch
+    // buffers (~2 small summaries per statement), keeping it far
+    // under socket-buffer deadlock territory.
+    def inTx(c: BoltWire.Client,
+        stmts: Iterator[(String, Map[String, Any])]): Unit =
+      stmts.grouped(tb).foreach { chunk =>
+        c.begin()
+        c.runPipelined(chunk)
+        c.commit()
       }
-      if (nDel > 0) {
-        sendKeys(del.filter(!isNode(col(RowKey))), key =>
-          (Cypher.relationshipDelete(None, Seq(pk)),
-            Map[String, Any]("key_0" -> stripped(key))))
-        sendKeys(del.filter(isNode(col(RowKey))), key =>
-          (Cypher.nodeDelete(None, Seq(pk)),
-            Map[String, Any]("key_0" -> stripped(key))))
+    def upsertStmt(row: Row): (String, Map[String, Any]) = {
+      val key = row.getString(keyIdx)
+      val props = propsOf(row, schema)
+      val propsParam =
+        if (props.nonEmpty) Map("props" -> props) else Map.empty[String, Any]
+      if (key.startsWith("n:")) {
+        val label = strCol(row, schema, "label").getOrElse(
+          throw new IllegalArgumentException(s"node row $key has no label"))
+        (Cypher.nodeUpsert(label, Seq(pk), props.nonEmpty),
+          Map[String, Any]("key_0" -> stripped(key)) ++ propsParam)
+      } else {
+        val relType = strCol(row, schema, "rel_type").getOrElse(
+          throw new IllegalArgumentException(s"edge row $key has no rel_type"))
+        (Cypher.relationshipUpsert(relType,
+          strCol(row, schema, "src_label"), Seq(pk),
+          strCol(row, schema, "dst_label"), Seq(pk),
+          Seq(pk), props.nonEmpty),
+          Map[String, Any](
+            "from_key_0" -> strCol(row, schema, "src").get,
+            "to_key_0" -> strCol(row, schema, "dst").get,
+            "rel_key_0" -> stripped(key)) ++ propsParam)
       }
-      TargetStats(nUp, nDel)
-    } finally { up.unpersist(); del.unpersist() }
+    }
+    WireWriter(
+      upsert = (c, rows) => inTx(c, rows.map(upsertStmt)),
+      delete = (c, keys) => inTx(c, keys.map(key =>
+        (if (key.startsWith("n:")) Cypher.nodeDelete(None, Seq(pk))
+         else Cypher.relationshipDelete(None, Seq(pk)),
+          Map[String, Any]("key_0" -> stripped(key))))))
   }
 
   /** Read back through `MATCH … RETURN` — Bolt Node / Relationship
@@ -142,7 +116,7 @@ final case class Neo4jBoltTarget(host: String, port: Int,
     * node id comes from the entity's OWN pk property (a real MERGE
     * sets it on create). Gate/assertion-sized. */
   def read(spark: SparkSession): DataFrame = {
-    val (nodeRecs, edgeRecs) = withClient { c =>
+    val (nodeRecs, edgeRecs) = withConn { c =>
       (c.run("MATCH (n) RETURN n")._2, c.run("MATCH (s)-[r]->(t) RETURN r")._2)
     }
     def retype(v: Any, dt: DataType): Any =
@@ -206,7 +180,7 @@ final case class Neo4jBoltTarget(host: String, port: Int,
   /** The destructive transition: `MATCH (n) DETACH DELETE n` (the
     * reference clears its managed graph the same statement-wise way;
     * neo4j has no per-graph DELETE key). */
-  override def truncate(spark: SparkSession): Unit = withClient { c =>
+  override def truncate(spark: SparkSession): Unit = withConn { c =>
     c.run("MATCH (n) DETACH DELETE n"); ()
   }
 }

@@ -1,7 +1,6 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** A pgvector index on the table (reference `_VectorIndexSpec` +
@@ -94,26 +93,21 @@ final case class PgTableTarget(host: String, port: Int, database: String,
       * the partition — PostgreSQL's canonical bulk-upsert recipe.
       * `false` keeps the reference-faithful chunked multi-row
       * INSERT…ON CONFLICT binds (postgres/_target.py:769-791). */
-    copyBulk: Boolean = true) extends Target {
+    copyBulk: Boolean = true) extends WireTarget {
 
   import PgTableTarget._
 
   SurrealTableTarget.validateIdentifier(table, "table name")
 
-  private def withClient[T](f: PgWire.Client => T): T = {
-    val c = new PgWire.Client(host, port, user, database)
-    try f(c) finally c.close()
-  }
-
   override def containerSignature: String =
     s"postgres;$host:$port/$database;table=$table;pk=$RowKey"
 
   override def truncate(spark: SparkSession): Unit =
-    withClient { c => c.query(s"""DROP TABLE IF EXISTS "$table""""); () }
+    withConn { c => c.query(s"""DROP TABLE IF EXISTS "$table""""); () }
 
   override def execAttachmentSql(spark: SparkSession, sql: String,
       tolerateMissing: Boolean): Unit =
-    withClient { c =>
+    withConn { c =>
       try { c.query(sql); () }
       catch {
         case e: PgWire.PgErrorException
@@ -236,116 +230,68 @@ final case class PgTableTarget(host: String, port: Int, database: String,
     }
   }
 
-  def apply(spark: SparkSession, upserts: DataFrame,
-      deleteKeys: DataFrame): TargetStats = {
-    val up = upserts.cache()
-    val del = deleteKeys.select(col(RowKey)).cache()
-    try {
-      val (nUp, nDel) = TargetStats.countPair(up, del)
-      if (nUp == 0 && nDel == 0) return TargetStats(0, 0)
+  protected type Conn = PgWire.Client
+  protected type Container = Map[String, String]
 
-      // observe ONCE; a delete-only apply against an absent table is
-      // already converged (nothing to delete) — running the DELETEs
-      // would fail on 42P01, not converge
-      val tableExists = withClient { c =>
-        val observed = observedColumns(c)
-        if (nUp > 0 || observed.nonEmpty)
-          ensureTable(c, up.schema, observed)
-        nUp > 0 || observed.nonEmpty
-      }
-      if (!tableExists) return TargetStats(0, 0)
+  protected def connect(): PgWire.Client =
+    new PgWire.Client(host, port, user, database)
 
-      val (h, p, db, usr, t) = (host, port, database, user, table)
-      if (nUp > 0) {
-        val schema = up.schema
-        val fields = schema.fields.toSeq
-        val keyIdx = schema.fieldIndex(RowKey)
-        val names = RowKey +: fields.filter(_.name != RowKey).map(_.name)
-        val valueIdx = names.drop(1).map(schema.fieldIndex)
-        val valueTypes = valueIdx.map(i => schema.fields(i).dataType)
-        val nCols = names.length
-        val chunkSize = math.max(1, BindLimit / nCols)
-        val colList = names.map(n => s""""$n"""").mkString(", ")
-        val conflict =
-          if (nCols == 1) s"""ON CONFLICT ("$RowKey") DO NOTHING"""
-          else names.drop(1).map(n => s""""$n" = EXCLUDED."$n"""")
-            .mkString(s"""ON CONFLICT ("$RowKey") DO UPDATE SET """, ", ", "")
-        // stage DDL rendered driver-side (declaredType reads vectorDims)
-        val stageDdl: String => String = { stage =>
-          ((s""""$RowKey" text NOT NULL""" +:
-            fields.filter(_.name != RowKey).map(f =>
-              s""""${f.name}" ${declaredType(f)}""")) :+
-            s"""PRIMARY KEY ("$RowKey")""")
-            .mkString(s"""CREATE TEMPORARY TABLE "$stage" (""", ", ", ")")
-        }
-        val useCopy = copyBulk
-        // hash-partition BY KEY: every key has exactly one writer
-        // connection (same stance as JdbcTableTarget)
-        up.repartition(writePartitions, col(RowKey)).foreachPartition {
-          rows: Iterator[Row] =>
-            if (rows.hasNext) {
-              val c = new PgWire.Client(h, p, usr, db)
-              try {
-                if (useCopy) {
-                  // COPY into a TEMPORARY stage, ONE upsert from it
-                  val stage = t + "__stage_" + java.util.UUID.randomUUID()
-                    .toString.replace("-", "").take(8)
-                  c.query(stageDdl(stage))
-                  try {
-                    c.copyIn(s"""COPY "$stage" ($colList) FROM STDIN""",
-                      rows.map { row =>
-                        Some(row.getString(keyIdx)) +:
-                          valueIdx.zip(valueTypes).map { case (i, dt) =>
-                            renderValue(row, i, dt)
-                          }
-                      })
-                    val selList = names.map(n => s""""$n"""").mkString(", ")
-                    PgWire.retrying() {
-                      c.query(s"""INSERT INTO "$t" ($colList) """ +
-                        s"""SELECT $selList FROM "$stage" $conflict""")
-                      ()
-                    }
-                  } finally c.query(s"""DROP TABLE IF EXISTS "$stage"""")
-                } else rows.grouped(chunkSize).foreach { chunk =>
-                  val placeholders = chunk.indices.map { r =>
-                    (0 until nCols)
-                      .map(j => s"$$${r * nCols + j + 1}")
-                      .mkString("(", ", ", ")")
-                  }.mkString(", ")
-                  val sql =
-                    s"""INSERT INTO "$t" ($colList) VALUES $placeholders $conflict"""
-                  val params = chunk.flatMap { row =>
-                    Some(row.getString(keyIdx)) +:
-                      valueIdx.zip(valueTypes).map { case (i, dt) =>
-                        renderValue(row, i, dt)
-                      }
-                  }
-                  PgWire.retrying() { c.execute(sql, params); () }
-                }
-              } finally c.close()
+  protected def observe(c: PgWire.Client): Option[Map[String, String]] =
+    Some(observedColumns(c)).filter(_.nonEmpty)
+
+  protected def prepare(c: PgWire.Client, schema: StructType,
+      existing: Option[Map[String, String]]): WireWriter[PgWire.Client] = {
+    ensureTable(c, schema, existing.getOrElse(Map.empty))
+    val t = table
+    val fields = schema.fields.toSeq
+    val keyIdx = schema.fieldIndex(RowKey)
+    val names = RowKey +: fields.filter(_.name != RowKey).map(_.name)
+    val valueIdx = names.drop(1).map(schema.fieldIndex)
+    val valueTypes = valueIdx.map(i => schema.fields(i).dataType)
+    val nCols = names.length
+    val chunkSize = math.max(1, BindLimit / nCols)
+    val colList = names.map(n => s""""$n"""").mkString(", ")
+    val conflict =
+      if (nCols == 1) s"""ON CONFLICT ("$RowKey") DO NOTHING"""
+      else names.drop(1).map(n => s""""$n" = EXCLUDED."$n"""")
+        .mkString(s"""ON CONFLICT ("$RowKey") DO UPDATE SET """, ", ", "")
+    val stageCols = ((s""""$RowKey" text NOT NULL""" +:
+      fields.filter(_.name != RowKey).map(f =>
+        s""""${f.name}" ${declaredType(f)}""")) :+
+      s"""PRIMARY KEY ("$RowKey")""").mkString(" (", ", ", ")")
+    val useCopy = copyBulk
+    def tuple(row: Row): Seq[Option[String]] =
+      Some(row.getString(keyIdx)) +:
+        valueIdx.zip(valueTypes).map { case (i, dt) => renderValue(row, i, dt) }
+    WireWriter(
+      upsert = (c, rows) =>
+        if (useCopy) {
+          // COPY into a TEMPORARY stage, ONE upsert from it
+          val stage = t + "__stage_" + java.util.UUID.randomUUID()
+            .toString.replace("-", "").take(8)
+          c.query(s"""CREATE TEMPORARY TABLE "$stage"""" + stageCols)
+          try {
+            c.copyIn(s"""COPY "$stage" ($colList) FROM STDIN""", rows.map(tuple))
+            PgWire.retrying() {
+              c.query(s"""INSERT INTO "$t" ($colList) """ +
+                s"""SELECT $colList FROM "$stage" $conflict""")
+              ()
             }
-        }
-      }
-      if (nDel > 0) {
-        val chunkSize = BindLimit
-        del.repartition(writePartitions, col(RowKey)).foreachPartition {
-          rows: Iterator[Row] =>
-            if (rows.hasNext) {
-              val c = new PgWire.Client(h, p, usr, db)
-              try rows.grouped(chunkSize).foreach { chunk =>
-                val placeholders =
-                  chunk.indices.map(i => s"$$${i + 1}").mkString(", ")
-                val sql =
-                  s"""DELETE FROM "$t" WHERE "$RowKey" IN ($placeholders)"""
-                PgWire.retrying() {
-                  c.execute(sql, chunk.map(r => Some(r.getString(0)))); ()
-                }
-              } finally c.close()
-            }
-        }
-      }
-      TargetStats(nUp, nDel)
-    } finally { up.unpersist(); del.unpersist() }
+          } finally c.query(s"""DROP TABLE IF EXISTS "$stage"""")
+        } else rows.grouped(chunkSize).foreach { chunk =>
+          val placeholders = chunk.indices.map { r =>
+            (0 until nCols).map(j => s"$$${r * nCols + j + 1}")
+              .mkString("(", ", ", ")")
+          }.mkString(", ")
+          val sql =
+            s"""INSERT INTO "$t" ($colList) VALUES $placeholders $conflict"""
+          PgWire.retrying() { c.execute(sql, chunk.flatMap(tuple)); () }
+        },
+      delete = (c, keys) => keys.grouped(BindLimit).foreach { chunk =>
+        val placeholders = chunk.indices.map(i => s"$$${i + 1}").mkString(", ")
+        val sql = s"""DELETE FROM "$t" WHERE "$RowKey" IN ($placeholders)"""
+        PgWire.retrying() { c.execute(sql, chunk.map(Some(_))); () }
+      })
   }
 
   /** The reference's flagship retrieval statement served over the
@@ -361,7 +307,7 @@ final case class PgTableTarget(host: String, port: Int, database: String,
       SurrealTableTarget.validateIdentifier(_, "column name"))
     SurrealTableTarget.validateIdentifier(vectorCol, "column name")
     val cols = selectCols.map(c => s""""$c"""").mkString(", ")
-    val res = withClient(_.execute(
+    val res = withConn(_.execute(
       s"""SELECT $cols, "$vectorCol" <=> $$1 AS distance FROM "$table"""" +
         s""" ORDER BY distance ASC, "$RowKey" LIMIT $$2""",
       Seq(Some(queryVec.mkString("[", ",", "]")), Some(k.toString))))
@@ -379,7 +325,7 @@ final case class PgTableTarget(host: String, port: Int, database: String,
     * OID — driver-side, gate/serve-sized (large scans belong to
     * [[PgWireTableSource]], which partitions by key range). */
   def read(spark: SparkSession): DataFrame = {
-    val (cols, rows) = withClient { c =>
+    val (cols, rows) = withConn { c =>
       val res = c.query(s"""SELECT * FROM "$table"""").head
       (res.columns, res.rows)
     }

@@ -1,7 +1,6 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.JsonDSL._
@@ -53,7 +52,7 @@ final case class QdrantCollectionTarget(baseUrl: String, collection: String,
     vectors: Seq[QdrantVectorDef],
     sparseVectors: Seq[QdrantSparseVectorDef] = Nil,
     payloadCols: Seq[(String, DataType)] = Nil,
-    writePartitions: Int = 4, batchSize: Int = 128) extends Target {
+    writePartitions: Int = 4, batchSize: Int = 128) extends WireTarget {
 
   import QdrantCollectionTarget._
 
@@ -71,12 +70,44 @@ final case class QdrantCollectionTarget(baseUrl: String, collection: String,
       vectors.map(v => s"${v.name}:${v.size}:${v.distance}").mkString(",") +
       s";sparse=${sparseVectors.map(_.name).mkString(",")}"
 
-  private def ensureCollection(): Unit = {
-    val exists = HttpJson.retrying()(
-      (HttpJson.get(s"$cUrl/exists").body \ "result" \ "exists")
-        .extractOpt[Boolean](DefaultFormats, manifest[Boolean])
-        .getOrElse(false))
-    if (exists) return
+  /** Stateless HTTP. */
+  protected type Conn = Unit
+  protected type Container = Unit
+
+  protected def connect(): Unit = ()
+
+  protected def observe(c: Unit): Option[Unit] =
+    if (HttpJson.retrying()(
+        (HttpJson.get(s"$cUrl/exists").body \ "result" \ "exists")
+          .extractOpt[Boolean](DefaultFormats, manifest[Boolean])
+          .getOrElse(false))) Some(())
+    else None
+
+  protected def prepare(c: Unit, schema: StructType,
+      existing: Option[Unit]): WireWriter[Unit] = {
+    if (existing.isEmpty) createCollection()
+    val (base, coll, bs) = (baseUrl, collection, batchSize)
+    val (vecDefs, sparseDefs) = (vectors, sparseVectors)
+    WireWriter(
+      upsert = (_, rows) => rows.grouped(bs).foreach { batch =>
+        HttpJson.sendBatched(batch) { items =>
+          val points = JArray(items.toList.map(r =>
+            pointJson(r, schema, vecDefs, sparseDefs)))
+          HttpJson.put(s"$base/collections/$coll/points?wait=true",
+            "points" -> points)
+          ()
+        }
+      },
+      delete = (_, keys) => keys.grouped(bs).foreach { batch =>
+        HttpJson.sendBatched(batch) { items =>
+          HttpJson.post(s"$base/collections/$coll/points/delete?wait=true",
+            "points" -> JArray(items.toList.map(pointId)))
+          ()
+        }
+      })
+  }
+
+  private def createCollection(): Unit = {
     val dense: JValue = vectors match {
       case Seq(QdrantVectorDef("", size, dist)) =>
         ("size" -> size) ~ ("distance" -> dist)
@@ -94,51 +125,6 @@ final case class QdrantCollectionTarget(baseUrl: String, collection: String,
     try HttpJson.retrying()(HttpJson.put(cUrl, body))
     catch { case Batching.ApiStatusException(409, _) => () } // racer won
     ()
-  }
-
-  def apply(spark: SparkSession, upserts: DataFrame,
-      deleteKeys: DataFrame): TargetStats = {
-    val up = upserts.cache()
-    val del = deleteKeys.select(RowKey).cache()
-    try {
-      val (nUp, nDel) = TargetStats.countPair(up, del)
-      if (nUp == 0 && nDel == 0) return TargetStats(0, 0)
-
-      ensureCollection()
-
-      val (base, coll, bs) = (baseUrl, collection, batchSize)
-      val vecDefs = vectors
-      val sparseDefs = sparseVectors
-      if (nUp > 0) {
-        val schema = up.schema
-        up.repartition(writePartitions, col(RowKey)).foreachPartition {
-          rows: Iterator[Row] =>
-            rows.grouped(bs).foreach { batch =>
-              HttpJson.sendBatched(batch) { items =>
-                val points = JArray(items.toList.map(r =>
-                  pointJson(r, schema, vecDefs, sparseDefs)))
-                HttpJson.put(s"$base/collections/$coll/points?wait=true",
-                  "points" -> points)
-                ()
-              }
-            }
-        }
-      }
-      if (nDel > 0) {
-        del.repartition(writePartitions, col(RowKey)).foreachPartition {
-          rows: Iterator[Row] =>
-            rows.grouped(bs).foreach { batch =>
-              HttpJson.sendBatched(batch) { items =>
-                HttpJson.post(s"$base/collections/$coll/points/delete?wait=true",
-                  "points" -> JArray(items.toList.map(r =>
-                    pointId(r.getString(0)))))
-                ()
-              }
-            }
-        }
-      }
-      TargetStats(nUp, nDel)
-    } finally { up.unpersist(); del.unpersist() }
   }
 
   /** Read back via the scroll API (driver-paged, `with_payload` +

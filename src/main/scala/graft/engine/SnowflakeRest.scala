@@ -149,7 +149,7 @@ final case class SnowflakeTableTarget(baseUrl: String, account: String,
       * trips are O(rows / bulkBatch), not O(rows). `<= 0` falls back
       * to the reference-faithful per-row MERGE
       * (snowflake/_target.py:407-415). */
-    bulkBatch: Int = 500) extends Target {
+    bulkBatch: Int = 500) extends WireTarget {
 
   import SnowflakeRest._
   import SnowflakeTableTarget._
@@ -160,13 +160,11 @@ final case class SnowflakeTableTarget(baseUrl: String, account: String,
 
   private def qname = s""""$database"."$schemaName"."$table""""
 
-  private def client() = new Client(baseUrl, account, user, password)
-
   override def containerSignature: String =
     s"snowflake;$baseUrl;$database.$schemaName.$table;pk=$RowKey"
 
   override def truncate(spark: SparkSession): Unit = {
-    client().execute(s"DROP TABLE IF EXISTS $qname"); ()
+    withConn(_.execute(s"DROP TABLE IF EXISTS $qname")); ()
   }
 
   private def observedColumns(c: Client): Map[String, String] =
@@ -205,73 +203,48 @@ final case class SnowflakeTableTarget(baseUrl: String, account: String,
     }
   }
 
-  def apply(spark: SparkSession, upserts: DataFrame,
-      deleteKeys: DataFrame): TargetStats = {
-    val up = upserts.cache()
-    val del = deleteKeys.select(col(RowKey)).cache()
-    try {
-      val (nUp, nDel) = TargetStats.countPair(up, del)
-      if (nUp == 0 && nDel == 0) return TargetStats(0, 0)
+  protected type Conn = Client
+  protected type Container = Map[String, String]
 
-      // observe ONCE; a delete-only apply against an absent table is
-      // already converged — running the DELETEs would fail on 42S02
-      val c0 = client()
-      val observed = observedColumns(c0)
-      if (nUp > 0 || observed.nonEmpty) ensureTable(c0, up.schema, observed)
-      else return TargetStats(0, 0)
+  protected def connect(): Client = new Client(baseUrl, account, user, password)
 
-      val (url, acct, usr, pw, qn) = (baseUrl, account, user, password, qname)
-      if (nUp > 0) {
-        val schema = up.schema
-        val bb = bulkBatch
-        val (db, sch, tbl) = (database, schemaName, table)
-        up.repartition(writePartitions, col(RowKey)).foreachPartition {
-          rows: Iterator[Row] =>
-            if (rows.hasNext) {
-              val c = new Client(url, acct, usr, pw)
-              if (bb > 0) {
-                // staged bulk: TEMPORARY stage → chunked multi-row
-                // INSERT → one MERGE-from-stage → drop. The suffix
-                // keeps concurrent partitions' stages disjoint (real
-                // TEMPORARY tables are session-scoped anyway).
-                val sfx = java.util.UUID.randomUUID().toString
-                  .replace("-", "").take(8)
-                val stage = s""""$db"."$sch"."${tbl}__stage_$sfx""""
-                c.execute(createStageSql(stage, schema))
-                try {
-                  rows.grouped(bb).foreach { chunk =>
-                    c.execute(insertStageSql(stage, chunk, schema)); ()
-                  }
-                  c.execute(mergeFromStageSql(qn, stage, schema)); ()
-                } finally c.execute(s"DROP TABLE IF EXISTS $stage")
-              } else rows.foreach { row =>
-                c.execute(mergeSql(qn, row, schema)); ()
-              }
+  protected def observe(c: Client): Option[Map[String, String]] =
+    Some(observedColumns(c)).filter(_.nonEmpty)
+
+  protected def prepare(c: Client, schema: StructType,
+      existing: Option[Map[String, String]]): WireWriter[Client] = {
+    ensureTable(c, schema, existing.getOrElse(Map.empty))
+    val (qn, bb, bs) = (qname, bulkBatch, deleteBatch)
+    val (db, sch, tbl) = (database, schemaName, table)
+    WireWriter(
+      upsert = (c, rows) =>
+        if (bb > 0) {
+          // staged bulk: TEMPORARY stage → chunked multi-row INSERT →
+          // one MERGE-from-stage → drop. The suffix keeps concurrent
+          // partitions' stages disjoint (real TEMPORARY tables are
+          // session-scoped anyway).
+          val sfx = java.util.UUID.randomUUID().toString
+            .replace("-", "").take(8)
+          val stage = s""""$db"."$sch"."${tbl}__stage_$sfx""""
+          c.execute(createStageSql(stage, schema))
+          try {
+            rows.grouped(bb).foreach { chunk =>
+              c.execute(insertStageSql(stage, chunk, schema)); ()
             }
-        }
-      }
-      if (nDel > 0) {
-        val bs = deleteBatch
-        del.repartition(writePartitions, col(RowKey)).foreachPartition {
-          rows: Iterator[Row] =>
-            if (rows.hasNext) {
-              val c = new Client(url, acct, usr, pw)
-              rows.grouped(bs).foreach { chunk =>
-                c.execute(s"""DELETE FROM $qn WHERE "$RowKey" IN (""" +
-                  chunk.map(r => lit(r.getString(0))).mkString(", ") + ")")
-                ()
-              }
-            }
-        }
-      }
-      TargetStats(nUp, nDel)
-    } finally { up.unpersist(); del.unpersist() }
+            c.execute(mergeFromStageSql(qn, stage, schema)); ()
+          } finally c.execute(s"DROP TABLE IF EXISTS $stage")
+        } else rows.foreach { row => c.execute(mergeSql(qn, row, schema)); () },
+      delete = (c, keys) => keys.grouped(bs).foreach { chunk =>
+        c.execute(s"""DELETE FROM $qn WHERE "$RowKey" IN (""" +
+          chunk.map(lit).mkString(", ") + ")")
+        ()
+      })
   }
 
   /** Read back: `SELECT * FROM t`, decoded by the result rowtype —
     * driver-side, gate/serve-sized. */
   def read(spark: SparkSession): DataFrame = {
-    val res = client().execute(s"SELECT * FROM $qname")
+    val res = withConn(_.execute(s"SELECT * FROM $qname"))
     val schema = StructType(res.rowtype.map(c =>
       StructField(c.name, sparkTypeOf(c.colType, c.scale), nullable = true)))
     val data = res.rowset.map { r =>

@@ -52,7 +52,7 @@ final case class SurrealTableTarget(baseUrl: String, namespace: String,
     database: String, table: String, relTable: String = "",
     vectorIndexes: Seq[SurrealVectorIndex] = Nil,
     readCols: Seq[(String, DataType)] = Nil,
-    writePartitions: Int = 4, batchSize: Int = 256) extends Target {
+    writePartitions: Int = 4, batchSize: Int = 256) extends WireTarget {
 
   import SurrealTableTarget._
 
@@ -95,58 +95,51 @@ final case class SurrealTableTarget(baseUrl: String, namespace: String,
     if (vectorIndexes.nonEmpty)
       postSql(vectorIndexes.map(defineIndexSurql(table, _)).mkString)
 
-  def apply(spark: SparkSession, upserts: DataFrame,
+  /** A relation row (`e:…`) with no relation table declared must fail
+    * loudly before any write, not silently skip; then the shared wire
+    * apply. */
+  override def apply(spark: SparkSession, upserts: DataFrame,
       deleteKeys: DataFrame): TargetStats = {
-    val isNode = (c: org.apache.spark.sql.Column) => c.startsWith("n:")
-    val up = upserts.cache()
-    val del = deleteKeys.select(RowKey).cache()
-    try {
-      val (nUp, nDel) = TargetStats.countPair(up, del)
-      if (nUp == 0 && nDel == 0) return TargetStats(0, 0)
+    if (relTable.isEmpty) {
+      val isRel = !col(RowKey).startsWith("n:")
+      val nRel = upserts.filter(isRel).count()
+      require(nRel == 0,
+        s"$nRel relation rows (e:…) but no relTable declared on $table")
+      require(deleteKeys.filter(isRel).isEmpty,
+        s"relation delete keys (e:…) but no relTable declared on $table")
+    }
+    super.apply(spark, upserts, deleteKeys)
+  }
 
-      ensureIndexes()
+  /** Stateless HTTP: every request carries its own scope headers. */
+  protected type Conn = Unit
+  /** Tables are schemaless and created by their first write. */
+  protected type Container = Unit
 
-      val (t, rel, bs) = (table, relTable, batchSize)
-      val schema = up.schema
-      val me = this
-      def sendBatches(df: DataFrame, mk: Row => String): Unit =
-        df.repartition(writePartitions, col(RowKey)).foreachPartition {
-          rows: Iterator[Row] =>
-            rows.grouped(bs).foreach { batch =>
-              me.postSql(
-                "BEGIN TRANSACTION;\n" + batch.map(mk).mkString +
-                  "COMMIT TRANSACTION;\n")
-              ()
-            }
-        }
+  protected def connect(): Unit = ()
 
-      // v0 ordering (:471-487)
-      if (nUp > 0) {
-        if (rel.isEmpty) {
-          // a relation row with no relation table declared must fail
-          // loudly, not silently skip the write
-          val nRel = up.filter(!isNode(col(RowKey))).count()
-          require(nRel == 0,
-            s"$nRel relation rows (e:…) but no relTable declared on $table")
-        }
-        sendBatches(up.filter(isNode(col(RowKey))), r =>
-          upsertSurql(t, r, schema))
-        if (rel.nonEmpty)
-          sendBatches(up.filter(!isNode(col(RowKey))), r =>
-            relateSurql(rel, t, r, schema))
+  protected def observe(c: Unit): Option[Unit] = Some(())
+
+  override protected def phases = WireTarget.GraphPhases
+
+  protected def prepare(c: Unit, schema: StructType,
+      existing: Option[Unit]): WireWriter[Unit] = {
+    ensureIndexes()
+    val (t, rel, bs) = (table, relTable, batchSize)
+    val keyIdx = schema.fieldIndex(RowKey)
+    def send(stmts: Iterator[String]): Unit =
+      stmts.grouped(bs).foreach { batch =>
+        postSql("BEGIN TRANSACTION;\n" + batch.mkString +
+          "COMMIT TRANSACTION;\n")
+        ()
       }
-      if (nDel > 0) {
-        if (rel.isEmpty)
-          require(del.filter(!isNode(col(RowKey))).isEmpty,
-            s"relation delete keys (e:…) but no relTable declared on $table")
-        if (rel.nonEmpty)
-          sendBatches(del.filter(!isNode(col(RowKey))), r =>
-            s"DELETE $rel:${recordId(r.getString(0).drop(2))};\n")
-        sendBatches(del.filter(isNode(col(RowKey))), r =>
-          s"DELETE $t:${recordId(r.getString(0).drop(2))};\n")
-      }
-      TargetStats(nUp, nDel)
-    } finally { up.unpersist(); del.unpersist() }
+    WireWriter(
+      upsert = (_, rows) => send(rows.map(r =>
+        if (r.getString(keyIdx).startsWith("n:")) upsertSurql(t, r, schema)
+        else relateSurql(rel, t, r, schema))),
+      delete = (_, keys) => send(keys.map(key =>
+        s"DELETE ${if (key.startsWith("n:")) t else rel}:" +
+          s"${recordId(key.drop(2))};\n")))
   }
 
   /** Read back: `SELECT * FROM table` (+ relation table), driver-side

@@ -1,31 +1,13 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-/** Row counts actually written/removed by one target apply. */
+/** What one target apply did: upsert rows written and delete keys
+  * issued. Wire targets measure both DURING their single write pass
+  * (accumulators — see [[WireTarget]]); nothing recounts the delta. */
 final case class TargetStats(upserted: Long, deleted: Long)
-
-object TargetStats {
-  import org.apache.spark.sql.DataFrame
-  import org.apache.spark.sql.functions.{count, lit}
-
-  /** (|up|, |del|) in ONE Spark job instead of two standalone
-    * `count()`s (r19, guide §1.2 step 1 — per-apply fixed overhead):
-    * every wire target's apply pays this pair before writing, several
-    * times per gate, and each standalone count is a whole job of
-    * scheduler floor. Both frames are cached by the callers, so the
-    * single union job materializes both caches for the writes that
-    * follow. */
-  def countPair(up: DataFrame, del: DataFrame): (Long, Long) = {
-    val m = up.agg(count(lit(1)).as("n"))
-      .select(lit("u").as("side"), org.apache.spark.sql.functions.col("n"))
-      .unionAll(del.agg(count(lit(1)).as("n"))
-        .select(lit("d").as("side"), org.apache.spark.sql.functions.col("n")))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    (m("u"), m("d"))
-  }
-}
 
 /** A named SQL command attached to a table target — the reference's
   * `declare_sql_command_attachment`
@@ -56,6 +38,17 @@ final case class TargetAttachment(name: String, setupSql: String,
   * keys to delete. Appliers MUST be idempotent keyed merges —
   * re-applying the same delta after a crash must converge (reference
   * "no rollback, convergent roll-forward").
+  *
+  * The wire-protocol stores (Postgres, JDBC, Doris, Snowflake,
+  * BigQuery, Valkey, Qdrant, Turbopuffer, Kafka, Neo4j, FalkorDB,
+  * SurrealDB) share ONE apply, [[WireTarget]]. The skeleton owns the
+  * plan: observe the container once, peek `upserts.isEmpty` only while
+  * it is absent, ensure it, then ONE key-partitioned writer pass per
+  * phase whose counts come back through accumulators — no caching, no
+  * recount, no second pass. A store supplies only how to connect
+  * (`connect`), how to observe and create/reconcile its container
+  * (`observe`, `prepare`), and how one writer task sends a partition's
+  * upsert rows and delete keys ([[WireWriter]]).
   */
 trait Target {
   /** Apply the delta. `upserts` carries `row_key` + payload columns;
@@ -96,6 +89,134 @@ trait Target {
       tolerateMissing: Boolean = false): Unit =
     throw new UnsupportedOperationException(
       s"${getClass.getSimpleName} does not execute attachment SQL")
+}
+
+/** What one writer task does with its partition, over the connection
+  * the [[WireTarget]] skeleton opened for it: `upsert` receives the
+  * partition's upsert rows (laid out as the apply's upsert schema; a
+  * trailing tag column follows and is never read), then `delete` its
+  * delete keys. Built on the driver once the container is ensured, so
+  * statement text is rendered once per apply. */
+final case class WireWriter[C](
+    upsert: (C, Iterator[Row]) => Unit,
+    delete: (C, Iterator[String]) => Unit)
+
+/** The one apply every wire-protocol target shares (the contract is on
+  * [[Target]]). In order:
+  *
+  *  1. observe the container in one round trip. If it exists, its DDL
+  *     is reconciled from `upserts.schema` alone. If it is absent,
+  *     deletes are vacuous, and one bounded `upserts.isEmpty` peek
+  *     chooses between a converged no-op and creating it — the
+  *     skeleton's only pre-write job, paid only while the container
+  *     does not exist;
+  *  2. write once: the delete keys are tagged and unioned with the
+  *     upserts, hash-partitioned by `row_key` to [[writerTasks]] (every
+  *     key has exactly one writer connection), and sorted so each
+  *     partition's upserts precede its deletes — streaming writers
+  *     (COPY, warehouse stages) never buffer a side. One pass; each
+  *     non-empty partition opens one connection. Row keys are disjoint
+  *     between the two sides of one apply, so their order inside a
+  *     partition cannot change the result;
+  *  3. count while writing: two accumulators tally the rows the writers
+  *     consumed (exactly-once under task retry, as accumulator updates
+  *     inside actions are), so the returned stats are measured, not
+  *     recounted.
+  *
+  * Stores whose writes must land in ordered phases (the graph stores)
+  * declare [[phases]]; each phase is one such pass.
+  */
+trait WireTarget extends Target {
+  import WireTarget._
+
+  /** A session with the store: a wire client, or `Unit` for stateless
+    * HTTP stores. Closed after use when it is `AutoCloseable`. */
+  protected type Conn
+  /** What observing an EXISTING container learns (e.g. its columns). */
+  protected type Container
+
+  def writePartitions: Int
+  /** Writer tasks per pass. */
+  protected def writerTasks: Int = writePartitions
+
+  protected def connect(): Conn
+
+  /** One round trip: `None` when the container does not exist. */
+  protected def observe(c: Conn): Option[Container]
+
+  /** Create the container (`existing = None`) or reconcile it toward
+    * `schema`, then return this apply's writer. */
+  protected def prepare(c: Conn, schema: StructType,
+      existing: Option[Container]): WireWriter[Conn]
+
+  /** Ordered write phases as (upsert filter, delete-key filter) pairs,
+    * one pass each. Default: a single pass over everything. */
+  protected def phases: Seq[(Column, Column)] = OnePhase
+
+  protected final def withConn[T](f: Conn => T): T = {
+    val c = connect()
+    try f(c) finally c match {
+      case a: AutoCloseable => a.close()
+      case _ => ()
+    }
+  }
+
+  def apply(spark: SparkSession, upserts: DataFrame,
+      deleteKeys: DataFrame): TargetStats = {
+    val writer = withConn { c =>
+      val existing = observe(c)
+      if (existing.isEmpty && upserts.isEmpty) None
+      else Some(prepare(c, upserts.schema, existing))
+    }
+    writer.fold(TargetStats(0, 0)) { w =>
+      val keys = deleteKeys.select(col(RowKey))
+      phases.map { case (u, d) =>
+        pass(spark, w, upserts.filter(u), keys.filter(d))
+      }.reduce((a, b) =>
+        TargetStats(a.upserted + b.upserted, a.deleted + b.deleted))
+    }
+  }
+
+  private def pass(spark: SparkSession, w: WireWriter[Conn],
+      upserts: DataFrame, keys: DataFrame): TargetStats = {
+    val keyIdx = upserts.schema.fieldIndex(RowKey)
+    val tagIdx = upserts.schema.length
+    val tagged = upserts.withColumn(DeleteTag, lit(false))
+      .unionByName(keys.withColumn(DeleteTag, lit(true)),
+        allowMissingColumns = true)
+      .repartition(writerTasks, col(RowKey))
+      .sortWithinPartitions(DeleteTag)
+    val nUp = spark.sparkContext.longAccumulator("graft.wire.upserts")
+    val nDel = spark.sparkContext.longAccumulator("graft.wire.deletes")
+    tagged.foreachPartition { rows: Iterator[Row] =>
+      if (rows.hasNext) {
+        val (ups, dels) = rows.span(!_.getBoolean(tagIdx))
+        withConn { c =>
+          if (ups.hasNext) w.upsert(c, ups.map { r => nUp.add(1L); r })
+          if (dels.hasNext)
+            w.delete(c, dels.map { r => nDel.add(1L); r.getString(keyIdx) })
+        }
+      }
+    }
+    TargetStats(nUp.sum, nDel.sum)
+  }
+}
+
+object WireTarget {
+  private val RowKey = "row_key"
+  private val DeleteTag = "__graft_delete"
+
+  private val OnePhase = Seq(lit(true) -> lit(true))
+
+  private def isNode = col(RowKey).startsWith("n:")
+
+  /** The reference's graph apply order (`n:` keys are nodes, the rest
+    * relationships): node upserts → relationship upserts →
+    * relationship deletes → node deletes, so no write transiently
+    * orphans an endpoint. */
+  val GraphPhases: Seq[(Column, Column)] = Seq(
+    isNode -> lit(false), !isNode -> lit(false),
+    lit(false) -> !isNode, lit(false) -> isNode)
 }
 
 /** Keyed parquet table with hash-bucketed copy-on-write — the MERGE

@@ -1,7 +1,6 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.JsonDSL._
@@ -47,7 +46,7 @@ final case class TurbopufferNamespaceTarget(baseUrl: String,
     namespace: String, vectors: Seq[TpufVectorDef],
     distanceMetric: String = "cosine_distance",
     attrCols: Seq[(String, DataType)] = Nil,
-    writePartitions: Int = 4, batchSize: Int = 256) extends Target {
+    writePartitions: Int = 4, batchSize: Int = 256) extends WireTarget {
 
   import TurbopufferNamespaceTarget._
 
@@ -68,48 +67,31 @@ final case class TurbopufferNamespaceTarget(baseUrl: String,
       o ~ (fieldName(v) -> (("type" -> s"[${v.dim}]f32") ~ ("ann" -> true)))
     }
 
-  def apply(spark: SparkSession, upserts: DataFrame,
-      deleteKeys: DataFrame): TargetStats = {
-    val up = upserts.cache()
-    val del = deleteKeys.select(RowKey).cache()
-    try {
-      val (nUp, nDel) = TargetStats.countPair(up, del)
-      if (nUp == 0 && nDel == 0) return TargetStats(0, 0)
+  /** Stateless HTTP. */
+  protected type Conn = Unit
+  /** Namespaces are created implicitly by their first write. */
+  protected type Container = Unit
 
-      val (url, dist, bs) = (nsUrl, distanceMetric, batchSize)
-      val schemaJson = writeSchema
-      val vecDefs = vectors
-      if (nUp > 0) {
-        val schema = up.schema
-        up.repartition(writePartitions, col(RowKey)).foreachPartition {
-          rows: Iterator[Row] =>
-            rows.grouped(bs).foreach { batch =>
-              HttpJson.sendBatched(batch) { items =>
-                HttpJson.post(url,
-                  ("distance_metric" -> dist) ~ ("schema" -> schemaJson) ~
-                    ("upsert_rows" -> JArray(items.toList.map(r =>
-                      rowJson(r, schema, vecDefs)))))
-                ()
-              }
-            }
+  protected def connect(): Unit = ()
+
+  protected def observe(c: Unit): Option[Unit] = Some(())
+
+  protected def prepare(c: Unit, schema: StructType,
+      existing: Option[Unit]): WireWriter[Unit] = {
+    val (url, dist, bs, vecDefs) = (nsUrl, distanceMetric, batchSize, vectors)
+    val schemaJson = writeSchema
+    def write[A](items: Iterator[A], field: String)(json: A => JValue): Unit =
+      items.grouped(bs).foreach { batch =>
+        HttpJson.sendBatched(batch) { page =>
+          HttpJson.post(url, ("distance_metric" -> dist) ~
+            ("schema" -> schemaJson) ~ (field -> JArray(page.toList.map(json))))
+          ()
         }
       }
-      if (nDel > 0) {
-        del.repartition(writePartitions, col(RowKey)).foreachPartition {
-          rows: Iterator[Row] =>
-            rows.grouped(bs).foreach { batch =>
-              HttpJson.sendBatched(batch) { items =>
-                HttpJson.post(url,
-                  ("distance_metric" -> dist) ~ ("schema" -> schemaJson) ~
-                    ("deletes" -> JArray(items.toList.map(r =>
-                      JString(r.getString(0))))))
-                ()
-              }
-            }
-        }
-      }
-      TargetStats(nUp, nDel)
-    } finally { up.unpersist(); del.unpersist() }
+    WireWriter(
+      upsert = (_, rows) =>
+        write(rows, "upsert_rows")(rowJson(_, schema, vecDefs)),
+      delete = (_, keys) => write(keys, "deletes")(JString(_)))
   }
 
   /** Driver-paged keyset scan: `rank_by ["id","asc"]`, `filters

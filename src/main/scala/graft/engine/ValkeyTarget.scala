@@ -5,7 +5,6 @@ import java.nio.ByteOrder.LITTLE_ENDIAN
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** An indexed field in a Valkey search index (reference `FieldDef`,
@@ -46,7 +45,7 @@ final case class ValkeyIndexTarget(host: String, port: Int,
     indexName: String,
     vectorDim: Int = 0, algorithm: String = "FLAT",
     distance: String = "COSINE", fields: Seq[ValkeyField] = Nil,
-    writePartitions: Int = 4, batchSize: Int = 64) extends Target {
+    writePartitions: Int = 4, batchSize: Int = 64) extends WireTarget {
 
   import ValkeyIndexTarget._
 
@@ -66,14 +65,58 @@ final case class ValkeyIndexTarget(host: String, port: Int,
       s";fields=${fields.map(f =>
         s"${f.name}:${f.ftype}${if (f.sortable) ":s" else ""}").mkString(",")}"
 
-  private def withClient[T](f: RespClient => T): T = {
-    val c = new RespClient(host, port)
-    try f(c) finally c.close()
+  protected type Conn = RespClient
+  protected type Container = Unit
+
+  protected def connect(): RespClient = new RespClient(host, port)
+
+  protected def observe(c: RespClient): Option[Unit] =
+    if (c.commandS("FT._LIST").items.exists(_.text == indexName)) Some(())
+    else None
+
+  protected def prepare(c: RespClient, schema: StructType,
+      existing: Option[Unit]): WireWriter[RespClient] = {
+    if (existing.isEmpty) createIndex(c)
+    val (pfx, bs, dim) = (prefix, batchSize, vectorDim)
+    val keyIdx = schema.fieldIndex(RowKey)
+    val valueFields = schema.fields.zipWithIndex
+      .filter(_._1.name != RowKey).toSeq
+    WireWriter(
+      upsert = (c, rows) => rows.grouped(bs).foreach { batch =>
+        val cmds = batch.flatMap { row =>
+          val key = (pfx + row.getString(keyIdx)).getBytes(UTF_8)
+          val hset = Seq.newBuilder[Array[Byte]]
+          hset += "HSET".getBytes(UTF_8) += key
+          var nFields = 0
+          valueFields.foreach { case (f, i) =>
+            if (!row.isNullAt(i)) {
+              hset += f.name.getBytes(UTF_8)
+              hset += fieldBytes(f.name, f.dataType, row, i, dim)
+              nFields += 1
+            }
+          }
+          // an empty hash does not exist in the store, and HSET with
+          // no pairs is an arity error — an all-null row cannot be
+          // represented; fail loudly, never silently vanish from
+          // read-back
+          require(nFields > 0,
+            s"valkey document ${row.getString(keyIdx)} has no " +
+              "non-null fields — an empty hash cannot exist")
+          Seq(
+            Seq("MULTI".getBytes(UTF_8)),
+            Seq("DEL".getBytes(UTF_8), key),
+            hset.result(),
+            Seq("EXEC".getBytes(UTF_8)))
+        }
+        c.pipeline(cmds).foreach(_.orThrow)
+      },
+      delete = (c, keys) => keys.grouped(bs).foreach { batch =>
+        c.command("DEL".getBytes(UTF_8) +:
+          batch.map(k => (pfx + k).getBytes(UTF_8))).orThrow
+      })
   }
 
-  private def ensureIndex(c: RespClient): Unit = {
-    val present = c.commandS("FT._LIST").items.exists(_.text == indexName)
-    if (present) return
+  private def createIndex(c: RespClient): Unit = {
     val base = Seq("FT.CREATE", indexName, "ON", "HASH",
       "PREFIX", "1", prefix, "SCHEMA")
     val vec =
@@ -89,70 +132,6 @@ final case class ValkeyIndexTarget(host: String, port: Int,
       case RespValue.Err(m) if m.contains("already exists") => () // racer won
       case other => other.orThrow
     }
-  }
-
-  def apply(spark: SparkSession, upserts: DataFrame,
-      deleteKeys: DataFrame): TargetStats = {
-    val up = upserts.cache()
-    val del = deleteKeys.select(RowKey).cache()
-    try {
-      val (nUp, nDel) = TargetStats.countPair(up, del)
-      if (nUp == 0 && nDel == 0) return TargetStats(0, 0)
-
-      withClient(ensureIndex)
-
-      val (h, p, pfx, bs, dim) = (host, port, prefix, batchSize, vectorDim)
-      if (nUp > 0) {
-        val schema = up.schema
-        val keyIdx = schema.fieldIndex(RowKey)
-        val valueFields = schema.fields.zipWithIndex
-          .filter(_._1.name != RowKey).toSeq
-        up.repartition(writePartitions, col(RowKey)).foreachPartition {
-          rows: Iterator[Row] =>
-            val c = new RespClient(h, p)
-            try rows.grouped(bs).foreach { batch =>
-              val cmds = batch.flatMap { row =>
-                val key = (pfx + row.getString(keyIdx)).getBytes(UTF_8)
-                val hset = Seq.newBuilder[Array[Byte]]
-                hset += "HSET".getBytes(UTF_8) += key
-                var nFields = 0
-                valueFields.foreach { case (f, i) =>
-                  if (!row.isNullAt(i)) {
-                    hset += f.name.getBytes(UTF_8)
-                    hset += fieldBytes(f.name, f.dataType, row, i, dim)
-                    nFields += 1
-                  }
-                }
-                // an empty hash does not exist in the store, and HSET
-                // with no pairs is an arity error — an all-null row
-                // cannot be represented; fail loudly, never silently
-                // vanish from read-back
-                require(nFields > 0,
-                  s"valkey document ${row.getString(keyIdx)} has no " +
-                    "non-null fields — an empty hash cannot exist")
-                Seq(
-                  Seq("MULTI".getBytes(UTF_8)),
-                  Seq("DEL".getBytes(UTF_8), key),
-                  hset.result(),
-                  Seq("EXEC".getBytes(UTF_8)))
-              }
-              c.pipeline(cmds).foreach(_.orThrow)
-            } finally c.close()
-        }
-      }
-      if (nDel > 0) {
-        del.repartition(writePartitions, col(RowKey)).foreachPartition {
-          rows: Iterator[Row] =>
-            val c = new RespClient(h, p)
-            try rows.grouped(bs).foreach { batch =>
-              c.command("DEL".getBytes(UTF_8) +:
-                batch.map(r => (pfx + r.getString(0)).getBytes(UTF_8)))
-                .orThrow
-            } finally c.close()
-        }
-      }
-      TargetStats(nUp, nDel)
-    } finally { up.unpersist(); del.unpersist() }
   }
 
   /** All document ids under the index prefix — the SCAN page loop the
@@ -179,7 +158,7 @@ final case class ValkeyIndexTarget(host: String, port: Int,
     * stay distributed). Columns: `row_key`, declared fields as
     * strings, `vector` as ARRAY<FLOAT> when the index has one. */
   def read(spark: SparkSession): DataFrame = {
-    val keys = withClient(scanKeys)
+    val keys = withConn(scanKeys)
     val (h, p, pfx, bs, dim) = (host, port, prefix, batchSize, vectorDim)
     val fieldNames = fields.map(_.name)
     val schema = StructType(
@@ -216,7 +195,7 @@ final case class ValkeyIndexTarget(host: String, port: Int,
     spark.createDataFrame(rdd, schema)
   }
 
-  override def truncate(spark: SparkSession): Unit = withClient { c =>
+  override def truncate(spark: SparkSession): Unit = withConn { c =>
     c.commandS("FT.DROPINDEX", indexName) match {
       case RespValue.Err(m) if m.contains("Unknown index") => ()
       case other => other.orThrow
@@ -234,7 +213,7 @@ final case class ValkeyIndexTarget(host: String, port: Int,
   def knn(spark: SparkSession, query: Array[Float], k: Int): DataFrame = {
     require(vectorDim > 0, s"index $indexName has no vector attribute")
     val blob = Float32LE.encode(query.toSeq)
-    val reply = withClient(_.command(Seq(
+    val reply = withConn(_.command(Seq(
       "FT.SEARCH", indexName, s"*=>[KNN $k @$VectorFieldName $$B]",
       "PARAMS", "2", "B").map(_.getBytes(UTF_8)) ++
       Seq(blob) ++ Seq("DIALECT", "2").map(_.getBytes(UTF_8)))).orThrow

@@ -10,8 +10,9 @@ import org.apache.spark.sql.types._
 
 /** Native codegen'd MinHash signature for the FNV/splitmix family:
   * component i = min over shingle hashes h of
-  * [[Hashing.derive]](h, i) = mix64(h + i·GOLDEN) — the derivation
-  * `Dedup.minHashSigUdf` computed row-at-a-time in a Scala UDF.
+  * [[Hashing.derive]](h, i) = mix64(h + i·GOLDEN) — the derivation a
+  * Scala UDF used to compute row-at-a-time (kept as the reference
+  * implementation in MinHashExprSpec).
   *
   * Why an `Expression` (r19, guide step 4 — eliminate non-codegen
   * closures in the hot path): the UDF deserializes every shingle

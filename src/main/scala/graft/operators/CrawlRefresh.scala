@@ -759,14 +759,22 @@ object CrawlRefresh {
         // tally inside the same ≤3-row aggregate — a snapshot that
         // carries duplicate ids would silently skew the persisted
         // n_total/screenedOut where the old standalone counts measured
-        // the materialized frames; now it fails loudly instead.
+        // the materialized frames; now it fails loudly instead. NULL
+        // ids are tallied apart (countDistinct skips them), so a null
+        // id is reported as one, not as a phantom duplicate.
         val byStatusRows = delta.groupBy("status")
-          .agg(count(lit(1)).as("n"),
+          .agg(count(lit(1)).as("n"), count(col("id")).as("n_nonnull"),
             countDistinct(col("id")).as("n_ids")).collect()
         byStatusRows.foreach { r =>
-          require(r.getLong(1) == r.getLong(2),
-            s"duplicate ids in snapshot diff: status=${r.getString(0)} " +
-              s"has ${r.getLong(1)} rows over ${r.getLong(2)} distinct " +
+          val (status, n, nonNull, distinct) =
+            (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))
+          require(nonNull == n,
+            s"null ids in snapshot diff: status=$status has ${n - nonNull} " +
+              s"of $n rows with a null id — the nightly's id-keyed " +
+              "stores require a non-null id on every snapshot row")
+          require(distinct == nonNull,
+            s"duplicate ids in snapshot diff: status=$status " +
+              s"has $nonNull rows over $distinct distinct " +
               "ids — the nightly's id-keyed stores and derived counts " +
               "require unique ids per snapshot side")
         }

@@ -437,30 +437,11 @@ object Dedup {
         (col("id") === col("component")).as("kept"))
   }
 
-  /** MinHash signatures from the already-hashed shingle column — the
-    * expensive tokenize+shingle pass runs once per doc, not twice;
-    * the min scan is a primitive while-loop. KEPT as the reference
-    * implementation MinHashExprSpec pins [[minHashDeriveSig]] against;
-    * production paths use the codegen'd expression (r19, guide step 4
-    * — the UDF boxed every (doc × shingle) long per pass). */
-  private[graft] def minHashSigUdf(numHashes: Int) = udf { sh: Seq[Long] =>
-    if (sh.isEmpty) null.asInstanceOf[Array[Long]]
-    else Array.tabulate(numHashes) { i =>
-      var mn = Long.MaxValue
-      var j = 0
-      while (j < sh.length) {
-        val x = graft.functions.Hashing.derive(sh(j), i)
-        if (x < mn) mn = x
-        j += 1
-      }
-      mn
-    }
-  }
-
-  /** Whole-stage-codegen signature column, bit-identical to
-    * [[minHashSigUdf]] (same [[graft.functions.Hashing.derive]]
-    * arithmetic, same null-on-empty semantics — spec-pinned in
-    * MinHashExprSpec). */
+  /** Whole-stage-codegen signature column over the already-hashed
+    * shingle column, bit-identical to the row-at-a-time UDF it
+    * replaced (same [[graft.functions.Hashing.derive]] arithmetic,
+    * same null-on-empty semantics — MinHashExprSpec keeps that UDF as
+    * the reference and pins the two equal). */
   private[graft] def minHashDeriveSig(sh: Column, numHashes: Int): Column = {
     import org.apache.spark.sql.GraftExpressionBridge
     GraftExpressionBridge.column(graft.functions.MinHashDeriveSigExpr(

@@ -134,6 +134,26 @@ class CrawlRefreshSpec extends SparkSpec {
     assert(rescan.count() === 5)
   }
 
+  test("a snapshot with a null id or a duplicate id fails the night, each with its own message") {
+    import spark.implicits._
+    val snapA = (1 to 5).map(i => doc(i, words(i))).toDF("doc_id", "text")
+    val nullId = snapA.union(
+      Seq((Option.empty[Long], words(6))).toDF("doc_id", "text"))
+    val dupId = snapA.union(
+      Seq(doc(6, words(6)), doc(6, words(7))).toDF("doc_id", "text"))
+    Seq(nullId -> "null ids in snapshot diff: status=added has 1 of 1",
+        dupId -> "duplicate ids in snapshot diff: status=added has 2 rows over 1")
+      .foreach { case (snap, refusal) =>
+        val work = java.nio.file.Files.createTempDirectory("graft-crawl-ids")
+        work.toFile.deleteOnExit()
+        val wd = work.resolve("state").toString
+        assert(CrawlRefresh.nightly(spark, wd, snapA).keptSize === 5)
+        val e = intercept[IllegalArgumentException](
+          CrawlRefresh.nightly(spark, wd, snap))
+        assert(e.getMessage.contains(refusal), e.getMessage)
+      }
+  }
+
   test("a crashed night re-enters through the catch-up preamble: no silent dup admission") {
     // r18: the night mutates export → band index → key index in
     // sequence; a crash right after the admit export leaves kept docs

@@ -23,6 +23,24 @@ class MinHashExprSpec extends SparkSpec {
           element_at(bLit, i + 1)) % Dedup.MinHashP)))
   }
 
+  /** The row-at-a-time derive-family UDF the codegen'd
+    * [[graft.functions.MinHashDeriveSigExpr]] replaced, kept here as
+    * the reference it is pinned against: the min scan over
+    * [[graft.functions.Hashing.derive]], null on an empty input. */
+  private def deriveUdf(numHashes: Int) = udf { sh: Seq[Long] =>
+    if (sh.isEmpty) null.asInstanceOf[Array[Long]]
+    else Array.tabulate(numHashes) { i =>
+      var mn = Long.MaxValue
+      var j = 0
+      while (j < sh.length) {
+        val x = graft.functions.Hashing.derive(sh(j), i)
+        if (x < mn) mn = x
+        j += 1
+      }
+      mn
+    }
+  }
+
   private def nativeSig(hs: Column, numHashes: Int): Column = {
     import org.apache.spark.sql.GraftExpressionBridge
     GraftExpressionBridge.column(graft.functions.MinHashSigExpr(
@@ -107,7 +125,7 @@ class MinHashExprSpec extends SparkSpec {
     for (k <- Seq(4, 32)) {
       val diff = deriveSets
         .withColumn("ne", deriveNative(col("hs"), k))
-        .withColumn("ue", Dedup.minHashSigUdf(k)(col("hs")))
+        .withColumn("ue", deriveUdf(k)(col("hs")))
         .filter(!(col("ne") <=> col("ue")))
       assert(diff.count() === 0, {
         val r = diff.select("id", "ne", "ue").head(3).toSeq
@@ -129,7 +147,7 @@ class MinHashExprSpec extends SparkSpec {
     try {
       val diff = deriveSets
         .withColumn("ne", deriveNative(col("hs"), 32))
-        .withColumn("ue", Dedup.minHashSigUdf(32)(col("hs")))
+        .withColumn("ue", deriveUdf(32)(col("hs")))
         .filter(!(col("ne") <=> col("ue")))
       assert(diff.count() === 0)
     } finally {

@@ -130,6 +130,17 @@ class DorisTargetSpec extends SparkSpec {
     withDoris { d =>
       val target = DorisTableTarget(d.host, d.mysqlPort, d.port,
         "graft", "chunks")
+      val keys = spark.createDataFrame(
+        spark.sparkContext.parallelize(Seq(Row("2#0")), 1),
+        StructType(Seq(StructField("row_key", StringType))))
+      // delete-only and empty applies against the absent table are
+      // converged no-ops: nothing is created, no DELETE is issued
+      assert(target.apply(spark, chunkDf(), keys) == TargetStats(0, 0))
+      assert(target.apply(spark, chunkDf(), emptyKeys) == TargetStats(0, 0))
+      assert(d.table("chunks").isEmpty)
+      assert(!d.observedSql.toArray.map(_.toString)
+        .exists(s => s.startsWith("CREATE") || s.startsWith("DELETE")))
+
       val df1 = chunkDf(("1#0", 1L, 0, "alpha"), ("1#1", 1L, 1, "beta"),
         ("2#0", 2L, 0, "gamma"))
       target.apply(spark, df1, emptyKeys)
@@ -141,9 +152,6 @@ class DorisTargetSpec extends SparkSpec {
       assert(d.table("chunks").get.rows.length == 3)
 
       // update one + delete one
-      val keys = spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq(Row("2#0")), 1),
-        StructType(Seq(StructField("row_key", StringType))))
       target.apply(spark, chunkDf(("1#1", 1L, 1, "beta*")), keys)
       val back = target.read(spark).orderBy("row_key").collect()
       assert(back.map(r => (r.getString(0), r.getString(3))).toSeq ==

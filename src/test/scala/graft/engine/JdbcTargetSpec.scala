@@ -50,7 +50,16 @@ class JdbcTargetSpec extends SparkSpec {
       .map(r => r.getString(0) -> (r.getLong(1), r.getString(2))).toMap
 
   test("create, upsert, readback, idempotent re-apply, delete") {
+    import spark.implicits._
     val t = JdbcTableTarget(freshDb("jdbc-basic"), "doc_chunks")
+    // delete-only and empty applies against the absent table are
+    // converged no-ops: nothing is created, no DELETE can fail on it
+    assert(t.apply(spark, df(Nil), Seq("zz").toDF("row_key")) ==
+      TargetStats(0, 0))
+    assert(t.apply(spark, df(Nil), noDeletes) == TargetStats(0, 0))
+    assert(!JdbcTableTarget.withConnection(t.url)(
+      _.getMetaData.getTables(null, null, "doc_chunks", null).next()))
+
     val s1 = t.apply(spark, df(Seq(("a", 1L, "alpha"), ("b", 2L, "beta"))),
       noDeletes)
     assert(s1 == TargetStats(2, 0))
@@ -61,7 +70,6 @@ class JdbcTargetSpec extends SparkSpec {
     assert(contents(t) == Map("a" -> (1L, "alpha"), "b" -> (2L, "beta")))
 
     // update one, insert one, delete one — in a single apply
-    import spark.implicits._
     val s2 = t.apply(spark, df(Seq(("a", 10L, "ALPHA"), ("c", 3L, "gamma"))),
       Seq("b").toDF("row_key"))
     assert(s2 == TargetStats(2, 1))

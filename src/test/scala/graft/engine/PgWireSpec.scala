@@ -296,8 +296,50 @@ class PgWireSpec extends SparkSpec {
       val emptyUp = spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], chunkSchema)
       // the rows can't exist if the table doesn't — must not 42P01
-      target.apply(spark, emptyUp, keys)
+      assert(target.apply(spark, emptyUp, keys) == TargetStats(0, 0))
+      // an empty apply is converged too
+      assert(target.apply(spark, emptyUp, emptyKeys) == TargetStats(0, 0))
       assert(pg.table("ghost").isEmpty)
+      // nothing was created and then emptied: the wire never saw DDL
+      // or a DELETE
+      val stmts = pg.observed.toArray.map(_.toString)
+      assert(!stmts.exists(_.startsWith("CREATE TABLE")), stmts.mkString("; "))
+      assert(!stmts.exists(_.startsWith("DELETE")), stmts.mkString("; "))
+    }
+  }
+
+  test("PgTableTarget: a mixed apply is one writer pass with measured stats") {
+    withPg { pg =>
+      val target = PgTableTarget(pg.host, pg.port, "testdb", "chunks")
+      target.apply(spark, chunkDf(("1#0", 1L, 0, "alpha"),
+        ("1#1", 1L, 1, "beta"), ("2#0", 2L, 0, "gamma")), emptyKeys)
+      val keys = spark.createDataFrame(
+        spark.sparkContext.parallelize(Seq(Row("2#0")), 1),
+        StructType(Seq(StructField("row_key", StringType))))
+      // the table exists, so the apply is observe + ensure + ONE
+      // key-partitioned pass over upserts ∪ delete keys. That pass is
+      // 2 jobs (the repartition's map stage, then the writers); a
+      // recount of the delta or a second writer pass adds at least one
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val counter = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(counter)
+      val stats =
+        try {
+          val s = target.apply(spark,
+            chunkDf(("1#1", 1L, 1, "beta*"), ("3#0", 3L, 0, "delta")), keys)
+          Thread.sleep(300) // listener events drain asynchronously
+          s
+        } finally spark.sparkContext.removeSparkListener(counter)
+      assert(stats == TargetStats(2, 1))
+      info(s"mixed apply launched ${jobs.get} Spark jobs")
+      assert(jobs.get <= 2, s"mixed apply launched ${jobs.get} Spark jobs")
+      assert(target.read(spark).orderBy("row_key").collect()
+        .map(r => (r.getString(0), r.getString(3))).toSeq ==
+        Seq(("1#0", "alpha"), ("1#1", "beta*"), ("3#0", "delta")))
     }
   }
 

@@ -157,15 +157,23 @@ class WarehouseTargetSpec extends SparkSpec {
     try {
       val target = BigQueryTableTarget(bq.baseUrl, "proj", "ds", "chunks",
         token = "bq-test-token", bulkBatch = 0) // reference per-row path
+      val keys = spark.createDataFrame(
+        spark.sparkContext.parallelize(Seq(Row("2#0")), 1),
+        StructType(Seq(StructField("row_key", StringType))))
+      // delete-only and empty applies against the absent table are
+      // converged no-ops: nothing is created, no DELETE would 404
+      assert(target.apply(spark, chunkDf(), keys) == TargetStats(0, 0))
+      assert(target.apply(spark, chunkDf(), emptyKeys) == TargetStats(0, 0))
+      assert(bq.table("chunks").isEmpty)
+      assert(!bq.observedSql.toArray.map(_.toString)
+        .exists(s => s.startsWith("CREATE") || s.startsWith("DELETE")))
+
       val df1 = chunkDf(("1#0", 1L, 0, "alpha"), ("1#1", 1L, 1, "beta"),
         ("2#0", 2L, 0, "gamma"))
       target.apply(spark, df1, emptyKeys)
       target.apply(spark, df1, emptyKeys)
       assert(bq.table("chunks").get.rows.size == 3)
 
-      val keys = spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq(Row("2#0")), 1),
-        StructType(Seq(StructField("row_key", StringType))))
       target.apply(spark, chunkDf(("1#1", 1L, 1, "beta*")), keys)
       val back = target.read(spark).orderBy("row_key").collect()
       assert(back.map(r => (r.getString(0), r.getString(3))).toSeq ==
