@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{BooleanType, StructType}
 
 /** What one target apply did: upsert rows written and delete keys
   * issued. Wire targets measure both DURING their single write pass
@@ -733,11 +733,13 @@ final case class ParquetTableTarget(dir: String, numBuckets: Int = 16,
     * (bucket, row_key) — bucket is functionally dependent on the key
     * — so a serve path's bucket filter still prunes below it. */
   private def readDeltaLog(spark: SparkSession): DataFrame = {
-    val base = activeBase.map(d => spark.read.parquet(d.getPath))
+    val stored = storedSchema
+    val base = activeBase.map(d => readerOf(spark, stored).parquet(d.getPath))
     val segs = activeSegs
     if (segs.isEmpty) base.getOrElse(emptyFromSidecar(spark))
     else {
-      val delta = spark.read.option("mergeSchema", "true")
+      val delta = readerOf(spark, stored.map(_.add("__deleted", BooleanType)))
+        .option("mergeSchema", "true")
         .option("basePath", deltaRoot.getPath)
         .parquet(segs.map(_.getPath): _*)
       val w = org.apache.spark.sql.expressions.Window
@@ -794,6 +796,17 @@ final case class ParquetTableTarget(dir: String, numBuckets: Int = 16,
     }
   }
 
+  /** `spark.read`, with the payload schema SUPPLIED when the
+    * `_schema.json` sidecar exists (like [[StateStore.read]]): no
+    * footer-inference job runs, and files written before a column was
+    * added read it as null, as `mergeSchema` inference would.
+    * Containers written before the sidecar existed keep inference.
+    * Partition columns (`bucket`, `seg`) are discovered from the
+    * paths either way. */
+  private def readerOf(spark: SparkSession, schema: Option[StructType])
+      : org.apache.spark.sql.DataFrameReader =
+    schema.fold(spark.read)(spark.read.schema)
+
   private def emptyFromSidecar(spark: SparkSession): DataFrame =
     storedSchema match {
       case Some(schema) =>
@@ -805,7 +818,7 @@ final case class ParquetTableTarget(dir: String, numBuckets: Int = 16,
 
   def read(spark: SparkSession): DataFrame =
     if (deltaLayoutOnDisk) readDeltaLog(spark)
-    else if (v1Exists) spark.read.parquet(dir)
+    else if (v1Exists) readerOf(spark, storedSchema).parquet(dir)
     // target written once but currently empty (e.g. post-drop)
     else emptyFromSidecar(spark)
 }

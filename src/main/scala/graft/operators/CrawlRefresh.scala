@@ -462,15 +462,17 @@ object CrawlRefresh {
     *     budget, [[Dedup.keyIndexRebuild]] runs automatically (one
     *     index-sized scan, never the corpus) and the stats report it;
     *   - `mhindex/` + `mhstate/` — the flow-maintained MinHash band
-    *     index; each night reconciles it twice, both O(changed) via
-    *     the flow's delta re-stat (the night KNOWS its changed keys,
-    *     so no full re-fingerprint pass runs): once retiring
-    *     removed/changed-old docs BEFORE screening (so the probe sees
-    *     exactly the unchanged corpus) and once admitting the
-    *     survivors after;
+    *     index; each night reconciles it ONCE, O(changed) via the
+    *     flow's delta re-stat over the night's retired ∪ admitted
+    *     keys (the night KNOWS its changed keys, so no full
+    *     re-fingerprint pass runs), right after the admit export
+    *     write. During the screens the index may still hold rows for
+    *     docs retired tonight; both fuzzy screens verify every
+    *     candidate against the post-retire export, so such a stale
+    *     candidate fetches no corpus row and cannot screen a doc out;
     *   - `srpindex/` + `srpstate/` (when `embedScreen` is set) — the
     *     flow-maintained SRP band index over the embedded corpus,
-    *     reconciled in the SAME retire/admit phases.
+    *     reconciled by the SAME single admit-phase pass.
     *
     * Per-night cost: O(slice + candidates + changed components +
     * changed shards) — plus, when `changeFeed` is None, ONE
@@ -485,7 +487,7 @@ object CrawlRefresh {
     * scan metrics in CrawlRefreshSpec). The band indexes live on the
     * target's delta-log layout, so each reconcile APPENDS O(changed
     * bands) bytes; segment build-up consolidates at O(delta) cost
-    * every ~maxDeltaSegments/2 nights (two reconciles per night), and
+    * every ~maxDeltaSegments nights (one reconcile per night), and
     * the index folds only under the target's proportional trigger —
     * amortized O(changed bands) per night, flat in index size.
     *
@@ -809,14 +811,18 @@ object CrawlRefresh {
 
     // phase 1 — retire: the export drops removed/changed-old docs
     // (shard layout: only their shards rewrite; delta-log: one thin
-    // tombstone segment appends), then the band indexes reconcile to
-    // exactly the unchanged corpus (O(changed) components via the
-    // known-key delta re-stat)
-    inPhase("retire") {
+    // tombstone segment appends). The band indexes are NOT reconciled
+    // here: during the screens they may still hold rows for docs
+    // retired tonight, and that is safe — both fuzzy screens verify
+    // every candidate against the POST-retire export
+    // (KeyedFetch.byNativeKey in minHashIncrementOver and
+    // semDedupIncrementOver), so a stale candidate's corpus fetch
+    // returns no row and cannot screen a doc out: the screens keep
+    // exactly what they would keep over an index without those rows.
+    // The retired keys ride into the admit phase's single reconcile.
+    val retireKeys = inPhase("retire") {
       store.applyRetire(spark, retiredIds)
-      val retireKeys = keyList(retiredIds)
-      reconcile(flow, retireKeys)
-      srpFlow.foreach(reconcile(_, retireKeys))
+      keyList(retiredIds)
     }
 
     // screens — all served from persisted state
@@ -848,15 +854,24 @@ object CrawlRefresh {
 
     // phase 2 — admit: survivors land in the export (shard layout:
     // their shards rewrite; delta-log: one O(delta) segment appends),
-    // the band indexes add their components, their keys commit to
-    // the bloom+key index
+    // then each band index reconciles ONCE over every key touched
+    // tonight (retired ∪ admitted): the delta re-stat compares each
+    // key against the FINAL export, so retired docs drop, changed
+    // docs re-band and survivors add. The survivors' keys then commit
+    // to the bloom+key index.
     val (manifest, rebuilt) = inPhase("admit") {
       val m = store.applyAdmit(spark, kept)
       if (nightlyCrashAfterAdmitExport)
         throw new RuntimeException(
           "nightly: injected test crash after the admit export")
-      reconcile(flow, admitKeys)
-      srpFlow.foreach(reconcile(_, admitKeys))
+      // an overflowed side, or a union past the cap, full-runs
+      val nightKeys = for {
+        r <- retireKeys; a <- admitKeys
+        union = (r ++ a).distinct
+        if union.size <= MaxDeltaKeys
+      } yield union
+      reconcile(flow, nightKeys)
+      srpFlow.foreach(reconcile(_, nightKeys))
       Dedup.keyIndexAppend(spark, keyIdx, kept)
       val rb =
         if (Dedup.keyIndexNeedsRebuild(keyIdx)) {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{CrawlRefresh, Curation}
+import graft.operators.{CrawlRefresh, Curation, Dedup}
 import org.apache.spark.sql.functions._
 
 /** The composed nightly crawl-refresh pipeline (r14 verdict task #4;
@@ -729,5 +729,61 @@ class CrawlRefreshSpec extends SparkSpec {
         exportBuckets = 32)
     }
     assert(e3.getMessage.contains("container identity"), e3.getMessage)
+  }
+
+  test("one band-index reconcile per night: stale bands cannot screen a doc out") {
+    import spark.implicits._
+    val work = java.nio.file.Files.createTempDirectory("graft-crawl-one")
+    work.toFile.deleteOnExit()
+    val wd = work.resolve("state").toString
+    val snapA = (1 to 40).map(i => doc(i, words(i))).toDF("doc_id", "text")
+    assert(CrawlRefresh.nightly(spark, wd, snapA,
+      exportDeltaLog = true).bootstrap)
+
+    // the band index still holds doc 11's and doc 7's OLD bands while
+    // the screens run; both near-dups below match only those stale rows
+    val snapB = ((1 to 40).filterNot(_ == 11).map { i =>
+      if (i == 7) doc(i, "UPDATE: " + words(7)) // near-dup of its old text
+      else doc(i, words(i))
+    } ++ Seq(
+      doc(100, words(900)),              // fresh — kept
+      doc(102, "UPDATE: " + words(4)),   // near re-crawl of a kept doc — drops
+      doc(103, "UPDATE: " + words(11)))) // near re-crawl of doc 11, removed tonight
+      .toDF("doc_id", "text")
+    val feed = () => new graft.engine.SourceWatcher {
+      private var drained = false
+      def drain(): (Seq[String], Boolean) =
+        if (drained) (Nil, false)
+        else { drained = true; (Seq("7", "11", "100", "102", "103"), false) }
+      def close(): Unit = ()
+    }
+    val mhState = new graft.engine.StateStore(spark, s"$wd/mhstate")
+    val before = mhState.currentVersion
+    val night2 = CrawlRefresh.nightly(spark, wd, snapB,
+      exportDeltaLog = true, changeFeed = Some(feed))
+    assert(mhState.currentVersion === before + 1,
+      "a refresh night commits the MinHash flow exactly once")
+    assert(night2.sliceSize === 4 && night2.removedSize === 1 &&
+      night2.screenedOut === 1 && night2.keptSize === 41, night2)
+    val kept = deltaExportRead(wd).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(kept.contains((7L, "UPDATE: " + words(7))),
+      "a changed doc near its own old text is kept")
+    assert(kept.contains((103L, "UPDATE: " + words(11))),
+      "a near re-crawl of a doc removed the same night is kept")
+    assert(!kept.exists(_._1 == 102L) && !kept.exists(_._1 == 11L))
+    assert(kept === CrawlRefresh.refreshRescan(snapA, snapB).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet)
+
+    // the single reconcile leaves the index exactly where a fresh
+    // build over tonight's export would
+    def bands(dir: String) =
+      graft.engine.ParquetTableTarget(dir, deltaLog = true).read(spark)
+        .select("item_key", "band", "code", "sz").collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getInt(3)))
+        .toSet
+    val fresh = work.resolve("fresh").resolve("mhindex").toString
+    Dedup.minHashIndexBootstrap(spark, fresh, deltaExportRead(wd))
+    assert(bands(s"$wd/mhindex") === bands(fresh))
   }
 }

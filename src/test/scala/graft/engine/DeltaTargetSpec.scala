@@ -390,4 +390,67 @@ class DeltaTargetSpec extends graft.SparkSpec {
     assert(ParquetTableTarget(dir2, numBuckets = 2).read(spark)
       .count() == 1)
   }
+
+  /** Jobs launched while building `body`'s DataFrame, counted by job
+    * group. A sentinel job closes the group: listener events arrive in
+    * order, so once the sentinel is visible every earlier job is too. */
+  private def jobsWhile[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"graft-read-plan-${System.nanoTime}"
+    sc.setJobGroup(group, "build a target read")
+    val (out, sentinel) =
+      try {
+        val o = body
+        val f = sc.parallelize(Seq(1), 1).countAsync()
+        f.get()
+        (o, f.jobIds.head)
+      } finally sc.clearJobGroup()
+    val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+    while (!sc.statusTracker.getJobIdsForGroup(group).contains(sentinel) &&
+      System.nanoTime < deadline) Thread.sleep(20)
+    val ids = sc.statusTracker.getJobIdsForGroup(group)
+    assert(ids.contains(sentinel), s"sentinel job $sentinel never reported")
+    (out, ids.length - 1)
+  }
+
+  test("reads use the _schema.json sidecar: no inference job, same rows") {
+    import spark.implicits._
+    val work = tmp()
+    val dir = work.resolve("t").toString
+    val t = ParquetTableTarget(dir, numBuckets = 2, deltaLog = true,
+      maxDeltaSegments = 100)
+    t.apply(spark, rows("a" -> 1, "b" -> 2, "c" -> 3), keys()) // base
+    t.apply(spark, rows("a" -> 10), keys("b"))                  // segment
+    t.apply(spark,                                              // segment
+      Seq(("d", 4, "extra")).toDF("row_key", "v", "note"), keys())
+    assert(genDirs(dir).size == 1 && segDirs(dir).size == 2)
+    def got(df: DataFrame) = df.select("row_key", "v", "note", "bucket")
+      .collect().map(r =>
+        (r.getString(0), r.getInt(1), Option(r.getString(2)), r.getInt(3)))
+      .toSet
+
+    val (read, jobs) = jobsWhile(t.read(spark))
+    assert(jobs == 0, s"building the merged read launched $jobs Spark jobs")
+    val rowsRead = got(read)
+    assert(rowsRead.map(r => (r._1, r._2, r._3)) == Set(("a", 10, None),
+      ("c", 3, None), ("d", 4, Some("extra"))))
+
+    // without its sidecar (as written before the sidecar existed) the
+    // container reads through footer inference — same rows
+    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "_schema.json"))
+    val (inferred, inferJobs) = jobsWhile(t.read(spark))
+    assert(inferJobs > 0, "the inference path is expected to read footers")
+    assert(got(inferred) == rowsRead)
+
+    // the copy-on-write layout reads through the sidecar the same way
+    val cowDir = work.resolve("cow").toString
+    val cow = ParquetTableTarget(cowDir, numBuckets = 2)
+    cow.apply(spark, rows("a" -> 1, "b" -> 2), keys())
+    cow.apply(spark,
+      Seq(("c", 3, "extra")).toDF("row_key", "v", "note"), keys("b"))
+    val (cowRead, cowJobs) = jobsWhile(cow.read(spark))
+    assert(cowJobs == 0, s"building the copy-on-write read launched $cowJobs jobs")
+    assert(got(cowRead).map(r => (r._1, r._2, r._3)) ==
+      Set(("a", 1, None), ("c", 3, Some("extra"))))
+  }
 }

@@ -352,6 +352,35 @@ class FlowSpec extends SparkSpec {
       p2("sub/b.md") == "unchanged")
   }
 
+  test("a managedBy flip under an identical schema persists, then settles") {
+    val (src, tgt, st) = (tmpDir("flow-src"), tmpDir("flow-tgt"), tmpDir("flow-st"))
+    seed(src)
+    def flowAs(m: StateDiff.ManagedBy) = new Flow("docs_index",
+      LocalFsSource(src.toString, Seq("**.md", "!**/skip/**")),
+      Seq(chunkStage(1), embedStage),
+      ParquetTableTarget(tgt.toString, numBuckets = 4), st.toString,
+      managedBy = m)
+    val store = new StateStore(spark, st.toString)
+    def ownership: Seq[String] =
+      store.read("target_state", StateStore.TargetStateSchema).collect()
+        .map(_.getString(2)).toSeq
+
+    flowAs(StateDiff.SystemManaged).run(spark)
+    assert(ownership == Seq("system"))
+    val v1 = store.currentVersion
+
+    // same schema record, new owner: the flip alone must commit
+    flowAs(StateDiff.UserManaged).run(spark)
+    assert(store.currentVersion > v1, "the ownership flip was not committed")
+    assert(ownership == Seq("user"))
+    val v2 = store.currentVersion
+
+    val r3 = flowAs(StateDiff.UserManaged).run(spark)
+    assert(r3.isNoop, s"a rerun after the flip must be a no-op: $r3")
+    assert(store.currentVersion == v2, "a no-op rerun must not commit")
+    assert(ownership == Seq("user"))
+  }
+
   test("drop reverts all target rows and clears state") {
     val (src, tgt, st) = (tmpDir("drop-src"), tmpDir("drop-tgt"), tmpDir("drop-st"))
     seed(src)
