@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import StateStore._
 
 /** Per-run execution report — the engine's observable contract for
@@ -17,6 +18,11 @@ final case class RunStats(
   def isNoop: Boolean =
     recomputed == 0 && deletedComponents == 0 && refreshed == 0 &&
       rowsInserted == 0 && rowsUpdated == 0 && rowsDeleted == 0
+}
+
+object RunStats {
+  /** A pass that saw no components and did no work. */
+  val Empty: RunStats = RunStats(0, 0, 0, 0, 0, 0, 0, 0, 0)
 }
 
 /** The incremental dataflow engine: TargetState = Transform(SourceState)
@@ -82,12 +88,14 @@ final class Flow(
       * by exactly ONE `item_key` for the flow's whole lifetime (true
       * whenever row keys are item-namespaced, e.g. `"$item"` or
       * `"$item:$suffix"` — every maintained-index flow here). Under
-      * the declaration, the reconcile's tracking scope is read with
-      * an item filter pushed BELOW the latest-wins merge
-      * ([[StateStore.readWhere]]): the clustered tracking base prunes
-      * to O(scope keys) row groups instead of materializing and
-      * window-shuffling the WHOLE table per run — the difference
-      * between an O(delta) and an O(corpus) engine pass at 100 TB.
+      * the declaration, a pass whose scope is held as key lists (at
+      * most [[Flow.MaxScopeLiterals]] changed, suspect and gone items)
+      * reads its tracking baseline with an item filter pushed BELOW
+      * the latest-wins merge ([[StateStore.readWhere]]): the clustered
+      * tracking base prunes to O(scope keys) row groups instead of
+      * materializing and window-shuffling the WHOLE table per run —
+      * the difference between an O(delta) and an O(corpus) engine
+      * pass at 100 TB. A larger scope semi-joins the merged table.
       * Leave false if a row_key can ever be re-declared by a
       * DIFFERENT item (ownership preemption across components): the
       * below-merge filter would then see only the stale owner's
@@ -456,18 +464,71 @@ final class Flow(
   private case class DeltaScope(pred: org.apache.spark.sql.Column,
       memoTotal: Long)
 
+  /** The pass's item scope, chosen once after classification and
+    * level 2: the components that recompute (`changed`), vanished
+    * (`gone`) or only refresh their memo row (`refreshed`). Every
+    * keyed restriction of the pass asks the scope, never how it is
+    * held. */
+  private sealed abstract class Scope(val changed: DataFrame,
+      val gone: DataFrame, val refreshed: DataFrame, val nRefreshed: Long) {
+    /** changed ∪ gone: the items whose target rows, errors and user
+      * state this pass replaces. */
+    def keys: DataFrame
+    /** The rows of `df` (keyed by `item_key`) of changed items. */
+    def restrict(df: DataFrame): DataFrame
+    /** The tracking rows of the scope's items: the reconcile baseline. */
+    def tracking(st: StateStore): DataFrame =
+      st.read("tracking", TrackingSchema)
+        .join(keys, Seq("item_key"), "left_semi")
+  }
+
+  /** A scope of at most [[Flow.MaxScopeLiterals]] items, held as driver
+    * key lists: restrictions ride plan literals or LOCAL key relations,
+    * whose broadcast builds are driver-side — a frame scope pays one
+    * Spark job per small-side broadcast build, several per pass. */
+  private final class KeyScope(spark: SparkSession, changedL: Seq[String],
+      goneL: Seq[String], refreshedL: Seq[String])
+      extends Scope(Source.keysDf(spark, changedL), Source.keysDf(spark, goneL),
+        Source.keysDf(spark, refreshedL), refreshedL.size.toLong) {
+    private val keysL = changedL ++ goneL
+    val keys: DataFrame = Source.keysDf(spark, keysL)
+    def restrict(df: DataFrame): DataFrame =
+      df.filter(col("item_key").isin(changedL: _*))
+    // under rowKeyOwnedByItem each row_key's item is immutable, so an
+    // item filter below the latest-wins window keeps exactly the scope
+    // groups' full histories — O(scope) read against the clustered
+    // base instead of materializing + shuffling the whole table
+    override def tracking(st: StateStore): DataFrame =
+      if (!rowKeyOwnedByItem || keysL.isEmpty) super.tracking(st)
+      else st.readWhere("tracking", TrackingSchema,
+        col("item_key").isin(keysL: _*))
+  }
+
+  /** A scope past the literal cap, held as frames over the cached
+    * probe: restrictions are semi-joins. */
+  private final class FrameScope(changed: DataFrame, gone: DataFrame,
+      refreshed: DataFrame, nRefreshed: Long)
+      extends Scope(changed, gone, refreshed, nRefreshed) {
+    val keys: DataFrame = changed.union(gone)
+    def restrict(df: DataFrame): DataFrame =
+      df.join(changed, Seq("item_key"), "left_semi")
+  }
+
   private def runImpl(spark: SparkSession, fullReprocess: Boolean,
       listingOverride: Option[DataFrame],
       deltaScope: Option[DeltaScope] = None): RunStats = {
     val st = state(spark)
     val planned = tablePlan(spark, st)
     val pFp = planned.effectiveFp
+    // every frame this pass caches, released on either exit
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def hold(df: DataFrame): DataFrame = { held += df; df.cache() }
 
     // ---- memo probe (level 1: listing state vs stored memo) -----------
-    // listing and probe are METADATA-scale (one short row per source
-    // item) but their lineage is the source's full listing plan — and
-    // they fan out into nearly every downstream action (classify,
-    // load keys, memo rebuild, commit writes). localCheckpoint (not
+    // the listing is METADATA-scale (one short row per source item)
+    // but its lineage is the source's full listing plan — and it fans
+    // out into nearly every downstream action (classify, load keys,
+    // memo rebuild, commit writes). localCheckpoint (not
     // cache) truncates that lineage to a leaf: Catalyst stops
     // re-analyzing the whole source plan on each of the ~10 actions
     // per run, which at small deltas is the dominant fixed cost of an
@@ -475,37 +536,17 @@ final class Flow(
     // recomputable and never held beyond the run.)
     val listing = listingOverride.getOrElse(source.list(spark))
       .select(col("item_key"), col("memo_state")).localCheckpoint()
-    // bootstrap shortcut (r18): with NO committed memo rows, the
-    // full-outer probe join would shuffle the whole (corpus-sized)
-    // listing against an empty side — sort-merge, since full_outer
-    // cannot broadcast — to conclude "every item is new". Classify
-    // directly instead: zero exchanges on the bootstrap probe. The
-    // emptiness test is exact (absent table, or the snapshot's exact
-    // row-count sidecar at 0); an unknown count keeps the join.
-    val memoEmpty = deltaScope.isEmpty &&
-      (!st.tableExists("component_memo") ||
-        st.rowCount("component_memo").contains(0L))
-    val memo =
-      if (memoEmpty)
-        st.read("component_memo", ComponentMemoSchema)
-      else deltaScope match {
-        case Some(s) =>
-          // scoped pass: only the changed keys' memo slice joins the
-          // probe — readWhere pushes the predicate below the merge
-          // window and into the clustered base's parquet scans
-          st.readWhere("component_memo", ComponentMemoSchema, s.pred)
-        case None => st.read("component_memo", ComponentMemoSchema)
-      }
-    val probe =
-      if (memoEmpty)
-        // derived narrowly from the checkpointed listing — no second
-        // checkpoint job, no join
-        listing.select(col("item_key"), col("memo_state"))
-          .withColumn("processor_fp", lit(null).cast("string"))
-          .withColumn("stored_state", lit(null).cast("string"))
-          .withColumn("content_fp", lit(null).cast("string"))
-          .withColumn("cls", lit("changed"))
-      else listing.select(col("item_key"), col("memo_state"))
+    // a scoped pass joins only the changed keys' memo slice: readWhere
+    // pushes the predicate below the merge window and into the
+    // clustered base's parquet scans. Memo state known to be empty
+    // (bootstrap) reads as an empty local relation, and Catalyst folds
+    // the full outer join over it into a projection of the listing —
+    // the bootstrap probe plans no exchange.
+    val memo = deltaScope.fold(st.read("component_memo", ComponentMemoSchema))(
+      s => st.readWhere("component_memo", ComponentMemoSchema, s.pred))
+    // cached, not checkpointed: the classification aggregate below is
+    // the action that fills it, so no pass pays a separate job for it
+    val probe = hold(listing
       .join(memo.select(col("item_key"), col("processor_fp"),
         col("memo_state").as("stored_state"), col("content_fp")),
         Seq("item_key"), "full_outer")
@@ -521,8 +562,7 @@ final class Flow(
           // join/count chain (several Spark jobs per run) that would
           // conclude "changed" anyway
           .otherwise(lit(
-            if (source.contentFpOf.isDefined) "suspect" else "changed")))
-      .localCheckpoint()
+            if (source.contentFpOf.isDefined) "suspect" else "changed"))))
 
     // classification counts: a ≤4-row aggregate — the per-item probe
     // rows never leave the executors (at 10⁷–10⁸ source items a
@@ -549,59 +589,32 @@ final class Flow(
     }
     val nTotal = byCls.values.sum + survivors
 
-    // pure no-op fast path for passes with NO level-2 work pending:
-    // nothing changed, appeared or vanished — return BEFORE the
-    // content load (the load's bounded-key probe is a Spark job a
-    // no-op tick must not pay). Suspect-bearing passes fall through:
-    // their no-op test needs the level-2 refresh count below.
-    if (byCls("suspect") == 0 && byCls("changed") == 0 && byCls("gone") == 0) {
-      if (planned.pendingTransition) {
-        if (planned.destructive) target.truncate(spark)
-        applyAttachments(spark, planned)
-        st.commit(targetStateTable(spark, planned).toMap)
-        afterCommit.foreach(_.apply())
-      }
-      Seq(listing, probe).foreach(_.unpersist())
-      return RunStats(nTotal, byCls("unchanged") + survivors,
-        0, 0, 0, 0, 0, 0, 0)
-    }
+    // `n` item keys of `df` grouped by its class column `c` — one
+    // collect, none when `n` is 0
+    def keysBy(c: String, df: => DataFrame, n: Long): Map[String, Seq[String]] =
+      (if (n == 0) Map.empty[String, Seq[String]]
+       else df.select(col("item_key"), col(c)).collect().toSeq
+         .groupMap(_.getString(1))(_.getString(0)))
+        .withDefaultValue(Nil)
+    // a scope within the literal cap is collected ONCE here, as driver
+    // key lists; past the cap it stays frames over the cached probe
+    val nScope = byCls("changed") + byCls("suspect") + byCls("gone")
+    val lists =
+      if (nScope > Flow.MaxScopeLiterals) None
+      else Some(keysBy("cls", probe.filter(col("cls") =!= "unchanged"), nScope))
 
-    // Bounded-scope literalization (r18 batch 3): on a suspect-free
-    // pass whose changed+gone scope fits the literal cap, ONE collect
-    // over the checkpointed probe turns the scope into driver lists.
-    // Downstream keyed restrictions then ride plan literals or LOCAL
-    // key relations — a LocalRelation's broadcast build is driver-side
-    // — where the frame-based path pays one whole Spark job per
-    // small-side broadcast build, several times per engine pass.
-    // Suspect-bearing passes keep the frame path: their changed set is
-    // only known after level 2.
-    val scopeLists: Option[(Seq[String], Seq[String])] =
-      if (byCls("suspect") != 0 ||
-          byCls("changed") + byCls("gone") > Flow.MaxScopeLiterals) None
-      else {
-        val rows = probe.filter(col("cls") =!= "unchanged")
-          .select("item_key", "cls").collect()
-        def keysOf(cls: String) = rows.collect {
-          case r if r.getString(1) == cls => r.getString(0) }.toSeq
-        Some((keysOf("changed"), keysOf("gone")))
-      }
-
-    // ---- level 2: content fingerprint for suspects --------------------
-    // (suspects exist only for sources with a content fp; content is
-    // loaded once and reused by the transform; the key set stays a
-    // DataFrame end-to-end — Source.load decides how to exploit it)
-    val loadKeysDf = scopeLists match {
-      // a LOCAL key relation: the source's bounded-pushdown probe
-      // evaluates driver-side (no job); suspects are absent on this
-      // path, so the changed keys ARE the whole load set
-      case Some((changedL, _)) => Source.keysDf(spark, changedL)
-      case None => probe
-        .filter(col("cls").isin("changed", "suspect")).select("item_key")
-    }
-    val loaded = source.load(spark, loadKeysDf)
+    // ---- load + level 2: content fingerprint for suspects -------------
+    // content is loaded once and reused by the transform; the load set
+    // (changed ∪ suspect) is a local key relation under key lists, else
+    // a frame — Source.load decides how to exploit it. Lazy: a suspect
+    // pass forces it for level 2, any other pass only past the no-op
+    // exit (the load's bounded-key probe is a Spark job a no-op tick
+    // must not pay).
+    lazy val loaded = hold(source.load(spark, lists.fold(
+        probe.filter(col("cls").isin("changed", "suspect")).select("item_key"))(
+        l => Source.keysDf(spark, l("changed") ++ l("suspect"))))
       .withColumn("__content_fp",
-        source.contentFpOf.getOrElse(lit(null).cast("string")))
-      .cache()
+        source.contentFpOf.getOrElse(lit(null).cast("string"))))
 
     // per-ITEM content fingerprint: a component may load MANY payload
     // rows (e.g. AggView's bucketed table source), so the per-row fp
@@ -609,7 +622,7 @@ final class Flow(
     // item-level state — otherwise memo rows fan out per payload row.
     // Single-row items keep their row fp bit-exactly; multi-row items
     // combine order-insensitively.
-    val loadedFps =
+    lazy val loadedFps =
       if (source.contentFpOf.isEmpty)
         loaded.select(col("item_key")).dropDuplicates("item_key")
           .withColumn("__content_fp", lit(null).cast("string"))
@@ -624,52 +637,61 @@ final class Flow(
               coalesce(col("__content_fp"), lit("<null>")))))))
           .as("__content_fp"))
 
-    val level2 =
-      if (byCls("suspect") == 0L)
-        spark.emptyDataFrame.withColumn("item_key", lit(""))
-          .withColumn("cls2", lit("")).limit(0).select("item_key", "cls2")
-      else probe.filter(col("cls") === "suspect")
-        .join(loadedFps.select(col("item_key"),
-          col("__content_fp").as("new_content_fp")), Seq("item_key"), "left")
-        .withColumn("cls2",
-          when(col("new_content_fp").isNotNull &&
-            col("new_content_fp") === col("content_fp"), lit("refreshed"))
-            .otherwise(lit("changed")))
-        .select(col("item_key"), col("cls2"))
-        .cache()
-    val nRefreshed =
-      if (byCls("suspect") == 0L) 0L
-      else level2.filter(col("cls2") === "refreshed").count()
+    // a suspect whose loaded content fp equals the stored one only
+    // refreshes its memo row; any other suspect recomputes
+    def verdicts = probe.filter(col("cls") === "suspect")
+      .join(loadedFps.select(col("item_key"),
+        col("__content_fp").as("new_content_fp")), Seq("item_key"), "left")
+      .withColumn("cls2",
+        when(col("new_content_fp").isNotNull &&
+          col("new_content_fp") === col("content_fp"), lit("refreshed"))
+          .otherwise(lit("changed")))
+      .select(col("item_key"), col("cls2"))
+    def probeKeys(c: String) =
+      probe.filter(col("cls") === c).select("item_key")
 
-    val changedKeys = probe.filter(col("cls") === "changed").select("item_key")
-      .union(level2.filter(col("cls2") === "changed").select("item_key"))
-      .cache()
-    val nChanged = byCls("changed") + (byCls("suspect") - nRefreshed)
-    // gone keys as a LOCAL relation when the scope is literalized:
-    // every join against them (errors/user_state pruning, the memo
-    // tombstones) then broadcasts without a build job
-    val goneKeys = scopeLists match {
-      case Some((_, goneL)) => Source.keysDf(spark, goneL)
-      case None => probe.filter(col("cls") === "gone").select("item_key")
+    // ---- the scope, chosen once ---------------------------------------
+    val scope: Scope = lists match {
+      case Some(l) =>
+        // the ≤cap suspect verdicts are collected, not counted
+        val v = keysBy("cls2", verdicts, byCls("suspect"))
+        new KeyScope(spark, l("changed") ++ v("changed"), l("gone"),
+          v("refreshed"))
+      case None if byCls("suspect") == 0 =>
+        new FrameScope(hold(probeKeys("changed")), probeKeys("gone"),
+          Source.keysDf(spark, Nil), 0L)
+      case None =>
+        val level2 = hold(verdicts)
+        def level2Keys(c: String) =
+          level2.filter(col("cls2") === c).select("item_key")
+        val nRefreshed = level2Keys("refreshed").count()
+        new FrameScope(
+          hold(probeKeys("changed").union(level2Keys("changed"))),
+          probeKeys("gone"),
+          if (nRefreshed == 0) Source.keysDf(spark, Nil)
+          else level2Keys("refreshed"),
+          nRefreshed)
     }
+    val nChanged = byCls("changed") + byCls("suspect") - scope.nRefreshed
 
-    // pure no-op run: nothing changed, appeared, vanished or needs a
-    // memo refresh — skip the transform, reconcile AND the snapshot
-    // commit entirely (a live loop over an unchanged corpus must not
-    // rewrite metadata every tick). A PENDING table transition must
-    // still execute and commit even with zero item changes (e.g. a
-    // bucket-layout change before any items exist, or after all items
-    // were removed) — otherwise it is re-planned forever.
-    if (nChanged == 0 && byCls("gone") == 0 && nRefreshed == 0) {
+    // ---- the no-op exit -----------------------------------------------
+    // nothing changed, appeared, vanished or needs a memo refresh: skip
+    // the transform, reconcile AND the snapshot commit (a live loop
+    // over an unchanged corpus must not rewrite metadata every tick).
+    // A PENDING table transition must still execute and commit even
+    // with zero item changes (e.g. a bucket-layout change before any
+    // items exist, or after all items were removed) — otherwise it is
+    // re-planned forever.
+    if (nChanged == 0 && byCls("gone") == 0 && scope.nRefreshed == 0) {
       if (planned.pendingTransition) {
         if (planned.destructive) target.truncate(spark)
         applyAttachments(spark, planned)
         st.commit(targetStateTable(spark, planned).toMap)
         afterCommit.foreach(_.apply())
       }
-      Seq(listing, probe, level2, changedKeys, loaded).foreach(_.unpersist())
-      return RunStats(nTotal, byCls("unchanged") + survivors,
-        0, 0, 0, 0, 0, 0, 0)
+      held.foreach(_.unpersist())
+      return RunStats.Empty.copy(components = nTotal,
+        unchanged = byCls("unchanged") + survivors)
     }
 
     // ---- the expensive transform, on changed components only ----------
@@ -678,26 +700,11 @@ final class Flow(
     // definition, and a stage that cannot run on empty input — a
     // class declaredSchema explicitly tolerates — must not crash the
     // GC/refresh path.
-    // literalized scope: the load set was exactly the changed keys, so
-    // a scan-level IN filter (defensive — the load contract already
-    // bounds it) replaces the semi-join and its broadcast build
-    val input = scopeLists match {
-      case Some((changedL, _)) =>
-        loaded.filter(col("item_key").isin(changedL: _*))
-          .drop("__content_fp")
-      case None =>
-        loaded.join(changedKeys, Seq("item_key"), "left_semi")
-          .drop("__content_fp")
-    }
+    val input = scope.restrict(loaded).drop("__content_fp")
     val desiredAll =
       if (nChanged == 0)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("item_key",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("row_key",
-              org.apache.spark.sql.types.StringType))))
+        emptyDf(spark, StructType(
+          Seq("item_key", "row_key").map(StructField(_, StringType))))
       else stages.foldLeft(input)((df, stage) => stage.fn(df))
     require(desiredAll.columns.contains("item_key") &&
       desiredAll.columns.contains("row_key"),
@@ -709,10 +716,10 @@ final class Flow(
     // state table, inspectable via [[errors]], and counted in stats
     val hasErrors = desiredAll.columns.contains("__error")
     val failed =
-      if (hasErrors) desiredAll.filter(col("__error").isNotNull)
+      if (hasErrors) hold(desiredAll.filter(col("__error").isNotNull)
         .select(col("item_key"), col("row_key"),
-          col("__error").cast("string").as("error")).cache()
-      else spark.emptyDataFrame
+          col("__error").cast("string").as("error")))
+      else emptyDf(spark, ErrorsSchema)
     val nFailed = if (hasErrors) failed.count() else 0L
     val desiredRaw =
       if (hasErrors) desiredAll.filter(col("__error").isNull).drop("__error")
@@ -726,104 +733,45 @@ final class Flow(
       if (valueCols.isEmpty) md5(lit("{}"))
       else md5(to_json(struct(valueCols.map(col).toSeq: _*),
         FnMemo.JsonOptions))
-    val desired = desiredRaw
-      .withColumn("value_fp", valueFp)
-      .cache()
+    val desired = hold(desiredRaw.withColumn("value_fp", valueFp))
 
     // ---- reconcile: classify against the tracking baseline ------------
     // (reference pre_commit reconcile, execution.rs:757; row handler
     // semantics postgres/_target.py:850-881). Under a *destructive*
     // table transition the container is about to be recreated: the
-    // tracking baseline is void — every desired row inserts, and stale
-    // rows need no per-row deletes (the recreation cleans them up,
-    // reference test_provider_generation.py:199-215). Under a *lossy*
-    // one the container may have dropped column data the fingerprints
-    // can't see — matching rows re-upsert defensively
-    // (prev_may_be_missing semantics, statediff.py:160-166).
-    val scopeKeys = scopeLists match {
-      case Some((changedL, goneL)) =>
-        Source.keysDf(spark, (changedL ++ goneL).distinct)
-      case None => changedKeys.union(goneKeys)
-    }
-    // bootstrap shortcut (r18), the tracking twin of the memo probe's:
-    // with no committed tracking rows (or a destructive transition —
-    // the baseline is void either way) the reconcile's full-outer join
-    // would shuffle the whole desired set against an empty side to
-    // conclude "every row inserts". Skip the scope collect, the
-    // tracking read and the join outright — zero exchanges on the
-    // bootstrap reconcile.
-    val trackingEmpty = planned.destructive ||
-      !st.tableExists("tracking") || st.rowCount("tracking").contains(0L)
-    // scope as a bounded driver list when small (the overwhelmingly
-    // common delta run): enables the pruned below-merge tracking
-    // read. Collected ONLY under the declaration that uses it — an
-    // undeclared flow would pay the collect job for nothing. The cap
-    // is tighter than KeyedFetch's: these literals become a per-RUN
-    // IN plan over the tracking scan, and past a few thousand the
-    // optimizer pass costs more than the pruning saves — a scope that
-    // large is also no longer "small against the table", where the
-    // legacy semi-join is proportionally fine.
-    val scopeList: Option[Seq[String]] =
-      if (trackingEmpty || !rowKeyOwnedByItem ||
-          nChanged + byCls("gone") > Flow.MaxScopeLiterals) None
-      else scopeLists match {
-        // already collected once for the literalized scope — reuse
-        case Some((changedL, goneL)) => Some((changedL ++ goneL).distinct)
-        case None => Some(scopeKeys.select(col("item_key").cast("string"))
-          .distinct().collect().map(_.getString(0)).toSeq)
-      }
-    lazy val trackedInScope0 = scopeList match {
-      case Some(ks) if rowKeyOwnedByItem =>
-        // each row_key's item is immutable by declaration, so an item
-        // filter below the latest-wins window keeps exactly the scope
-        // groups' full histories — O(scope) read against the clustered
-        // base instead of materializing + shuffling the whole table
-        if (ks.isEmpty)
-          spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              TrackingSchema)
-            .select(col("row_key"), col("value_fp").as("prev_fp"),
-              col("item_key").as("prev_item"))
-        else st.readWhere("tracking", TrackingSchema,
-            col("item_key").isin(ks: _*))
-          .select(col("row_key"), col("value_fp").as("prev_fp"),
-            col("item_key").as("prev_item"))
-      case _ =>
-        st.read("tracking", TrackingSchema)
-          .join(scopeKeys, Seq("item_key"), "left_semi")
-          .select(col("row_key"), col("value_fp").as("prev_fp"),
-            col("item_key").as("prev_item"))
-    }
-    val actions = (
-      if (trackingEmpty)
-        // no baseline ⇒ every desired row inserts, nothing deletes —
-        // identical to the full_outer against an empty side, minus
-        // its two sort-merge exchanges over the desired set
-        desired.select(col("item_key"), col("row_key"), col("value_fp"))
-          .withColumn("prev_fp", lit(null).cast("string"))
-          .withColumn("prev_item", lit(null).cast("string"))
-          .withColumn("action", lit("insert"))
-      else desired
-        .select(col("item_key"), col("row_key"), col("value_fp"))
-        .join(trackedInScope0, Seq("row_key"), "full_outer")
-        .withColumn("action",
-          when(col("value_fp").isNull, lit("delete"))     // tracked, not redeclared
-            .when(col("prev_fp").isNull, lit("insert"))
-            .when(lit(planned.lossy) ||
-              col("prev_fp") =!= col("value_fp"), lit("update"))
-            .otherwise(lit("noop")))
-      ).cache()
+    // tracking baseline is void — an empty local relation, so every
+    // desired row inserts and stale rows need no per-row deletes (the
+    // recreation cleans them up, reference
+    // test_provider_generation.py:199-215). Under a *lossy* one the
+    // container may have dropped column data the fingerprints can't
+    // see — matching rows re-upsert defensively (prev_may_be_missing
+    // semantics, statediff.py:160-166). Against an empty baseline
+    // (this, or no tracking rows committed yet) Catalyst folds the
+    // full outer join into a projection of the desired rows.
+    val tracked =
+      (if (planned.destructive) emptyDf(spark, TrackingSchema)
+       else scope.tracking(st))
+        .select(col("row_key"), col("value_fp").as("prev_fp"),
+          col("item_key").as("prev_item"))
+    val actions = hold(desired
+      .select(col("item_key"), col("row_key"), col("value_fp"))
+      .join(tracked, Seq("row_key"), "full_outer")
+      .withColumn("action",
+        when(col("value_fp").isNull, lit("delete"))     // tracked, not redeclared
+          .when(col("prev_fp").isNull, lit("insert"))
+          .when(lit(planned.lossy) ||
+            col("prev_fp") =!= col("value_fp"), lit("update"))
+          .otherwise(lit("noop"))))
     // the ≤4-row action histogram is collected BEFORE the apply ON
     // PURPOSE, and not only for RunStats: this collect is the cache
-    // MATERIALIZATION point for `actions`. An r19 experiment moved it
-    // after target.apply (guide §1.2 "don't pay a standalone job") and
-    // the nightly gates' sum-of-jobs DOUBLED: on shuffle-free reconcile
-    // plans (the bootstrap shortcut path — a narrow pipeline through
-    // the transform UDFs) the apply's probes scan SUBSETS of
-    // partitions, InMemoryRelation materializes per partition, and
-    // with no shuffle files to reuse every partial scan re-executed
-    // the expensive transform. One full pass here pins the whole
-    // cache; every apply/commit scan after it is a memory read.
+    // MATERIALIZATION point for `actions`. Moved after target.apply,
+    // it doubled the nightly gates' sum-of-jobs: on shuffle-free reconcile
+    // plans (an empty baseline — a narrow pipeline through the
+    // transform UDFs) the apply's probes scan SUBSETS of partitions,
+    // InMemoryRelation materializes per partition, and with no shuffle
+    // files to reuse every partial scan re-executed the expensive
+    // transform. One full pass here pins the whole cache; every
+    // apply/commit scan after it is a memory read.
     val byAction = actions.groupBy("action").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
 
@@ -855,27 +803,13 @@ final class Flow(
     // bulk of every family carries forward as hard links
     // (StateStore.commitTables). Unchanged components never appear in
     // any segment: their memo/tracking/state rows stay physically in
-    // place in the base.
-    // an empty refresh set commits an empty LOCAL frame instead of a
-    // two-join plan that provably yields zero rows — those joins'
-    // broadcast builds were whole Spark jobs inside every commit write
-    val refreshedMemo =
-      if (nRefreshed == 0)
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          ComponentMemoSchema)
-      else memo.drop("memo_state")
-      .join(level2.filter(col("cls2") === "refreshed").select("item_key"),
-        Seq("item_key"), "left_semi")
-      .join(listing.select(col("item_key"), col("memo_state")), Seq("item_key"))
+    // place in the base. An empty refresh set is a local relation, so
+    // its two joins fold away instead of costing broadcast-build jobs.
+    val refreshedMemo = memo.drop("memo_state")
+      .join(scope.refreshed, Seq("item_key"), "left_semi")
+      .join(listing, Seq("item_key"))
       .select("item_key", "processor_fp", "memo_state", "content_fp")
-    val recomputedBase = (scopeLists match {
-      case Some((changedL, _)) =>
-        listing.select(col("item_key"), col("memo_state"))
-          .filter(col("item_key").isin(changedL: _*))
-      case None =>
-        listing.select(col("item_key"), col("memo_state"))
-          .join(changedKeys, Seq("item_key"), "left_semi")
-    })
+    val recomputedBase = scope.restrict(listing)
     // a source WITHOUT a content fingerprint stores null content_fp
     // for every row — the loadedFps join would broadcast-build and
     // join only to attach that constant
@@ -888,7 +822,7 @@ final class Flow(
         .select(col("item_key"), lit(pFp).as("processor_fp"),
           col("memo_state"), col("__content_fp").as("content_fp"))
     val memoCommit = StateStore.Delta(
-      refreshedMemo.unionByName(recomputedMemo), goneKeys)
+      refreshedMemo.unionByName(recomputedMemo), scope.gone)
 
     // tracking: every desired row upserts — latest-wins on row_key IS
     // the ownership preemption (reference execution.rs:771-833): a
@@ -905,34 +839,23 @@ final class Flow(
     // __error must still clear the stale failure records of the
     // components that recomputed cleanly (and of deleted components) —
     // tombstone every scope component's previous failures, upsert the
-    // new ones (upserts shadow their own tombstones in-segment)
+    // new ones (upserts shadow their own tombstones in-segment). No
+    // new failures AND no stale scope failures to clear ⇒ skip the
+    // family entirely — a zero-row Delta segment per run is pure
+    // segment churn (and periodic no-op compactions). The probe is a
+    // head(1) over the tiny errors table, planned away when it is
+    // absent.
+    val errorTombstones = st.read("errors", ErrorsSchema)
+      .join(scope.keys, Seq("item_key"), "left_semi")
+      .select("item_key", "row_key")
     val errorTables: Map[String, StateStore.TableCommit] =
-      if (!hasErrors && !st.tableExists("errors")) Map.empty
-      else {
-        val prevErrors = st.read("errors", ErrorsSchema)
-        val tombstones = prevErrors
-          .join(scopeKeys, Seq("item_key"), "left_semi")
-          .select("item_key", "row_key")
-        // no new failures AND no stale scope failures to clear ⇒ skip
-        // the family entirely — a zero-row Delta segment per run is
-        // pure segment churn (and periodic no-op compactions). The
-        // probe is a head(1) over the tiny errors table.
-        if (!hasErrors && tombstones.isEmpty) Map.empty
-        else {
-          val newFailed =
-            if (hasErrors) failed
-            else spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              ErrorsSchema)
-          Map("errors" -> StateStore.Delta(newFailed, tombstones))
-        }
-      }
+      if (!hasErrors && errorTombstones.isEmpty) Map.empty
+      else Map("errors" -> StateStore.Delta(failed, errorTombstones))
     // target_state is rewritten ONLY when the transition is pending
     // (record/attachment/generation changed, or never stored) — a
     // steady-state run's record is byte-identical to the stored one,
     // which carries forward as a hard link; rewriting it anyway cost
-    // every engine pass one whole Spark job for a 1-row parquet (r18
-    // batch 2, guide §1.2 step 1: per-pass fixed overhead).
+    // every engine pass one whole Spark job for a 1-row parquet.
     val stateTables: Map[String, StateStore.TableCommit] = errorTables ++
       Map("component_memo" -> memoCommit, "tracking" -> trackingCommit) ++
       (if (planned.pendingTransition) targetStateTable(spark, planned)
@@ -940,17 +863,12 @@ final class Flow(
         .map { case (n, df) => n -> StateStore.Full(df) } ++
       userStateFn.map { fn =>
       val prev = st.read("user_state", UserStateSchema)
-      val prevChanged = scopeLists match {
-        case Some((changedL, _)) =>
-          prev.filter(col("item_key").isin(changedL: _*))
-        case None => prev.join(changedKeys, Seq("item_key"), "left_semi")
-      }
-      val declared = fn(input, prevChanged)
+      val declared = fn(input, scope.restrict(prev))
         .select(col("item_key"), col("state_key"), col("value").cast("string"))
       // unchanged components keep state; changed components' state is
       // exactly what they redeclared; gone components' state is pruned
       "user_state" -> (StateStore.Delta(declared,
-        prev.join(scopeKeys, Seq("item_key"), "left_semi")
+        prev.join(scope.keys, Seq("item_key"), "left_semi")
           .select("item_key", "state_key")): StateStore.TableCommit)
     }
     // the memo row count advances by exactly (new items − gone items):
@@ -964,7 +882,7 @@ final class Flow(
     val stats = RunStats(
       components = nTotal - byCls("gone"),
       unchanged = byCls("unchanged") + survivors,
-      refreshed = nRefreshed,
+      refreshed = scope.nRefreshed,
       recomputed = nChanged,
       deletedComponents = byCls("gone"),
       rowsInserted = byAction("insert"),
@@ -972,8 +890,7 @@ final class Flow(
       rowsDeleted = byAction("delete"),
       rowsNoop = byAction("noop"),
       rowsFailed = nFailed)
-    Seq(listing, probe, level2, changedKeys, loaded, desired, actions, failed)
-      .foreach(_.unpersist())
+    held.foreach(_.unpersist())
     stats
   }
 
@@ -997,8 +914,11 @@ final class Flow(
       case w: WatchableSource =>
         val watcher = w.watch() // armed/resumed BEFORE any scan
         try {
-          val bootstrap =
-            state(spark).read("component_memo", ComponentMemoSchema).isEmpty
+          // the exact count sidecar answers without a Spark job; only a
+          // legacy snapshot without one reads the memo
+          val st = state(spark)
+          val bootstrap = st.rowCount("component_memo").fold(
+            st.read("component_memo", ComponentMemoSchema).isEmpty)(_ == 0L)
           var acc: Option[RunStats] = if (bootstrap) Some(run(spark)) else None
           var done = false
           var ticks = 0
@@ -1009,7 +929,7 @@ final class Flow(
             else if (delta.isEmpty) done = true
             else acc = Some(mergeStats(acc, runDelta(spark, delta)))
           }
-          acc.getOrElse(RunStats(0, 0, 0, 0, 0, 0, 0, 0, 0))
+          acc.getOrElse(RunStats.Empty)
         } finally watcher.close()
       case _ => run(spark)
     }
@@ -1062,7 +982,8 @@ final class Flow(
         val stats =
           if (first || overflow) { first = false; run(spark) }
           else if (delta.isEmpty)
-            RunStats(lastComponents, lastComponents, 0, 0, 0, 0, 0, 0, 0)
+            RunStats.Empty.copy(components = lastComponents,
+              unchanged = lastComponents)
           else runDelta(spark, delta)
         lastComponents = stats.components
         onStats(stats)
@@ -1159,8 +1080,10 @@ final class Flow(
 }
 
 object Flow {
-  /** Scope-size bound for the reconcile's pruned tracking read (see
-    * `scopeList` in runImpl): under it, scope keys become an IN plan
-    * the parquet scans prune by; past it the legacy semi-join wins. */
+  /** Scope-size bound for a pass's key-list scope (changed + suspect +
+    * gone items): under it the scope is collected once into driver
+    * lists that become IN plans the parquet scans prune by and local
+    * key relations; past it the per-run optimizer cost of the literals
+    * outgrows the pruning, and the scope stays frames (semi-joins). */
   val MaxScopeLiterals = 4096
 }

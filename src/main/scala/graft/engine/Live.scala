@@ -174,7 +174,7 @@ final class LiveFlowOperator(flow: Flow, spark: SparkSession) {
   def flush(): RunStats = synchronized {
     val batch = pending.asScala.toVector
     batch.foreach(pending.remove)
-    if (batch.isEmpty) RunStats(0, 0, 0, 0, 0, 0, 0, 0, 0)
+    if (batch.isEmpty) RunStats.Empty
     else flow.runDelta(spark, batch)
   }
 

@@ -71,15 +71,12 @@ final class StateStore(spark: SparkSession, rootDir: String) {
       }
       .sortBy(_._2)
 
-  private def emptyDf(schema: StructType): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
   private def rootKey: String = root.toAbsolutePath.toString
 
-  /** Read a state table at the current version (empty with the right
-    * schema when absent). Base + delta segments merge latest-wins on
-    * the family's merge keys; tombstones are filtered.
+  /** Read a state table at the current version (an empty local
+    * relation with the right schema when absent or counted empty).
+    * Base + delta segments merge latest-wins on the family's merge
+    * keys; tombstones are filtered.
     *
     * The merged view is persisted and memoized JVM-wide by
     * (root, version, table): snapshots are immutable, so every read
@@ -94,7 +91,8 @@ final class StateStore(spark: SparkSession, rootDir: String) {
     val base = root.resolve(s"v=$v").resolve(table)
     val hasBase = v > 0 && Files.exists(base)
     val segs = segmentsOf(table, v)
-    if (!hasBase && segs.isEmpty) emptyDf(schema)
+    if (!hasBase && segs.isEmpty || countsAt(v).get(table).contains(0L))
+      emptyDf(spark, schema)
     else if (segs.isEmpty) spark.read.schema(schema).parquet(base.toString)
     else {
       val key = (rootKey, v, table)
@@ -171,7 +169,8 @@ final class StateStore(spark: SparkSession, rootDir: String) {
     val base = root.resolve(s"v=$v").resolve(table)
     val hasBase = v > 0 && Files.exists(base)
     val segs = segmentsOf(table, v)
-    if (!hasBase && segs.isEmpty) emptyDf(schema).filter(pred)
+    if (!hasBase && segs.isEmpty || countsAt(v).get(table).contains(0L))
+      emptyDf(spark, schema)
     else if (segs.isEmpty)
       spark.read.schema(schema).parquet(base.toString).filter(pred)
     else {
@@ -242,7 +241,7 @@ final class StateStore(spark: SparkSession, rootDir: String) {
     val (legacy, shards) = tables.partition(_ == family)
     def readAll(ts: Array[String]): DataFrame =
       ts.map(read(_, schema)).reduce(_.unionByName(_))
-    if (tables.isEmpty) emptyDf(schema)
+    if (tables.isEmpty) emptyDf(spark, schema)
     else if (legacy.isEmpty || shards.isEmpty) readAll(tables)
     else {
       // a scope that has migrated to its own shard was SEEDED from the
@@ -508,6 +507,14 @@ final class StateStore(spark: SparkSession, rootDir: String) {
 
 object StateStore {
   val CurrentFile = "_CURRENT"
+
+  /** An empty LOCAL relation: Catalyst's PropagateEmptyRelation folds
+    * joins, filters and grouped aggregates over it at plan time, so a
+    * read of known-empty state costs no scan, exchange or job. */
+  private[engine] def emptyDf(spark: SparkSession, schema: StructType)
+      : DataFrame =
+    spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
 
   /** JVM-wide memo of persisted merged reads, keyed by
     * (state root, snapshot version, table) — see [[StateStore.read]].

@@ -88,6 +88,29 @@ class ChangeFeedSpec extends SparkSpec {
     assert(flow.runFeed(spark).isNoop)
   }
 
+  test("a quiet runFeed on a committed flow launches no Spark job") {
+    val base = tmp("cf-quiet").resolve("t").toString
+    baseRows(50, Set.empty).write.parquet(base)
+    val feed = new ScriptedFeed
+    val flow = new Flow("cf-quiet",
+      ChangeFeedSource(TableSource(sp => sp.read.parquet(base), "doc_id"),
+        () => feed.watch()),
+      Seq(CocoFn("emit", 1, fn = df => df.select(col("item_key"),
+        col("item_key").as("row_key"), col("v")))),
+      ParquetTableTarget(tmp("cf-quiet-out").resolve("t").toString, 2),
+      tmp("cf-quiet-state").toString)
+    assert(flow.runFeed(spark).recomputed == 50)
+    baseRows(50, Set(7L, 8L)).write.mode("overwrite").parquet(base)
+    feed.push(Seq("7", "8"))
+    assert(flow.runFeed(spark).recomputed == 2)
+
+    // the bootstrap test reads the memo's count sidecar: an emptiness
+    // check over the memo itself costs one job on every call
+    val (quiet, jobs) = jobsWhile(flow.runFeed(spark))
+    assert(quiet.isNoop, s"$quiet")
+    assert(jobs == 0, s"a quiet runFeed launched $jobs Spark jobs")
+  }
+
   test("the delta re-stat pushes the key filter into the parquet scan") {
     val base = tmp("cf-push").resolve("t").toString
     baseRows(100, Set.empty).write.parquet(base)

@@ -391,28 +391,6 @@ class DeltaTargetSpec extends graft.SparkSpec {
       .count() == 1)
   }
 
-  /** Jobs launched while building `body`'s DataFrame, counted by job
-    * group. A sentinel job closes the group: listener events arrive in
-    * order, so once the sentinel is visible every earlier job is too. */
-  private def jobsWhile[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"graft-read-plan-${System.nanoTime}"
-    sc.setJobGroup(group, "build a target read")
-    val (out, sentinel) =
-      try {
-        val o = body
-        val f = sc.parallelize(Seq(1), 1).countAsync()
-        f.get()
-        (o, f.jobIds.head)
-      } finally sc.clearJobGroup()
-    val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-    while (!sc.statusTracker.getJobIdsForGroup(group).contains(sentinel) &&
-      System.nanoTime < deadline) Thread.sleep(20)
-    val ids = sc.statusTracker.getJobIdsForGroup(group)
-    assert(ids.contains(sentinel), s"sentinel job $sentinel never reported")
-    (out, ids.length - 1)
-  }
-
   test("reads use the _schema.json sidecar: no inference job, same rows") {
     import spark.implicits._
     val work = tmp()

@@ -381,6 +381,94 @@ class FlowSpec extends SparkSpec {
     assert(ownership == Seq("user"))
   }
 
+  test("key-list and frame scopes agree: exact stats, target = Transform(source)") {
+    import spark.implicits._
+    val n = Flow.MaxScopeLiterals + 50
+    // id -> (v, t): the stage reads v; t is a touch that moves the
+    // memo state without changing the content
+    var rows = Map.empty[Long, (Long, Long)]
+    def table(sp: SparkSession): DataFrame =
+      rows.toSeq.map { case (k, (v, t)) => (k, v, t) }.toDF("id", "v", "t")
+    // a content fingerprint over v alone: a touched row is a level-2
+    // suspect that refreshes (TableSource has no level 2 and recomputes)
+    val touchAware = new Source {
+      def list(sp: SparkSession) = table(sp).select(
+        col("id").cast("string").as("item_key"),
+        concat_ws(":", col("v"), col("t")).as("memo_state"))
+      def load(sp: SparkSession, keys: DataFrame) = table(sp)
+        .withColumn("item_key", col("id").cast("string"))
+        .join(keys, Seq("item_key"), "left_semi")
+      def contentFpOf = Some(md5(col("v").cast("string")))
+    }
+    val stage = CocoFn("double", 1, fn = df => df.select(col("item_key"),
+      concat(col("item_key"), lit(":0")).as("row_key"),
+      (col("v") * 2).as("w")))
+    for (owned <- Seq(false, true);
+         source <- Seq(TableSource(sp => table(sp), "id"), touchAware)) {
+      val level2 = source.contentFpOf.isDefined
+      val where = s"rowKeyOwnedByItem=$owned, level 2=$level2"
+      val flow = new Flow("scopes", source, Seq(stage),
+        ParquetTableTarget(tmpDir("scope-tgt").toString, numBuckets = 4),
+        tmpDir("scope-st").toString, rowKeyOwnedByItem = owned)
+      def pass(rewrite: Range, touch: Range, delete: Seq[Long])(
+          want: RunStats): Unit = {
+        rows = rows.map { case (k, (v, t)) => k ->
+          (if (rewrite.contains(k)) v + 1 else v,
+           if (touch.contains(k)) t + 1 else t) } -- delete
+        val got = flow.run(spark)
+        assert(got == want, where)
+        val served = flow.target.read(spark).select("row_key", "w").collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        assert(served == rows.map { case (k, (v, _)) => s"$k:0" -> v * 2 },
+          where)
+      }
+      rows = (0L until n).map(_ -> (0L, 0L)).toMap
+      pass(0 until 0, 0 until 0, Nil)(RunStats(n, 0, 0, n, 0, n, 0, 0, 0))
+      // past the literal cap: a frame scope
+      val big = Flow.MaxScopeLiterals + 10
+      pass(0 until big, big until big + 30, Nil)(
+        if (level2) RunStats(n, n - big - 30, 30, big, 0, 0, big, 0, 0)
+        else RunStats(n, n - big - 30, 0, big + 30, 0, 0, big, 0, 30))
+      // within the cap: a key-list scope
+      pass(n - 5 until n, n - 7 until n - 5, Seq(0L, 1L, 2L))(
+        if (level2) RunStats(n - 3, n - 10, 2, 5, 3, 0, 5, 3, 0)
+        else RunStats(n - 3, n - 10, 0, 7, 3, 0, 5, 3, 2))
+    }
+  }
+
+  test("job-count pins: bootstrap run, 3-key runDelta, touch refresh") {
+    // jobs counted by jobsWhile (this thread's job group). Before
+    // runImpl held its scope in one Scope value, these cases launched
+    // 20 (bootstrap), 29 (runDelta) and 35 (touch) jobs.
+    val (src, tgt, st) = (tmpDir("pin-src"), tmpDir("pin-tgt"), tmpDir("pin-st"))
+    seed(src)
+    val flow = mkFlow(src, tgt, st)
+    val (cold, coldJobs) = jobsWhile(flow.run(spark))
+    assert(cold.recomputed == 3, s"$cold")
+    val aPath = src.resolve("a.md")
+    Files.setLastModifiedTime(aPath,
+      java.nio.file.attribute.FileTime.fromMillis(
+        Files.getLastModifiedTime(aPath).toMillis + 5000))
+    val (touched, touchJobs) = jobsWhile(flow.run(spark))
+    assert(touched.refreshed == 1 && touched.recomputed == 0, s"$touched")
+
+    import spark.implicits._
+    var rows = (0 until 20).map(i => (i.toLong, i.toLong))
+    val keyed = new Flow("pins", TableSource(_ => rows.toDF("id", "v"), "id"),
+      Seq(CocoFn("emit", 1, fn = df => df.select(col("item_key"),
+        col("item_key").as("row_key"), col("v")))),
+      ParquetTableTarget(tmpDir("pin-ktgt").toString, numBuckets = 2),
+      tmpDir("pin-kst").toString, rowKeyOwnedByItem = true)
+    keyed.run(spark)
+    rows = rows.map { case (k, v) => (k, if (Set(3L, 8L, 13L)(k)) v + 1 else v) }
+    val (delta, deltaJobs) = jobsWhile(keyed.runDelta(spark, Seq("3", "8", "13")))
+    assert(delta.recomputed == 3 && delta.unchanged == 17, s"$delta")
+
+    info(s"jobs: bootstrap $coldJobs, runDelta $deltaJobs, touch $touchJobs")
+    assert(coldJobs <= 20 && deltaJobs <= 29 && touchJobs <= 35,
+      s"bootstrap $coldJobs, runDelta $deltaJobs, touch $touchJobs")
+  }
+
   test("drop reverts all target rows and clears state") {
     val (src, tgt, st) = (tmpDir("drop-src"), tmpDir("drop-tgt"), tmpDir("drop-st"))
     seed(src)

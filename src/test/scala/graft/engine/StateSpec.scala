@@ -177,4 +177,38 @@ class StateSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getLong(1)).toMap ==
       Map("alpha" -> 2L, "beta" -> 3L))
   }
+
+  test("known-empty state reads as a local relation; an uncounted table reads parquet") {
+    import StateStore._
+    val store = new StateStore(spark, tmp("empty-reads").toString)
+    val probe = spark.range(100).select(col("id").cast("string").as("row_key"))
+    def exchanges(df: org.apache.spark.sql.DataFrame): Boolean =
+      probe.join(df, Seq("row_key"), "full_outer")
+        .queryExecution.executedPlan.toString.contains("Exchange")
+
+    // absent table
+    val absent = store.read("tracking", TrackingSchema)
+    assert(absent.isLocal && absent.count() == 0)
+    assert(store.readWhere("tracking", TrackingSchema,
+      col("item_key") === "a").isLocal)
+    assert(!exchanges(absent), "a full outer join against an absent table")
+
+    // committed with 0 rows: the exact count sidecar says empty
+    store.commitTables(Map("tracking" -> Full(emptyDf(spark, TrackingSchema))))
+    assert(store.tableExists("tracking") &&
+      store.rowCount("tracking").contains(0L))
+    val counted = store.read("tracking", TrackingSchema)
+    assert(counted.isLocal && counted.count() == 0)
+    assert(store.readWhere("tracking", TrackingSchema,
+      col("item_key") === "a").isLocal)
+    assert(!exchanges(counted), "a full outer join against a count-0 table")
+
+    // a table without a count sidecar reads through parquet, empty or not
+    store.commitTables(Map("target_state" ->
+      Full(emptyDf(spark, TargetStateSchema))))
+    assert(store.rowCount("target_state").isEmpty)
+    val uncounted = store.read("target_state", TargetStateSchema)
+    assert(!uncounted.isLocal && uncounted.count() == 0)
+    assert(exchanges(uncounted.select(col("main").as("row_key"))))
+  }
 }
