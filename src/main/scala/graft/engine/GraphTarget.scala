@@ -20,9 +20,8 @@ import org.apache.spark.sql.functions._
 final case class GraphTarget(
     nodesDir: String, edgesDir: String, numBuckets: Int = 16) extends Target {
 
-  // delta-log: record/relation edits append O(delta) segments
-  private val nodes = ParquetTableTarget(nodesDir, numBuckets, deltaLog = true)
-  private val edges = ParquetTableTarget(edgesDir, numBuckets, deltaLog = true)
+  private val nodes = ParquetTableTarget(nodesDir, numBuckets)
+  private val edges = ParquetTableTarget(edgesDir, numBuckets)
 
   override def containerSignature: String =
     s"graph;${nodes.containerSignature};${edges.containerSignature}"

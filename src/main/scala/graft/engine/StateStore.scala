@@ -107,29 +107,8 @@ final class StateStore(spark: SparkSession, rootDir: String) {
         else { StateStore.readCacheDrop(key, cached); null }
       if (cachedLive != null) cachedLive
       else {
-        import org.apache.spark.sql.functions._
-        val keys = StateStore.mergeKeysOf(table)
-        require(keys.nonEmpty,
-          s"state table $table has delta segments but no registered merge keys")
-        val segSchema = StructType(schema.fields :+
-          StructField(DelCol, org.apache.spark.sql.types.BooleanType))
-        val parts =
-          (if (hasBase)
-            Seq(spark.read.schema(schema).parquet(base.toString)
-              .withColumn(DelCol, lit(false)).withColumn(SeqCol, lit(0L)))
-          else Seq.empty) ++
-          segs.map { case (name, seq) =>
-            spark.read.schema(segSchema)
-              .parquet(root.resolve(s"v=$v").resolve(name).toString)
-              .withColumn(SeqCol, lit(seq))
-          }
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(keys.map(col): _*).orderBy(col(SeqCol).desc)
         StateStore.noteBuild(rootKey)
-        val merged = parts.reduce(_.unionByName(_))
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1 && !col(DelCol))
-          .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+        val merged = mergedView(table, schema, v, hasBase, segs, None)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val prior = StateStore.readCachePutIfAbsent(key, merged)
         if (prior != null) { merged.unpersist(false); prior } else merged
@@ -164,7 +143,6 @@ final class StateStore(spark: SparkSession, rootDir: String) {
     * never surface. */
   def readWhere(table: String, schema: StructType,
       pred: org.apache.spark.sql.Column): DataFrame = {
-    import org.apache.spark.sql.functions._
     val v = currentVersion
     val base = root.resolve(s"v=$v").resolve(table)
     val hasBase = v > 0 && Files.exists(base)
@@ -173,29 +151,40 @@ final class StateStore(spark: SparkSession, rootDir: String) {
       emptyDf(spark, schema)
     else if (segs.isEmpty)
       spark.read.schema(schema).parquet(base.toString).filter(pred)
-    else {
-      val keys = StateStore.mergeKeysOf(table)
-      require(keys.nonEmpty,
-        s"state table $table has delta segments but no registered merge keys")
-      val segSchema = StructType(schema.fields :+
-        StructField(DelCol, org.apache.spark.sql.types.BooleanType))
-      val parts =
-        (if (hasBase)
-          Seq(spark.read.schema(schema).parquet(base.toString)
-            .withColumn(DelCol, lit(false)).withColumn(SeqCol, lit(0L)))
-        else Seq.empty) ++
-        segs.map { case (name, seq) =>
-          spark.read.schema(segSchema)
-            .parquet(root.resolve(s"v=$v").resolve(name).toString)
-            .withColumn(SeqCol, lit(seq))
-        }
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(keys.map(col): _*).orderBy(col(SeqCol).desc)
-      parts.map(_.filter(pred || col(DelCol))).reduce(_.unionByName(_))
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1 && !col(DelCol))
-        .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    }
+    else mergedView(table, schema, v, hasBase, segs, Some(pred))
+  }
+
+  /** The merge plan shared by [[read]] and [[readWhere]]: base ∪
+    * segments of `table` at version `v`, latest-wins on the family's
+    * merge keys, tombstones filtered. `pred` restricts every part
+    * BELOW the window; tombstones pass it (see [[readWhere]]). */
+  private def mergedView(table: String, schema: StructType, v: Long,
+      hasBase: Boolean, segs: Seq[(String, Long)],
+      pred: Option[org.apache.spark.sql.Column]): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val keys = StateStore.mergeKeysOf(table)
+    require(keys.nonEmpty,
+      s"state table $table has delta segments but no registered merge keys")
+    val segSchema = StructType(schema.fields :+
+      StructField(DelCol, org.apache.spark.sql.types.BooleanType))
+    val snapshot = root.resolve(s"v=$v")
+    val parts =
+      (if (hasBase)
+        Seq(spark.read.schema(schema).parquet(snapshot.resolve(table).toString)
+          .withColumn(DelCol, lit(false)).withColumn(SeqCol, lit(0L)))
+      else Seq.empty) ++
+      segs.map { case (name, seq) =>
+        spark.read.schema(segSchema)
+          .parquet(snapshot.resolve(name).toString)
+          .withColumn(SeqCol, lit(seq))
+      }
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(keys.map(col): _*).orderBy(col(SeqCol).desc)
+    pred.fold(parts)(p => parts.map(_.filter(p || col(DelCol))))
+      .reduce(_.unionByName(_))
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1 && !col(DelCol))
+      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
   }
 
   /** Whether `table` exists (base or any delta segment) in the

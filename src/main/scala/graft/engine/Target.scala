@@ -219,40 +219,28 @@ object WireTarget {
     lit(false) -> !isNode, lit(false) -> isNode)
 }
 
-/** Keyed parquet table with hash-bucketed copy-on-write — the MERGE
-  * applier (reference row reconcile + batched
-  * INSERT…ON CONFLICT DO UPDATE / DELETE,
+/** Keyed parquet table — the MERGE applier (reference row reconcile +
+  * batched INSERT…ON CONFLICT DO UPDATE / DELETE,
   * python/cocoindex/connectors/postgres/_target.py:769-836) on a
-  * plain filesystem:
+  * plain filesystem, laid out as an LSM (the same design the engine's
+  * state store uses for its own tables):
   *
-  *   - rows live under `dir/bucket=k/` with
+  *   - rows live under `dir/base/g=<n>/bucket=k/` and
+  *     `dir/delta/seg=<n>/bucket=k/` with
   *     k = pmod(xxhash64(row_key), numBuckets);
-  *   - an apply rewrites ONLY the buckets containing touched keys
-  *     (dynamic partition overwrite): survivors = bucket contents
-  *     anti-joined on touched keys, new data unioned in;
-  *   - a no-op delta rewrites nothing at all.
-  *
-  * Scale: bucket count bounds rewrite granularity the way Delta/
-  * Iceberg data files do; at 100 TB you'd raise `numBuckets` so each
-  * bucket is a few hundred MB and only touched buckets shuffle.
-  * Partition pruning makes the survivor read skip untouched buckets
-  * (visible as PartitionFilters in the scan).
-  *
-  * COPY-ON-WRITE vs DELTA-LOG (`deltaLog = true`): copy-on-write
-  * rewrites each touched bucket WHOLESALE — random row keys touch
-  * every bucket, so a maintained index at 100 TB would rewrite its
-  * entire physical table per reconcile even for a 10-row delta. The
-  * delta-log mode is the LSM answer (the same design the engine's
-  * state store uses for its own tables): an apply APPENDS one
-  * segment holding exactly its upserts plus thin tombstones, so
-  * write bytes are O(delta); reads merge base ∪ segments with
-  * latest-wins per `row_key`, and bucket filters still
-  * partition-prune both sides.
+  *   - an apply APPENDS one segment holding exactly its upserts plus
+  *     thin tombstones, so write bytes are O(delta) — nothing current
+  *     is read or rewritten (random row keys touch every bucket, so a
+  *     touched-bucket rewrite would cost a maintained index its whole
+  *     physical table per reconcile, even for a 10-row delta);
+  *   - reads merge base ∪ segments with latest-wins per `row_key`, and
+  *     bucket filters partition-prune both sides;
+  *   - a no-op delta writes nothing at all.
   *
   * Compaction is TIERED, so amortized write bytes stay O(delta) at
   * ANY base size (a single count-triggered full fold would cost
   * base/maxDeltaSegments per apply — linear in the corpus, the exact
-  * amplification delta-log mode exists to remove):
+  * amplification the segment log exists to remove):
   *
   *   - tier 0 → tier 1 (CONSOLIDATE): once `maxDeltaSegments` fresh
   *     segments accumulate, they merge into ONE consolidated segment
@@ -294,6 +282,10 @@ object WireTarget {
   * a consolidated segment outranks its inputs by segment id, so a
   * crash between its commit and the inputs' retirement double-serves
   * identical latest rows).
+  *
+  * A `dir/bucket=k/` directory is the retired copy-on-write layout
+  * (whole touched buckets rewritten per apply). It is never read or
+  * written: `apply` and `read` both refuse it.
   */
 final case class ParquetTableTarget(dir: String, numBuckets: Int = 16,
     /** SQL expression over `row_key` whose hash places the row in a
@@ -303,63 +295,56 @@ final case class ParquetTableTarget(dir: String, numBuckets: Int = 16,
       * buckets of their lookup values — at the cost of writes
       * fanning out to every bucket a component's rows hash to. */
     bucketKeySql: String = "row_key",
-    /** LSM layout: applies append O(delta) segments instead of
-      * rewriting touched buckets — see the class doc. Layout is
-      * container identity (a flow constructed with the other mode
-      * plans a destructive recreate); reads auto-detect the on-disk
-      * layout, so reader handles work against either. */
-    deltaLog: Boolean = false,
-    /** Delta-log only: consolidate fresh segments into one once this
-      * many accumulate (tier 0 → tier 1; see the class doc). Also the
-      * tier-1 capacity before consolidated segments merge again. NOT
-      * container identity — tune in place. */
-    maxDeltaSegments: Int = 16,
-    /** Delta-log only: FOLD into a new base generation once the live
-      * segments' on-disk bytes pass this absolute bound (r16 verdict
-      * #2). Right for thin index tables whose base is comparable to
-      * this bound; a FAT table (the corpus export) should raise it
-      * toward Long.MaxValue and let `foldRatio` govern — an absolute
-      * trigger on a 100 TB table would force a full rewrite every
-      * 512 MB of churn. NOT container identity — tune in place. */
-    maxDeltaBytes: Long = 512L << 20,
-    /** Delta-log only: ALSO fold once live delta bytes reach this
-      * fraction of the base's bytes — the proportional trigger that
-      * keeps the O(base) fold amortized to O(delta) per apply at any
-      * base size. NOT container identity — tune in place. */
-    foldRatio: Double = 0.25,
-    /** Delta-log only: the proportional trigger is ignored below this
-      * many live delta bytes — folding a toy-sized base every few
-      * applies is pure write amplification (the fold's O(base) cost
-      * pays off only against a substantial delta). The absolute
-      * `maxDeltaBytes` trigger is NOT floored. NOT container
+    /** Consolidate fresh segments into one once this many accumulate
+      * (tier 0 → tier 1; see the class doc). Also the tier-1 capacity
+      * before consolidated segments merge again. NOT container
       * identity — tune in place. */
-    minFoldBytes: Long = 16L << 20,
-    /** Delta-log only: merged reads broadcast the superseded-key set
-      * while the live segments hold at most this many rows; past it
-      * the read switches to the bloom-prefiltered merge (class doc).
-      * ~16 B/key broadcast → the default is a ~64 MB ceiling. NOT
+    maxDeltaSegments: Int = 16,
+    /** FOLD into a new base generation once the live segments'
+      * on-disk bytes pass this absolute bound. Right for thin index
+      * tables whose base is comparable to this bound; a FAT table (the
+      * corpus export) should raise it toward Long.MaxValue and let
+      * `foldRatio` govern — an absolute trigger on a 100 TB table
+      * would force a full rewrite every 512 MB of churn. NOT container
+      * identity — tune in place. */
+    maxDeltaBytes: Long = 512L << 20,
+    /** ALSO fold once live delta bytes reach this fraction of the
+      * base's bytes — the proportional trigger that keeps the O(base)
+      * fold amortized to O(delta) per apply at any base size. NOT
       * container identity — tune in place. */
+    foldRatio: Double = 0.25,
+    /** The proportional trigger is ignored below this many live delta
+      * bytes — folding a toy-sized base every few applies is pure
+      * write amplification (the fold's O(base) cost pays off only
+      * against a substantial delta). The absolute `maxDeltaBytes`
+      * trigger is NOT floored. NOT container identity — tune in place. */
+    minFoldBytes: Long = 16L << 20,
+    /** Merged reads broadcast the superseded-key set while the live
+      * segments hold at most this many rows; past it the read switches
+      * to the bloom-prefiltered merge (class doc). ~16 B/key broadcast
+      * → the default is a ~64 MB ceiling. NOT container identity —
+      * tune in place. */
     maxBroadcastKeys: Long = 4L * 1000 * 1000,
-    /** Delta-log only: SQL expression to physically cluster rows by
-      * at every write (range-repartition + sort within partitions).
-      * Point fetches whose predicate lands on this expression's
-      * column then prune parquet row groups by min/max statistics —
-      * without clustering, hash/lineage placement spreads every key
-      * range over every file and a 2,000-key IN reads the whole
-      * table. Costs one delta-sized range shuffle per apply and rides
-      * the already-O(table) fold. Set it to the table's natural fetch
-      * key (e.g. the export's native doc id — row_key's LEXICAL order
-      * scatters numeric ids, so cluster by the typed column the
-      * fetches actually filter on). NOT container identity. */
+    /** SQL expression to physically cluster rows by at every write
+      * (range-repartition + sort within partitions). Point fetches
+      * whose predicate lands on this expression's column then prune
+      * parquet row groups by min/max statistics — without clustering,
+      * hash/lineage placement spreads every key range over every file
+      * and a 2,000-key IN reads the whole table. Costs one delta-sized
+      * range shuffle per apply and rides the already-O(table) fold.
+      * Set it to the table's natural fetch key (e.g. the export's
+      * native doc id — row_key's LEXICAL order scatters numeric ids,
+      * so cluster by the typed column the fetches actually filter on).
+      * NOT container identity. */
     clusterBySql: Option[String] = None)
     extends Target {
 
   private def bucketOf = pmod(xxhash64(expr(bucketKeySql)), lit(numBuckets))
     .cast("int")
 
-  /** Physically cluster `df` by [[clusterBySql]] before a delta-log
-    * write (no-op when unset — the default keeps every existing
-    * target's shuffle-free write plans byte-identical).
+  /** Physically cluster `df` by [[clusterBySql]] before a write (no-op
+    * when unset — the default keeps every existing target's
+    * shuffle-free write plans byte-identical).
     *
     * The range partitioning leads with `bucket` (r18): these frames
     * are written `partitionBy("bucket")`, and ranging on the cluster
@@ -385,23 +370,32 @@ final case class ParquetTableTarget(dir: String, numBuckets: Int = 16,
     * key → full create, postgres/_target.py:930-947) — both are
     * container identity, not in-place properties. Without `dir` in
     * the signature a relocated target would silently keep unchanged
-    * items' rows only in the OLD location. */
+    * items' rows only in the OLD location. `;delta=1` names the
+    * segment-log layout: a container recorded without it holds the
+    * retired copy-on-write layout, and the engine plans its
+    * destructive recreate. */
   override def containerSignature: String =
     s"parquet;dir=$dir;pk=row_key;buckets=$numBuckets" +
       (if (bucketKeySql == "row_key") "" else s";bkey=$bucketKeySql") +
-      (if (deltaLog) ";delta=1" else "")
+      ";delta=1"
 
   override def truncate(spark: SparkSession): Unit =
     FsUtil.deleteRecursively(new java.io.File(dir))
 
-  private def bucketDirs: Seq[java.io.File] =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("bucket=")).toSeq
+  /** Refuse the retired copy-on-write layout (`dir/bucket=k/`): the
+    * merged read would serve it as an EMPTY table, and an apply would
+    * interleave two layouts in one dir. Flows never get here (its
+    * recorded signature lacks `;delta=1` → destructive recreate); a
+    * direct user fails loudly. */
+  private def refuseCopyOnWriteLayout(): Unit =
+    if (Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+        .exists(f => f.isDirectory && f.getName.startsWith("bucket=")))
+      throw new IllegalStateException(
+        s"target $dir holds a copy-on-write (bucket=) layout, which is " +
+          "no longer read or written — truncate or migrate first")
 
-  private def v1Exists = bucketDirs.nonEmpty
-
-  // ---- delta-log layout: dir/base/g=<n>/bucket=k, dir/delta/seg=<n>/
-  // bucket=k; a numbered dir is LIVE only once its commit marker lands
+  // ---- layout: dir/base/g=<n>/bucket=k, dir/delta/seg=<n>/bucket=k;
+  // a numbered dir is LIVE only once its commit marker lands
   private def baseRoot = new java.io.File(dir, "base")
   private def deltaRoot = new java.io.File(dir, "delta")
   private def markerOf(d: java.io.File) = new java.io.File(d, "_graft_committed")
@@ -418,146 +412,42 @@ final case class ParquetTableTarget(dir: String, numBuckets: Int = 16,
     baseGens.filter(g => markerOf(g._2).exists()).lastOption.map(_._2)
   private def activeSegs: Seq[java.io.File] =
     deltaSegs.filter(s => markerOf(s._2).exists()).map(_._2)
-  private def deltaLayoutOnDisk = baseRoot.isDirectory || deltaRoot.isDirectory
 
-  private def exists = v1Exists ||
-    (deltaLayoutOnDisk && (activeBase.nonEmpty || activeSegs.nonEmpty))
+  private def exists = activeBase.nonEmpty || activeSegs.nonEmpty
 
   private def schemaFile = new java.io.File(dir, "_schema.json")
 
-  private def saveSchema(df: DataFrame): Unit =
-    saveSchema(df.schema)
-
-  private def saveSchema(schema: org.apache.spark.sql.types.StructType): Unit = {
+  private def saveSchema(schema: StructType): Unit = {
     new java.io.File(dir).mkdirs()
     java.nio.file.Files.write(schemaFile.toPath,
       schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
-  private def storedSchema: Option[org.apache.spark.sql.types.StructType] =
+  private def storedSchema: Option[StructType] =
     if (!schemaFile.exists()) None
     else Some(org.apache.spark.sql.types.DataType.fromJson(
       new String(java.nio.file.Files.readAllBytes(schemaFile.toPath),
         java.nio.charset.StandardCharsets.UTF_8))
       .asInstanceOf[org.apache.spark.sql.types.StructType])
 
-  def apply(spark: SparkSession, upserts: DataFrame,
-      deleteKeys: DataFrame): TargetStats = {
-    // an on-disk copy-on-write layout under a delta-log handle (or
-    // vice versa) means two writers disagree about the container —
-    // writing would interleave layouts in one dir. Flows never get
-    // here (layout is container identity → the engine plans
-    // drop-recreate); a direct user fails loudly. Checked BEFORE
-    // anything is cached so the failure path pins no blocks.
-    if (deltaLog && v1Exists) throw new IllegalStateException(
-      s"target $dir holds a copy-on-write (bucket=) layout but this " +
-        "handle declares deltaLog=true — truncate or migrate first")
-    if (!deltaLog && deltaLayoutOnDisk) throw new IllegalStateException(
-      s"target $dir holds a delta-log (base/delta) layout but this " +
-        "handle declares deltaLog=false — truncate or migrate first")
-
-    val upB = upserts.withColumn("bucket", bucketOf)
-    val delK = deleteKeys.select(col("row_key"))
-    if (deltaLog)
-      // the delta path's counts ride the segment write itself
-      // (Dataset.observe): an apply — bootstrap included — computes
-      // the delta EXACTLY ONCE, with no standalone count jobs and no
-      // cached copy of it (r18: two count jobs + two cached frames
-      // per apply were pure fixed overhead at bench scale and a
-      // needless extra pass over the delta at any scale)
-      applyDeltaLog(spark, upB, delK)
-    else {
-      // the copy-on-write steady state reads both frames several
-      // times (per-bucket aggregate, touched keys, survivor union) —
-      // THERE the cache earns its keep. try/finally, not per-return
-      // unpersists (ADVICE r16): every return AND every throwing path
-      // must release the cached blocks.
-      val up = upB.cache()
-      val del = delK.cache()
-      try applyCopyOnWrite(spark, up, del)
-      finally { up.unpersist(); del.unpersist() }
-    }
-  }
-
-  private def applyCopyOnWrite(spark: SparkSession, up: DataFrame,
-      del: DataFrame): TargetStats = {
-    if (!exists) {
-      // bootstrap fast path: deletes are vacuous against an empty
-      // container, and the row count rides the write (one pass over
-      // the initial corpus, not two) — at bootstrap scale a separate
-      // count would recompute the whole upsert plan for nothing
-      val obs = org.apache.spark.sql.Observation()
-      up.observe(obs, count(lit(1)).as("n"))
-        .write.partitionBy("bucket").mode(SaveMode.Overwrite).parquet(dir)
-      val nUp = obs.get("n").asInstanceOf[Long]
-      if (nUp > 0) saveSchema(up.drop("bucket"))
-      else FsUtil.deleteRecursively(new java.io.File(dir))
-      return TargetStats(nUp, 0)
-    }
-
-    // ONE driver action answers everything the steady-state apply
-    // plan needs — row counts per side and the touched-bucket set
-    // (this replaces three separate count/collect jobs; every engine
-    // pass pays this path, so job count here is pure fixed overhead)
-    val perBucket = up.select(col("bucket"), lit(1L).as("is_up"))
-      .unionByName(del.select(bucketOf.as("bucket"), lit(0L).as("is_up")))
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n"), sum("is_up").as("n_up"))
-      .collect()
-    val nTotal = perBucket.map(_.getLong(1)).sum
-    val nUp = perBucket.map(_.getLong(2)).sum
-    val nDel = nTotal - nUp
-    if (nUp == 0 && nDel == 0) return TargetStats(0, 0)
-
-    val touchedKeys = up.select("row_key").union(del).distinct()
-    val touchedBuckets = perBucket.map(_.getInt(0)).toSeq
-
-    val current = read(spark).filter(col("bucket").isin(touchedBuckets: _*))
-    val survivors = current.join(touchedKeys, Seq("row_key"), "left_anti")
-    // localCheckpoint cuts the lineage back to the files being
-    // overwritten — without it the overwrite job would read the very
-    // parquet files it is deleting
-    val newData = survivors.unionByName(up, allowMissingColumns = true)
-      .withColumn("bucket", bucketOf)
-      .localCheckpoint()
-
-    // Dynamic partition overwrite: only the touched bucket dirs are
-    // replaced; untouched buckets' files are not rewritten.
-    newData.write
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .mode(SaveMode.Overwrite)
-      .parquet(dir)
-    saveSchema(newData.drop("bucket"))
-
-    // dynamic overwrite only replaces partitions PRESENT in the new
-    // data — a touched bucket whose rows were all deleted must be
-    // cleared explicitly or its old files survive
-    val bucketsWithData = newData.select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSet
-    touchedBuckets.filterNot(bucketsWithData).foreach { b =>
-      val d = new java.io.File(dir, s"bucket=$b")
-      Option(d.listFiles()).getOrElse(Array.empty).foreach(_.delete())
-      d.delete()
-    }
-    TargetStats(nUp, nDel)
-  }
-
   /** One apply = one appended segment: upsert rows (`__deleted` =
     * false) plus thin all-null-payload tombstones, partitioned by
     * bucket like the base. O(delta) bytes written; nothing current
-    * is read at all (the copy-on-write path's read-modify-write is
-    * exactly what this mode exists to avoid). The upsert/delete
-    * counts ride the write job as observed metrics — the delta is
-    * computed exactly once per apply; an apply that turns out empty
-    * removes its uncommitted dir (never marker-committed, so it was
-    * never visible to a reader). */
-  private def applyDeltaLog(spark: SparkSession, up: DataFrame,
-      del: DataFrame): TargetStats = {
+    * is read at all. The upsert/delete counts ride the write job as
+    * observed metrics (Dataset.observe): an apply — bootstrap included
+    * — computes the delta EXACTLY ONCE, with no standalone count job
+    * and no cached copy of it. An apply that turns out empty removes
+    * its uncommitted dir (never marker-committed, so it was never
+    * visible to a reader). */
+  def apply(spark: SparkSession, upserts: DataFrame,
+      deleteKeys: DataFrame): TargetStats = {
+    refuseCopyOnWriteLayout()
     // sweep crash leftovers: an unmarked numbered dir is a previous
     // (single-)writer's partial write — invisible to readers, dead
     (baseGens ++ deltaSegs).filterNot(d => markerOf(d._2).exists())
       .foreach(d => FsUtil.deleteRecursively(d._2))
+    val up = upserts.withColumn("bucket", bucketOf)
+    val upPayload = up.drop("bucket").schema
 
     if (!exists) {
       // first write goes straight to a compacted base generation
@@ -572,15 +462,13 @@ final case class ParquetTableTarget(dir: String, numBuckets: Int = 16,
         .parquet(g0.getPath)
       val nUp = obs.get("n").asInstanceOf[Long]
       if (nUp > 0) {
-        saveSchema(up.drop("bucket"))
+        saveSchema(upPayload)
         commit(g0, nUp)
       } else FsUtil.deleteRecursively(baseRoot)
       return TargetStats(nUp, 0)
     }
 
-    // widened payload schema: later applies may add columns (the
-    // copy-on-write path's allowMissingColumns evolution)
-    val upPayload = up.drop("bucket").schema
+    // widened payload schema: later applies may add columns
     val stored = storedSchema.getOrElse(upPayload)
     val widened = org.apache.spark.sql.types.StructType(
       stored.fields ++
@@ -591,7 +479,7 @@ final case class ParquetTableTarget(dir: String, numBuckets: Int = 16,
          else lit(null).cast(f.dataType)).as(f.name)) ++
         Seq(col("bucket"), lit(deleted).as("__deleted")): _*)
     val tomb = aligned(
-      del.select(col("row_key")).withColumn("bucket", bucketOf),
+      deleteKeys.select(col("row_key")).withColumn("bucket", bucketOf),
       deleted = true)
     val seg = aligned(up, deleted = false).unionByName(tomb)
 
@@ -617,7 +505,7 @@ final case class ParquetTableTarget(dir: String, numBuckets: Int = 16,
     }
     saveSchema(widened)
     commit(segDir, nUp + nDel)
-    maintainDeltaLog(spark)
+    maintain(spark)
     TargetStats(nUp, nDel)
   }
 
@@ -630,7 +518,7 @@ final case class ParquetTableTarget(dir: String, numBuckets: Int = 16,
     * segments with interleaved ids can hold NEWER rows for a key than
     * an older consolidated segment, and the merged output's fresh id
     * would outrank them). */
-  private def maintainDeltaLog(spark: SparkSession): Unit = {
+  private def maintain(spark: SparkSession): Unit = {
     val segs = activeSegs
     val liveBytes = segs.map(FsUtil.sizeOf).sum
     val baseBytes = activeBase.map(FsUtil.sizeOf).getOrElse(0L)
@@ -708,13 +596,12 @@ final case class ParquetTableTarget(dir: String, numBuckets: Int = 16,
     * yet deleted) segments over the folded base is value-identical —
     * latest-wins of rows the base already holds. */
   def compact(spark: SparkSession): Unit = {
-    require(deltaLog, s"compact() on a copy-on-write target $dir")
     val segs = activeSegs
     if (segs.isEmpty) return
     val prevGens = baseGens.filter(g => markerOf(g._2).exists())
     val gen = (baseGens.map(_._1) :+ -1L).max + 1
     // localCheckpoint cuts lineage to the segment files retired below
-    val merged = readDeltaLog(spark).localCheckpoint()
+    val merged = read(spark).localCheckpoint()
     if (!merged.isEmpty) {
       val gDir = new java.io.File(baseRoot, s"g=$gen")
       clustered(merged).write.partitionBy("bucket").mode(SaveMode.Overwrite)
@@ -722,7 +609,7 @@ final case class ParquetTableTarget(dir: String, numBuckets: Int = 16,
       commit(gDir)
     }
     // all rows tombstoned → no new base; the empty table serves from
-    // the schema sidecar like a post-drop copy-on-write target
+    // the schema sidecar
     segs.foreach(s => FsUtil.deleteRecursively(s))
     prevGens.foreach(g => FsUtil.deleteRecursively(g._2))
   }
@@ -732,7 +619,8 @@ final case class ParquetTableTarget(dir: String, numBuckets: Int = 16,
     * anti-join the thin superseded-key set. The window partitions by
     * (bucket, row_key) — bucket is functionally dependent on the key
     * — so a serve path's bucket filter still prunes below it. */
-  private def readDeltaLog(spark: SparkSession): DataFrame = {
+  def read(spark: SparkSession): DataFrame = {
+    refuseCopyOnWriteLayout()
     val stored = storedSchema
     val base = activeBase.map(d => readerOf(spark, stored).parquet(d.getPath))
     val segs = activeSegs
@@ -807,20 +695,12 @@ final case class ParquetTableTarget(dir: String, numBuckets: Int = 16,
       : org.apache.spark.sql.DataFrameReader =
     schema.fold(spark.read)(spark.read.schema)
 
+  /** A written-then-emptied table (all rows tombstoned and folded, or
+    * post-drop) reads as an empty LOCAL relation of its stored
+    * schema, which Catalyst folds joins over. */
   private def emptyFromSidecar(spark: SparkSession): DataFrame =
-    storedSchema match {
-      case Some(schema) =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      case None =>
-        throw new IllegalStateException(s"target $dir not yet written")
-    }
-
-  def read(spark: SparkSession): DataFrame =
-    if (deltaLayoutOnDisk) readDeltaLog(spark)
-    else if (v1Exists) readerOf(spark, storedSchema).parquet(dir)
-    // target written once but currently empty (e.g. post-drop)
-    else emptyFromSidecar(spark)
+    StateStore.emptyDf(spark, storedSchema.getOrElse(
+      throw new IllegalStateException(s"target $dir not yet written")))
 }
 
 /** One flow, several physical containers: routes each desired row to

@@ -185,9 +185,7 @@ object AggView {
     new Flow(name,
       src,
       Seq(stage),
-      // delta-log: a delta that touches k groups appends k partial
-      // rows instead of rewriting every touched bucket
-      ParquetTableTarget(viewDir, numBuckets = 8, deltaLog = true),
+      ParquetTableTarget(viewDir, numBuckets = 8),
       stateDir,
       // persist the sketch parameter WITH the view: serve() must
       // merge partials at the k they were built with — a silently-

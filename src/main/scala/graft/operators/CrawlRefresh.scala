@@ -274,6 +274,29 @@ object CrawlRefresh {
     }
   }
 
+  /** The delta-log export's target handle, shared by the nightly's
+    * store and [[nightlyExportHandoff]] so both open it with one
+    * profile.
+    *
+    * FAT-table compaction profile: the export is the corpus itself,
+    * so the absolute delta-byte fold trigger is disabled and the
+    * PROPORTIONAL one governs (fold when delta ≥ foldRatio × base) —
+    * an absolute 512 MB trigger at 100 TB would force a full corpus
+    * rewrite every ~512 MB of churn, the amplification this layout
+    * exists to remove. Merged reads switch to the bloom-prefiltered
+    * plan automatically once the accumulated superseded keys pass
+    * the broadcast bound (ParquetTableTarget class doc).
+    *
+    * clusterBySql: rows are physically range-clustered by the NATIVE
+    * id at every write, so the CDC slice's and the screens' typed-IN
+    * point fetches prune parquet row groups instead of reading the
+    * corpus (row_key's lexical order scatters numeric ids — "12" <
+    * "120" < "13" — so the cluster key is the typed column the
+    * fetches filter on). */
+  private def exportTarget(dir: String, buckets: Int, idCol: String) =
+    graft.engine.ParquetTableTarget(dir, numBuckets = buckets,
+      maxDeltaBytes = Long.MaxValue, clusterBySql = Some(idCol))
+
   private final class DeltaLogExportStore(exportDir: String,
       workDir: String, idCol: String, textCol: String,
       /** Requested bucket count: >0 validates against the provisioned
@@ -285,23 +308,7 @@ object CrawlRefresh {
         * files per night segment and lists 64 dirs per read. */
       bucketsReq: Int,
       emptyLike: DataFrame) extends ExportStore {
-    // FAT-table compaction profile: the export is the corpus itself,
-    // so the absolute delta-byte fold trigger is disabled and the
-    // PROPORTIONAL one governs (fold when delta ≥ foldRatio × base) —
-    // an absolute 512 MB trigger at 100 TB would force a full corpus
-    // rewrite every ~512 MB of churn, the amplification this layout
-    // exists to remove. Merged reads switch to the bloom-prefiltered
-    // plan automatically once the accumulated superseded keys pass
-    // the broadcast bound (ParquetTableTarget class doc).
-    // clusterBySql: rows are physically range-clustered by the NATIVE
-    // id at every write, so the CDC slice's and the screens' typed-IN
-    // point fetches prune parquet row groups instead of reading the
-    // corpus (row_key's lexical order scatters numeric ids — "12" <
-    // "120" < "13" — so the cluster key is the typed column the
-    // fetches filter on)
-    private def target = graft.engine.ParquetTableTarget(
-      exportDir, numBuckets = buckets, deltaLog = true,
-      maxDeltaBytes = Long.MaxValue, clusterBySql = Some(idCol))
+    private def target = exportTarget(exportDir, buckets, idCol)
     private def metaFile =
       new java.io.File(workDir, "_graft_export_meta.json")
     private def meta: Option[Map[String, String]] =
@@ -433,9 +440,7 @@ object CrawlRefresh {
           "was nightly() run here with exportDeltaLog = true?"))
     val idCol = meta.getOrElse("idCol", "doc_id")
     val textCol = meta.getOrElse("textCol", "text")
-    val t = graft.engine.ParquetTableTarget(s"$workDir/export",
-      numBuckets = meta("buckets").toInt, deltaLog = true,
-      maxDeltaBytes = Long.MaxValue, clusterBySql = Some(idCol))
+    val t = exportTarget(s"$workDir/export", meta("buckets").toInt, idCol)
     t.compact(spark)
     Curation.shardManifest(t.read(spark).select(col(idCol), col(textCol)),
       idCol, Seq(idCol, textCol), hexDigits)

@@ -537,12 +537,7 @@ object Dedup {
       changeFeed.map(f => graft.engine.ChangeFeedSource(tableSrc, f):
         graft.engine.Source).getOrElse(tableSrc),
       Seq(stage),
-      // delta-log: a nightly reconcile appends O(changed bands)
-      // bytes instead of rewriting every touched bucket wholesale —
-      // at 100 TB the copy-on-write layout would rewrite the whole
-      // (thin but corpus-sized) index per night
-      graft.engine.ParquetTableTarget(indexDir, numBuckets = numBuckets,
-        deltaLog = true),
+      graft.engine.ParquetTableTarget(indexDir, numBuckets = numBuckets),
       stateDir,
       // index parameters are declared next to the index itself, so
       // serve time can refuse a mismatched read (ADVICE r7) — and
@@ -576,11 +571,11 @@ object Dedup {
     require(numHashes % bandRows == 0)
     require(numHashes <= minHashA.length)
     // the layout comes from the TARGET itself (one copy of the
-    // bucket/delta-log placement logic shared with the flow, so the
-    // two build paths cannot drift); bootstrap = truncate + one
-    // batch apply, which the target writes as its compacted base
+    // bucket placement logic shared with the flow, so the two build
+    // paths cannot drift); bootstrap = truncate + one batch apply,
+    // which the target writes as its compacted base
     val target = graft.engine.ParquetTableTarget(indexDir,
-      numBuckets = numBuckets, deltaLog = true)
+      numBuckets = numBuckets)
     target.truncate(spark)
     val rows = minHashBandRows(
       corpus.select(col(idCol).cast("string").as("item_key"),

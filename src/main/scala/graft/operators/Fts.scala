@@ -192,15 +192,12 @@ object Fts {
     // terms are [a-z0-9]+ tokens (no ':'), so the substring after the
     // LAST ':' of `pl:doc:term` is unambiguously the term even when
     // doc ids themselves contain ':'
-    // delta-log children: a reconcile appends O(changed postings)
-    // bytes instead of rewriting touched term buckets wholesale
     val target = graft.engine.FanoutTarget(Map(
       "pl" -> graft.engine.ParquetTableTarget(
         s"$indexDir/postings", numBuckets,
-        bucketKeySql = "substring_index(row_key, ':', -1)",
-        deltaLog = true),
+        bucketKeySql = "substring_index(row_key, ':', -1)"),
       "dl" -> graft.engine.ParquetTableTarget(
-        s"$indexDir/doclen", numBuckets, deltaLog = true)))
+        s"$indexDir/doclen", numBuckets)))
     // textCol/idCol are stage logic: reconfiguring either on an
     // existing stateDir must invalidate the memo, or unchanged docs
     // keep serving postings built from the OLD column. v2: the
@@ -245,10 +242,9 @@ object Fts {
     // two build paths cannot drift); truncate + one batch apply each,
     // written as each target's compacted base
     val plT = graft.engine.ParquetTableTarget(s"$indexDir/postings",
-      numBuckets, bucketKeySql = "substring_index(row_key, ':', -1)",
-      deltaLog = true)
+      numBuckets, bucketKeySql = "substring_index(row_key, ':', -1)")
     val dlT = graft.engine.ParquetTableTarget(s"$indexDir/doclen",
-      numBuckets, deltaLog = true)
+      numBuckets)
     plT.truncate(spark); dlT.truncate(spark)
     plT.apply(spark, postings, postings.select(col("row_key")).limit(0))
     dlT.apply(spark, lens, lens.select(col("row_key")).limit(0))
@@ -296,17 +292,15 @@ object Fts {
         s"ftsLoad: missing/unreadable layout sidecar $metaF — cannot " +
           "prune an index whose bucketing is unknown"))
     // through the target handles, not raw parquet reads: read()
-    // resolves whichever physical layout (copy-on-write buckets or
-    // delta-log base+segments) the index is currently stored in
+    // merges base + segments and drops tombstones
     val postings = graft.engine.ParquetTableTarget(
       s"$indexDir/postings", numBuckets,
-      bucketKeySql = "substring_index(row_key, ':', -1)",
-      deltaLog = true).read(spark)
+      bucketKeySql = "substring_index(row_key, ':', -1)").read(spark)
     Index(
       postings = postings.select(col("item_key").as("doc_id"),
         col("term"), col("tf"), col("bucket")),
       docLengths = graft.engine.ParquetTableTarget(
-        s"$indexDir/doclen", numBuckets, deltaLog = true).read(spark)
+        s"$indexDir/doclen", numBuckets).read(spark)
         .select(col("item_key").as("doc_id"), col("dl")),
       termBuckets = Some((numBuckets, termBucket(_, numBuckets))))
   }

@@ -75,18 +75,17 @@ object Graph {
   /** Convenience over a [[graft.engine.GraphTarget]]'s persisted edge
     * table, whose reconciled rows carry `from_id`/`to_id`. Reads
     * through a [[graft.engine.ParquetTableTarget]] handle, NOT a raw
-    * `spark.read.parquet(edgeDir)` (ADVICE r16): GraphTarget stores
-    * edges in the delta-log layout, so a raw read breaks on the mixed
-    * `base/g=N` / `delta/seg=M` partition structure after the first
-    * incremental reconcile — and would surface tombstones and
-    * superseded rows as edges even where it parsed. The handle
-    * resolves whichever layout is on disk and merges segments
-    * latest-wins with tombstones dropped. */
+    * `spark.read.parquet(edgeDir)` (ADVICE r16): a raw read breaks on
+    * the target's mixed `base/g=N` / `delta/seg=M` partition
+    * structure after the first incremental reconcile — and would
+    * surface tombstones and superseded rows as edges even where it
+    * parsed. The handle merges segments latest-wins with tombstones
+    * dropped. */
   def bfsOverEdgeTable(
       spark: SparkSession, edgeDir: String, seeds: DataFrame,
       maxHops: Int, fromCol: String = "from_id", toCol: String = "to_id")
       : DataFrame =
-    bfs(graft.engine.ParquetTableTarget(edgeDir, deltaLog = true)
+    bfs(graft.engine.ParquetTableTarget(edgeDir)
       .read(spark)
       .select(col(fromCol).as("src"), col(toCol).as("dst")), seeds, maxHops)
 }

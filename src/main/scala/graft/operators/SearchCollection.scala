@@ -140,9 +140,7 @@ object SearchCollection {
     val rowsFlow = new Flow(s"${name}_rows",
       TableSource(corpus, keyCol = idCol),
       Seq(rowStage),
-      // delta-log like the index tables: a document edit appends
-      // O(1) rows instead of rewriting its whole hash bucket
-      ParquetTableTarget(s"$dir/rows", numBuckets, deltaLog = true),
+      ParquetTableTarget(s"$dir/rows", numBuckets),
       s"$stateDir/rows",
       rowKeyOwnedByItem = true)
 

@@ -393,10 +393,7 @@ object Similarity {
         .write.mode("overwrite").parquet(centDir)
 
     val inner = graft.engine.ParquetTableTarget(
-      s"$indexDir/assignment", numBuckets,
-      // delta-log like the band/FTS indexes: a reconcile appends
-      // O(changed assignments) bytes, never a touched-bucket rewrite
-      deltaLog = true)
+      s"$indexDir/assignment", numBuckets)
     val target = new graft.engine.Target {
       def apply(s: org.apache.spark.sql.SparkSession, up: DataFrame,
           del: DataFrame): graft.engine.TargetStats = inner.apply(s, up, del)
@@ -447,10 +444,9 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$indexDir/centroids")
 
   /** Load an [[ivfFlow]]-maintained index for [[ivfQuery]]. The
-    * assignment table reads through its target handle, which
-    * resolves whichever physical layout (copy-on-write buckets or
-    * delta-log base+segments) the flow wrote — a raw parquet read of
-    * a delta-log dir would surface tombstones as rows. */
+    * assignment table reads through its target handle, which merges
+    * base + segments — a raw parquet read of the target dir would
+    * surface tombstones as rows. */
   def ivfLoad(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): IvfIndex =
     IvfIndex(spark.read.parquet(s"$indexDir/centroids"),
@@ -823,10 +819,7 @@ object Similarity {
       changeFeed.map(f => graft.engine.ChangeFeedSource(tableSrc, f):
         graft.engine.Source).getOrElse(tableSrc),
       Seq(stage),
-      // delta-log: O(changed bands) bytes per reconcile, not a
-      // wholesale touched-bucket rewrite (see minHashFlow)
-      graft.engine.ParquetTableTarget(indexDir, numBuckets = numBuckets,
-        deltaLog = true),
+      graft.engine.ParquetTableTarget(indexDir, numBuckets = numBuckets),
       stateDir,
       // row keys are "item:band" — item-owned for life (minHashFlow
       // convention): tracking scope reads pruned below the merge
@@ -888,7 +881,7 @@ object Similarity {
     // build paths cannot drift); truncate + one batch apply, written
     // as the target's compacted base
     val target = graft.engine.ParquetTableTarget(indexDir,
-      numBuckets = numBuckets, deltaLog = true)
+      numBuckets = numBuckets)
     target.truncate(spark)
     val rows = srpBandRows(
       corpus.select(col(idCol).cast("string").as("item_key"),

@@ -479,8 +479,8 @@ class CrawlRefreshSpec extends SparkSpec {
   // ---- delta-log export layout (r18: the write-amplification fix) ---------
 
   private def deltaExportRead(wd: String, buckets: Int = 64) =
-    graft.engine.ParquetTableTarget(s"$wd/export", numBuckets = buckets,
-      deltaLog = true).read(spark).select("doc_id", "text")
+    graft.engine.ParquetTableTarget(s"$wd/export", numBuckets = buckets)
+      .read(spark).select("doc_id", "text")
 
   test("delta-log export: a night appends O(delta) segments, never the base") {
     import spark.implicits._
@@ -778,7 +778,7 @@ class CrawlRefreshSpec extends SparkSpec {
     // the single reconcile leaves the index exactly where a fresh
     // build over tonight's export would
     def bands(dir: String) =
-      graft.engine.ParquetTableTarget(dir, deltaLog = true).read(spark)
+      graft.engine.ParquetTableTarget(dir).read(spark)
         .select("item_key", "band", "code", "sz").collect()
         .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getInt(3)))
         .toSet

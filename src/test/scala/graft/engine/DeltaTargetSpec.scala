@@ -3,14 +3,14 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
-/** The delta-log mode of [[ParquetTableTarget]] — the LSM layout that
-  * makes flow-maintained index upkeep O(delta) in write bytes instead
-  * of wholesale touched-bucket rewrites. The load-bearing contracts:
-  * value-equivalence with the copy-on-write mode under any apply
-  * sequence, O(delta) physical writes, latest-wins (incl. the
-  * same-apply upsert+delete tie the copy-on-write path resolves to
-  * "present"), convergent crash behavior via commit markers, and
-  * fold-into-base compaction that changes nothing a reader sees. */
+/** [[ParquetTableTarget]]'s LSM layout — the one layout that makes
+  * flow-maintained index upkeep O(delta) in write bytes. The
+  * load-bearing contracts: value-equivalence with a latest-wins
+  * keyed-MERGE model under any apply sequence, O(delta) physical
+  * writes, latest-wins (incl. the same-apply upsert+delete tie, which
+  * resolves to "present"), convergent crash behavior via commit
+  * markers, fold-into-base compaction that changes nothing a reader
+  * sees, and a loud refusal of the retired copy-on-write layout. */
 class DeltaTargetSpec extends graft.SparkSpec {
 
   private def tmp(): java.nio.file.Path = {
@@ -51,11 +51,10 @@ class DeltaTargetSpec extends graft.SparkSpec {
       .getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("g=")).toSeq
 
-  test("value-equivalent to copy-on-write under an apply sequence") {
+  test("value-equivalent to a latest-wins keyed MERGE under an apply sequence") {
     val work = tmp()
-    val cow = ParquetTableTarget(work.resolve("cow").toString, numBuckets = 4)
     val dlt = ParquetTableTarget(work.resolve("dlt").toString, numBuckets = 4,
-      deltaLog = true, maxDeltaSegments = 3) // consolidation fires mid-sequence
+      maxDeltaSegments = 3) // consolidation fires mid-sequence
     // (upserts, deleteKeys) steps: bootstrap, update+insert, delete,
     // re-insert after delete, same-apply upsert+delete of one key,
     // no-op, delete of a never-present key
@@ -64,14 +63,16 @@ class DeltaTargetSpec extends graft.SparkSpec {
       (Seq("b" -> 20, "d" -> 4), Nil),
       (Nil, Seq("a")),
       (Seq("a" -> 100), Nil),
-      (Seq("c" -> 30), Seq("c")), // tie: copy-on-write keeps the upsert
+      (Seq("c" -> 30), Seq("c")), // tie: the upsert wins
       (Nil, Nil),
       (Nil, Seq("zzz")))
+    // the model: deletes first, then upserts, so a same-apply tie
+    // keeps the upsert
+    var model = Map.empty[String, Int]
     steps.foreach { case (up, del) =>
-      val u = rows(up: _*); val d = keys(del: _*)
-      cow.apply(spark, u, d)
-      dlt.apply(spark, u, d)
-      assert(contents(dlt) == contents(cow))
+      model = model -- del ++ up
+      dlt.apply(spark, rows(up: _*), keys(del: _*))
+      assert(contents(dlt) == model.toSet)
     }
     assert(contents(dlt) ==
       Set("a" -> 100, "b" -> 20, "c" -> 30, "d" -> 4))
@@ -80,7 +81,7 @@ class DeltaTargetSpec extends graft.SparkSpec {
   test("an apply appends O(delta) bytes and never touches the base") {
     val work = tmp()
     val dir = work.resolve("t").toString
-    val t = ParquetTableTarget(dir, numBuckets = 4, deltaLog = true)
+    val t = ParquetTableTarget(dir, numBuckets = 4)
     import spark.implicits._
     val base = (1 to 5000).map(i => (s"k$i", i)).toDF("row_key", "v")
     t.apply(spark, base, keys())
@@ -107,7 +108,7 @@ class DeltaTargetSpec extends graft.SparkSpec {
     val work = tmp()
     val dir = work.resolve("t").toString
     val t = ParquetTableTarget(dir, numBuckets = 2,
-      deltaLog = true, maxDeltaSegments = 4)
+      maxDeltaSegments = 4)
     t.apply(spark, rows("x" -> 1, "y" -> 1), keys())      // base g=0
     t.apply(spark, rows("x" -> 2), keys())                // seg 0
     t.apply(spark, rows(), keys("x"))                     // seg 1: tombstone
@@ -143,7 +144,7 @@ class DeltaTargetSpec extends graft.SparkSpec {
     // merge output would outrank it by segment id — serving stale data
     val work = tmp()
     val dir = work.resolve("t").toString
-    val t = ParquetTableTarget(dir, numBuckets = 2, deltaLog = true,
+    val t = ParquetTableTarget(dir, numBuckets = 2,
       maxDeltaSegments = 2, minFoldBytes = Long.MaxValue,
       maxDeltaBytes = Long.MaxValue)
     t.apply(spark, rows("a" -> 1, "b" -> 1), keys())        // base g=0
@@ -169,7 +170,7 @@ class DeltaTargetSpec extends graft.SparkSpec {
     import spark.implicits._
     val work = tmp()
     val dir = work.resolve("t").toString
-    val t = ParquetTableTarget(dir, numBuckets = 2, deltaLog = true,
+    val t = ParquetTableTarget(dir, numBuckets = 2,
       maxDeltaSegments = 100, maxDeltaBytes = Long.MaxValue,
       foldRatio = 0.25, minFoldBytes = 1L)
     t.apply(spark, (1 to 4000).map(i => (s"k$i", i)).toDF("row_key", "v"),
@@ -204,7 +205,7 @@ class DeltaTargetSpec extends graft.SparkSpec {
     // a fat table under the proportional trigger can hold far more
     // superseded keys than any broadcast should carry — force the
     // switch low and assert the base never rides a broadcast-anti
-    val t = ParquetTableTarget(dir, numBuckets = 4, deltaLog = true,
+    val t = ParquetTableTarget(dir, numBuckets = 4,
       maxDeltaSegments = 100, maxDeltaBytes = Long.MaxValue,
       minFoldBytes = Long.MaxValue, maxBroadcastKeys = 10L)
     t.apply(spark, (1 to 3000).map(i => (s"k$i", i)).toDF("row_key", "v"),
@@ -246,7 +247,7 @@ class DeltaTargetSpec extends graft.SparkSpec {
           if j.joinType.toString.toLowerCase.contains("anti") => j
     }.nonEmpty, "the bloom-positive sliver anti-joins by sort-merge")
     // the same container read under the broadcast profile agrees
-    val broad = ParquetTableTarget(dir, numBuckets = 4, deltaLog = true)
+    val broad = ParquetTableTarget(dir, numBuckets = 4)
       .read(spark).select("row_key", "v").collect()
       .map(r => (r.getString(0), r.getInt(1))).toSet
     assert(broad == expected)
@@ -255,7 +256,7 @@ class DeltaTargetSpec extends graft.SparkSpec {
   test("unmarked (crashed) segment is invisible and swept; replay converges") {
     val work = tmp()
     val dir = work.resolve("t").toString
-    val t = ParquetTableTarget(dir, numBuckets = 2, deltaLog = true)
+    val t = ParquetTableTarget(dir, numBuckets = 2)
     t.apply(spark, rows("a" -> 1), keys())
     t.apply(spark, rows("b" -> 2), keys())
     // simulate a crash: a segment directory without its commit marker
@@ -276,8 +277,7 @@ class DeltaTargetSpec extends graft.SparkSpec {
   test("schema evolution: a later apply may add columns") {
     import spark.implicits._
     val work = tmp()
-    val t = ParquetTableTarget(work.resolve("t").toString, numBuckets = 2,
-      deltaLog = true)
+    val t = ParquetTableTarget(work.resolve("t").toString, numBuckets = 2)
     t.apply(spark, rows("a" -> 1), keys())
     t.apply(spark,
       Seq(("b", 2, "extra")).toDF("row_key", "v", "note"), keys())
@@ -296,11 +296,15 @@ class DeltaTargetSpec extends graft.SparkSpec {
   test("compacting an all-tombstoned table leaves a readable empty table") {
     val work = tmp()
     val t = ParquetTableTarget(work.resolve("t").toString, numBuckets = 2,
-      deltaLog = true, maxDeltaSegments = 100)
+      maxDeltaSegments = 100)
     t.apply(spark, rows("a" -> 1, "b" -> 2), keys())
     t.apply(spark, rows(), keys("a", "b"))
     assert(contents(t).isEmpty)
     t.compact(spark)
+    // no base generation is left: the empty table reads as a local
+    // relation of the sidecar schema, which Catalyst folds joins over
+    assert(genDirs(t.dir).isEmpty && segDirs(t.dir).isEmpty)
+    assert(t.read(spark).isLocal)
     assert(contents(t).isEmpty)
     // and it comes back to life on a later apply
     t.apply(spark, rows("c" -> 3), keys())
@@ -326,7 +330,7 @@ class DeltaTargetSpec extends graft.SparkSpec {
     }
     val work = tmp()
     val dir = work.resolve("t").toString
-    val t = ParquetTableTarget(dir, numBuckets = 4, deltaLog = true,
+    val t = ParquetTableTarget(dir, numBuckets = 4,
       maxDeltaSegments = 100)
     import spark.implicits._
     t.apply(spark, (1 to 3000).map(i => (s"k$i", i)).toDF("row_key", "v"),
@@ -355,7 +359,7 @@ class DeltaTargetSpec extends graft.SparkSpec {
     import spark.implicits._
     val work = tmp()
     val dir = work.resolve("t").toString
-    val t = ParquetTableTarget(dir, numBuckets = 2, deltaLog = true,
+    val t = ParquetTableTarget(dir, numBuckets = 2,
       maxDeltaSegments = 100, maxDeltaBytes = 10000L)
     t.apply(spark, rows("a" -> 1), keys())  // base g=0
     t.apply(spark, rows("b" -> 2), keys())  // tiny seg, under the bytes
@@ -371,31 +375,36 @@ class DeltaTargetSpec extends graft.SparkSpec {
   test("layout mismatch between handle and disk fails loudly") {
     val work = tmp()
     val dir = work.resolve("t").toString
-    ParquetTableTarget(dir, numBuckets = 2)
-      .apply(spark, rows("a" -> 1), keys())
-    val e1 = intercept[IllegalStateException] {
-      ParquetTableTarget(dir, numBuckets = 2, deltaLog = true)
-        .apply(spark, rows("b" -> 2), keys())
+    // the retired copy-on-write layout, as its writer left it: rows
+    // partitioned straight under dir/bucket=k plus the schema sidecar
+    rows("a" -> 1).withColumn("bucket", lit(0))
+      .write.partitionBy("bucket").mode(SaveMode.Overwrite).parquet(dir)
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_schema.json"),
+      rows("a" -> 1).schema.json.getBytes("UTF-8"))
+    assert(new java.io.File(dir, "bucket=0").isDirectory)
+    val t = ParquetTableTarget(dir, numBuckets = 2)
+    val onApply = intercept[IllegalStateException] {
+      t.apply(spark, rows("b" -> 2), keys())
     }
-    assert(e1.getMessage.contains("copy-on-write"))
-    val dir2 = work.resolve("t2").toString
-    ParquetTableTarget(dir2, numBuckets = 2, deltaLog = true)
-      .apply(spark, rows("a" -> 1), keys())
-    val e2 = intercept[IllegalStateException] {
-      ParquetTableTarget(dir2, numBuckets = 2)
-        .apply(spark, rows("b" -> 2), keys())
+    val onRead = intercept[IllegalStateException](t.read(spark))
+    Seq(onApply, onRead).foreach { e =>
+      assert(e.getMessage.contains("copy-on-write") &&
+        e.getMessage.contains("truncate or migrate first"), e.getMessage)
     }
-    assert(e2.getMessage.contains("delta-log"))
-    // reads auto-detect: both handles read the delta-log dir fine
-    assert(ParquetTableTarget(dir2, numBuckets = 2).read(spark)
-      .count() == 1)
+    // the refused apply wrote nothing
+    assert(!new java.io.File(dir, "base").exists() &&
+      !new java.io.File(dir, "delta").exists())
+    // truncate is the way out
+    t.truncate(spark)
+    t.apply(spark, rows("b" -> 2), keys())
+    assert(contents(t) == Set("b" -> 2))
   }
 
   test("reads use the _schema.json sidecar: no inference job, same rows") {
     import spark.implicits._
     val work = tmp()
     val dir = work.resolve("t").toString
-    val t = ParquetTableTarget(dir, numBuckets = 2, deltaLog = true,
+    val t = ParquetTableTarget(dir, numBuckets = 2,
       maxDeltaSegments = 100)
     t.apply(spark, rows("a" -> 1, "b" -> 2, "c" -> 3), keys()) // base
     t.apply(spark, rows("a" -> 10), keys("b"))                  // segment
@@ -419,16 +428,5 @@ class DeltaTargetSpec extends graft.SparkSpec {
     val (inferred, inferJobs) = jobsWhile(t.read(spark))
     assert(inferJobs > 0, "the inference path is expected to read footers")
     assert(got(inferred) == rowsRead)
-
-    // the copy-on-write layout reads through the sidecar the same way
-    val cowDir = work.resolve("cow").toString
-    val cow = ParquetTableTarget(cowDir, numBuckets = 2)
-    cow.apply(spark, rows("a" -> 1, "b" -> 2), keys())
-    cow.apply(spark,
-      Seq(("c", 3, "extra")).toDF("row_key", "v", "note"), keys("b"))
-    val (cowRead, cowJobs) = jobsWhile(cow.read(spark))
-    assert(cowJobs == 0, s"building the copy-on-write read launched $cowJobs jobs")
-    assert(got(cowRead).map(r => (r._1, r._2, r._3)) ==
-      Set(("a", 1, None), ("c", 3, Some("extra"))))
   }
 }

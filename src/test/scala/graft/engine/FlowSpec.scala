@@ -439,7 +439,10 @@ class FlowSpec extends SparkSpec {
   test("job-count pins: bootstrap run, 3-key runDelta, touch refresh") {
     // jobs counted by jobsWhile (this thread's job group). Before
     // runImpl held its scope in one Scope value, these cases launched
-    // 20 (bootstrap), 29 (runDelta) and 35 (touch) jobs.
+    // 20 (bootstrap), 29 (runDelta) and 35 (touch) jobs; before
+    // ParquetTableTarget's copy-on-write apply was retired, 20, 29
+    // and 21 — that apply's per-bucket collect, survivor checkpoint
+    // and second collect were 9 of runDelta's 29.
     val (src, tgt, st) = (tmpDir("pin-src"), tmpDir("pin-tgt"), tmpDir("pin-st"))
     seed(src)
     val flow = mkFlow(src, tgt, st)
@@ -465,7 +468,7 @@ class FlowSpec extends SparkSpec {
     assert(delta.recomputed == 3 && delta.unchanged == 17, s"$delta")
 
     info(s"jobs: bootstrap $coldJobs, runDelta $deltaJobs, touch $touchJobs")
-    assert(coldJobs <= 20 && deltaJobs <= 29 && touchJobs <= 35,
+    assert(coldJobs <= 19 && deltaJobs <= 20 && touchJobs <= 20,
       s"bootstrap $coldJobs, runDelta $deltaJobs, touch $touchJobs")
   }
 

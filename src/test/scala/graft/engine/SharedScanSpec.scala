@@ -58,7 +58,7 @@ class SharedScanSpec extends SparkSpec {
       s"expected ~half the corpus traffic: $cycleTouched vs $soloTouched")
 
     // identical commits either way
-    def vals(p: String) = spark.read.parquet(p)
+    def vals(p: String) = ParquetTableTarget(p).read(spark)
       .select("row_key").collect().map(_.getString(0)).toSet
     assert(vals(root.resolve("t_a").toString) ==
       vals(root2.resolve("t_a2").toString))
@@ -88,7 +88,7 @@ class SharedScanSpec extends SparkSpec {
     val (ra, rb) =
       try (a.run(spark), b.run(spark)) finally shared.endCycle()
     assert(ra.recomputed == 10 && rb.recomputed == 10, s"$ra / $rb")
-    assert(spark.read.parquet(root.resolve("t_a").toString)
+    assert(ParquetTableTarget(root.resolve("t_a").toString).read(spark)
       .filter(col("va").endsWith("x")).count() == 10)
   }
 
@@ -142,8 +142,8 @@ class SharedScanSpec extends SparkSpec {
 
     // identical indexes either way
     def postings(tag: String) =
-      spark.read.parquet(root.resolve(s"fts_$tag").toString + "/postings")
-        .select("row_key", "tf").collect()
+      ParquetTableTarget(root.resolve(s"fts_$tag").toString + "/postings")
+        .read(spark).select("row_key", "tf").collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(postings("a") == postings("b"))
 
