@@ -626,12 +626,15 @@ object Curation {
     walk(new java.io.File(outDir))
   }
 
+  /** The manifest of an empty export, as a LOCAL relation: Catalyst
+    * folds joins, filters and aggregates over it at plan time, so
+    * consuming it costs no job. */
   private[graft] def emptyManifest(
       spark: org.apache.spark.sql.SparkSession)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.types._
     spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       StructType(Seq("shard", "n_rows", "content_hash", "min_id",
         "max_id").map(StructField(_, LongType))))
   }

@@ -17,6 +17,15 @@ class CrawlRefreshSpec extends SparkSpec {
   private def words(i: Int) =
     s"alpha$i bravo$i charlie$i delta$i echo$i foxtrot$i golf$i hotel$i"
 
+  /** A CDC feed whose every watcher drains `keys` once, then nothing. */
+  private def oneShotFeed(keys: String*): () => graft.engine.SourceWatcher =
+    () => new graft.engine.SourceWatcher {
+      private var drained = false
+      def drain(): (Seq[String], Boolean) =
+        if (drained) (Nil, false) else { drained = true; (keys, false) }
+      def close(): Unit = ()
+    }
+
   test("nightly: 1-doc-deep delta screens 4 docs, rewrites only their shards") {
     import spark.implicits._
     val work = java.nio.file.Files.createTempDirectory("graft-crawl")
@@ -417,13 +426,7 @@ class CrawlRefreshSpec extends SparkSpec {
     val snapB = snapA.withColumn("text",
       when(col("doc_id") === 77, lit("rev2: " + fat(77)))
         .otherwise(col("text")))
-    val feed = () => new graft.engine.SourceWatcher {
-      private var drained = false
-      def drain(): (Seq[String], Boolean) =
-        if (drained) (Nil, false)
-        else { drained = true; (Seq("77"), false) }
-      def close(): Unit = ()
-    }
+    val feed = oneShotFeed("77")
     val tally = new ScanTally
     spark.sparkContext.addSparkListener(tally)
     try {
@@ -520,6 +523,8 @@ class CrawlRefreshSpec extends SparkSpec {
     assert(night2.sliceSize === 4 && night2.removedSize === 1 &&
       night2.screenedOut === 2 && night2.keptSize === 40 &&
       night2.unchangedSize === 38, night2)
+    assert(night2.manifest.isLocal,
+      "a delta-log night's empty manifest is a local relation")
 
     // the write set is the night's segments and NOTHING else: every
     // pre-existing file (the whole base generation included) is
@@ -607,6 +612,44 @@ class CrawlRefreshSpec extends SparkSpec {
       nightC.keptSize === 42, nightC)
   }
 
+  test("delta-log export: a crashed night followed by an empty drain still recovers") {
+    // the recovery night's CDC drain is empty, so the night exits
+    // without a diff — but only after the catch-up preamble: the
+    // crashed night's docs must reach both index families
+    import spark.implicits._
+    val work = java.nio.file.Files.createTempDirectory("graft-crawl-dle")
+    work.toFile.deleteOnExit()
+    val wd = work.resolve("state").toString
+    val marker = new java.io.File(s"$wd/_graft_night_pending")
+    val snapA = (1 to 40).map(i => doc(i, words(i))).toDF("doc_id", "text")
+    assert(CrawlRefresh.nightly(spark, wd, snapA,
+      exportDeltaLog = true).bootstrap)
+
+    val snapB = ((1 to 40).map(i => doc(i, words(i))) ++
+      Seq(doc(100, words(900)), doc(101, words(901))))
+      .toDF("doc_id", "text")
+    CrawlRefresh.nightlyCrashAfterAdmitExport = true
+    try intercept[RuntimeException] {
+      CrawlRefresh.nightly(spark, wd, snapB, exportDeltaLog = true)
+    } finally CrawlRefresh.nightlyCrashAfterAdmitExport = false
+    assert(marker.exists(), "a crashed night leaves its marker")
+
+    val nightB = CrawlRefresh.nightly(spark, wd, snapB,
+      exportDeltaLog = true, changeFeed = Some(oneShotFeed()))
+    assert(!nightB.bootstrap && nightB.sliceSize === 0 &&
+      nightB.keptSize === 42, nightB)
+    assert(!marker.exists(), "the empty-drain night clears the marker")
+
+    val snapC = ((1 to 40).map(i => doc(i, words(i))) ++ Seq(
+      doc(100, words(900)), doc(101, words(901)),
+      doc(200, words(900)), doc(201, "UPDATE: " + words(901))))
+      .toDF("doc_id", "text")
+    val nightC = CrawlRefresh.nightly(spark, wd, snapC,
+      exportDeltaLog = true)
+    assert(nightC.sliceSize === 2 && nightC.screenedOut === 2 &&
+      nightC.keptSize === 42, nightC)
+  }
+
   test("delta-log export: zero-unchanged and empty-snapshot nights survive") {
     import spark.implicits._
     val work = java.nio.file.Files.createTempDirectory("graft-crawl-dl0")
@@ -658,12 +701,7 @@ class CrawlRefreshSpec extends SparkSpec {
       .head.getLong(0) === 40)
     // post-handoff night over the folded base: a CDC change must
     // still find (and retire) its old version through the pruned slice
-    val feed = () => new graft.engine.SourceWatcher {
-      private var drained = false
-      def drain(): (Seq[String], Boolean) =
-        if (drained) (Nil, false) else { drained = true; (Seq("3"), false) }
-      def close(): Unit = ()
-    }
+    val feed = oneShotFeed("3")
     val snapC = ((1 to 40).map { i =>
       if (i == 3) doc(i, "rev3: " + words(i))
       else if (i <= 8) doc(i, "rev2: " + words(i)) else doc(i, words(i))
@@ -750,13 +788,7 @@ class CrawlRefreshSpec extends SparkSpec {
       doc(102, "UPDATE: " + words(4)),   // near re-crawl of a kept doc — drops
       doc(103, "UPDATE: " + words(11)))) // near re-crawl of doc 11, removed tonight
       .toDF("doc_id", "text")
-    val feed = () => new graft.engine.SourceWatcher {
-      private var drained = false
-      def drain(): (Seq[String], Boolean) =
-        if (drained) (Nil, false)
-        else { drained = true; (Seq("7", "11", "100", "102", "103"), false) }
-      def close(): Unit = ()
-    }
+    val feed = oneShotFeed("7", "11", "100", "102", "103")
     val mhState = new graft.engine.StateStore(spark, s"$wd/mhstate")
     val before = mhState.currentVersion
     val night2 = CrawlRefresh.nightly(spark, wd, snapB,
@@ -785,5 +817,119 @@ class CrawlRefreshSpec extends SparkSpec {
     val fresh = work.resolve("fresh").resolve("mhindex").toString
     Dedup.minHashIndexBootstrap(spark, fresh, deltaExportRead(wd))
     assert(bands(s"$wd/mhindex") === bands(fresh))
+  }
+
+  // ---- nights with nothing to apply ----------------------------------------
+
+  /** Path (relative to `wd`) → (size, mtime) of every file a night
+    * may mutate: the export and its manifest sidecar, the key index,
+    * the MinHash band index and its flow state, and the delta-log
+    * meta sidecar. */
+  private def durableFiles(wd: String): Map[String, (Long, Long)] = {
+    val root = new java.io.File(wd).toPath
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(walk)
+      else if (f.exists) Seq(f) else Nil
+    Seq("export", "export._graft_manifest", "keyidx", "mhindex",
+        "mhstate", "_graft_export_meta.json")
+      .flatMap(n => walk(new java.io.File(wd, n)))
+      .map(f => root.relativize(f.toPath).toString ->
+        (f.length, f.lastModified))
+      .toMap
+  }
+
+  /** Bootstrap a 40-doc corpus in a fresh workDir per export layout
+    * (delta-log first, then shards) and run `body` on it. */
+  private def perLayout[T](prefix: String)(
+      body: (String, Boolean, org.apache.spark.sql.DataFrame) => T): Seq[T] = {
+    import spark.implicits._
+    val snapA = (1 to 40).map(i => doc(i, words(i))).toDF("doc_id", "text")
+    Seq(true, false).map { deltaLog =>
+      val work = java.nio.file.Files.createTempDirectory(prefix)
+      work.toFile.deleteOnExit()
+      val wd = work.resolve("state").toString
+      val boot = CrawlRefresh.nightly(spark, wd, snapA,
+        exportDeltaLog = deltaLog)
+      assert(boot.bootstrap && boot.keptSize === 40, boot)
+      body(wd, deltaLog, snapA)
+    }
+  }
+
+  /** The stats and manifest of a night that changed nothing in a
+    * 40-doc corpus, identical to what the full path reports. */
+  private def assertNoChange(night: CrawlRefresh.NightlyStats, wd: String,
+      deltaLog: Boolean): Unit = {
+    assert(!night.bootstrap && night.sliceSize === 0 &&
+      night.removedSize === 0 && night.screenedOut === 0 &&
+      night.unchangedSize === 40 && night.keptSize === 40 &&
+      !night.keyIndexRebuilt, night)
+    def rows(m: org.apache.spark.sql.DataFrame) = m.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4))).toSet
+    if (deltaLog) assert(night.manifest.isLocal && night.manifest.isEmpty)
+    else assert(rows(night.manifest) === rows(Curation.shardManifest(
+      spark.read.parquet(s"$wd/export").select("doc_id", "text"))))
+    assert(!new java.io.File(wd, "_graft_night_pending").exists(),
+      "a night with nothing to apply leaves no marker")
+  }
+
+  test("an idle CDC night launches no job and writes nothing, both layouts") {
+    val jobs = perLayout("graft-crawl-idle") { (wd, deltaLog, snapA) =>
+      val before = durableFiles(wd)
+      Thread.sleep(1100) // mtime granularity
+      val idle = (1 to 2).map { _ =>
+        val (night, n) = jobsWhile(CrawlRefresh.nightly(spark, wd, snapA,
+          exportDeltaLog = deltaLog, changeFeed = Some(oneShotFeed())))
+        assertNoChange(night, wd, deltaLog)
+        n
+      }
+      assert(durableFiles(wd) === before, "an idle night writes nothing")
+      // a one-key drain still takes the full path
+      val snapB = snapA.withColumn("text",
+        when(col("doc_id") === 7, concat(lit("rev2: "), col("text")))
+          .otherwise(col("text")))
+      val night = CrawlRefresh.nightly(spark, wd, snapB,
+        exportDeltaLog = deltaLog, changeFeed = Some(oneShotFeed("7")))
+      assert(night.sliceSize === 1 && night.keptSize === 40, night)
+      idle
+    }
+    val Seq(deltaJobs, shardJobs) = jobs
+    info(s"idle-night jobs: delta-log $deltaJobs, shards $shardJobs")
+    // jobsWhile counts (broadcasts excluded). Before the empty-drain
+    // exit each idle night launched 7 (delta-log) and 14 (shards)
+    // jobs; the shard layout's 5 left read its manifest sidecar for
+    // the size and pin it as the returned manifest
+    assert(deltaJobs.forall(_ == 0) && shardJobs.forall(_ <= 5),
+      s"delta-log $deltaJobs, shards $shardJobs")
+  }
+
+  test("an unchanged snapshot night stops after the diff, both layouts") {
+    import spark.implicits._
+    val jobs = perLayout("graft-crawl-same") { (wd, deltaLog, snapA) =>
+      val before = durableFiles(wd)
+      Thread.sleep(1100) // mtime granularity
+      val (night, n) = jobsWhile(
+        CrawlRefresh.nightly(spark, wd, snapA, exportDeltaLog = deltaLog))
+      assertNoChange(night, wd, deltaLog)
+      assert(durableFiles(wd) === before,
+        "an unchanged snapshot night writes nothing")
+      // the exit keys on the delta, not on export bytes: a re-delivered
+      // verbatim duplicate is screened out on every night that ships
+      // it, and each such night takes the full path
+      val snapB = snapA.union(Seq(doc(101, words(3))).toDF("doc_id", "text"))
+      for (_ <- 1 to 2) {
+        val nightB = CrawlRefresh.nightly(spark, wd, snapB,
+          exportDeltaLog = deltaLog)
+        assert(nightB.sliceSize === 1 && nightB.screenedOut === 1 &&
+          nightB.keptSize === 40, nightB)
+      }
+      n
+    }
+    val Seq(deltaJobs, shardJobs) = jobs
+    info(s"unchanged-snapshot jobs: delta-log $deltaJobs, shards $shardJobs")
+    // jobsWhile counts. Before the empty-diff exit these nights
+    // launched 14 (delta-log) and 21 (shards) jobs
+    assert(deltaJobs <= 5 && shardJobs <= 11,
+      s"delta-log $deltaJobs, shards $shardJobs")
   }
 }
