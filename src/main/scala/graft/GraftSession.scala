@@ -40,6 +40,11 @@ object GraftSession {
       // TIMESTAMP(NANOS), which Spark has no native type for; read it
       // as a long (see Tables.events for the normalization).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // file:// through Hadoop's checksummed local FileSystem, minus
+      // its forked `chmod` per created file and directory (see
+      // ForkFreeRawLocalFileSystem)
+      .config("spark.hadoop.fs.file.impl",
+        classOf[GraftLocalFileSystem].getName)
 
   def local(cpus: Int = defaultCpus, appName: String = "graft"): SparkSession = {
     val s = configure(
@@ -52,4 +57,31 @@ object GraftSession {
   def defaultCpus: Int =
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(math.max(4, Runtime.getRuntime.availableProcessors()))
+}
+
+/** Hadoop's checksummed `file://` FileSystem (`LocalFileSystem`) over
+  * [[ForkFreeRawLocalFileSystem]]: same files, same `.crc` sidecars,
+  * same permission bits. */
+final class GraftLocalFileSystem
+    extends org.apache.hadoop.fs.LocalFileSystem(new ForkFreeRawLocalFileSystem)
+
+/** Hadoop's raw local FileSystem with an in-process `setPermission`.
+  * Without the native hadoop library the stock one forks a `chmod`
+  * process for every file and directory it creates — hundreds per
+  * engine pass, each a fork of the whole driver JVM's address space.
+  * `java.nio` sets the same owner/group/other bits without a process
+  * (the sticky bit, which nothing here sets, is not carried). */
+class ForkFreeRawLocalFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def setPermission(p: org.apache.hadoop.fs.Path,
+      permission: org.apache.hadoop.fs.permission.FsPermission): Unit = {
+    import java.nio.file.attribute.PosixFilePermission
+    val bits = permission.toShort.toInt
+    // PosixFilePermission lists OWNER_READ … OTHERS_EXECUTE, i.e. the
+    // mode bits from 0400 down to 0001
+    val perms = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
+    PosixFilePermission.values.zipWithIndex.foreach { case (perm, i) =>
+      if ((bits & (0x100 >> i)) != 0) perms.add(perm)
+    }
+    java.nio.file.Files.setPosixFilePermissions(pathToFile(p).toPath, perms)
+  }
 }

@@ -775,24 +775,33 @@ final class Flow(
     val byAction = actions.groupBy("action").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
 
-    // ---- apply the delta to the target (idempotent; BEFORE the state
-    // pointer flips — crash here ⇒ roll-forward on rerun) ---------------
+    // ---- the target apply (idempotent; it lands BEFORE the state
+    // pointer flips — crash before the flip ⇒ roll-forward on rerun).
+    // It runs inside the commit below, beside the state writes
+    // (StateStore.commitTables): neither reads what the other writes,
+    // and the flip waits for both.
     // A destructive plan drops the container first (reference
     // _drop_table before recreate, postgres/_target.py:1002-1010);
     // crash between truncate and apply still converges: the stored
     // record keeps the old generation, so the rerun re-plans the same
     // destructive transition and re-truncates idempotently.
-    if (planned.destructive) target.truncate(spark)
-    val upsertKeys = actions
-      .filter(col("action").isin("insert", "update")).select("row_key")
-    val upserts = desired.drop("value_fp")
-      .join(upsertKeys, Seq("row_key"), "left_semi")
+    // every desired row is an insert or an update unless some are
+    // noops (a bootstrap, a pass whose every row changed value): then
+    // the upserts are the desired rows, with no semi join to plan
+    val upserts =
+      if (byAction("noop") == 0) desired.drop("value_fp")
+      else desired.drop("value_fp").join(actions
+        .filter(col("action").isin("insert", "update")).select("row_key"),
+        Seq("row_key"), "left_semi")
     val deleteKeys = actions.filter(col("action") === "delete").select("row_key")
-    target.apply(spark, upserts, deleteKeys)
-    // attachment transition after the row apply (the container exists
-    // by now); a throwing statement aborts before the state commit,
-    // so the transition replans and re-runs next time (convergent)
-    applyAttachments(spark, planned)
+    def applyTarget(): Unit = {
+      if (planned.destructive) target.truncate(spark)
+      target.apply(spark, upserts, deleteKeys)
+      // attachment transition after the row apply (the container
+      // exists by now); a throwing statement aborts before the state
+      // commit, so the transition replans and re-runs next time
+      applyAttachments(spark, planned)
+    }
 
     // ---- commit the new state snapshot --------------------------------
     // (reference commit_in_txn, execution.rs:400-665; child GC :1838 is
@@ -805,6 +814,9 @@ final class Flow(
     // any segment: their memo/tracking/state rows stay physically in
     // place in the base. An empty refresh set is a local relation, so
     // its two joins fold away instead of costing broadcast-build jobs.
+    // Memo and tracking commit as DisjointDeltas: their tombstones are
+    // duplicate-free and miss every upsert key by construction (noted
+    // at each), so each segment is one write job.
     val refreshedMemo = memo.drop("memo_state")
       .join(scope.refreshed, Seq("item_key"), "left_semi")
       .join(listing, Seq("item_key"))
@@ -821,7 +833,9 @@ final class Flow(
         .join(loadedFps, Seq("item_key"), "left")
         .select(col("item_key"), lit(pFp).as("processor_fp"),
           col("memo_state"), col("__content_fp").as("content_fp"))
-    val memoCommit = StateStore.Delta(
+    // upserts are listed items (changed or refreshed), tombstones the
+    // gone items — the ones the listing no longer holds
+    val memoCommit = StateStore.DisjointDelta(
       refreshedMemo.unionByName(recomputedMemo), scope.gone)
 
     // tracking: every desired row upserts — latest-wins on row_key IS
@@ -829,11 +843,13 @@ final class Flow(
     // row_key declared this run shadows any stale tracking row held by
     // another component. Delete-action rows tombstone. Destructive:
     // the container was recreated — no pre-existing row survived, so
-    // tracking is rewritten as exactly the desired set.
+    // tracking is rewritten as exactly the desired set. The delete
+    // keys are the full outer reconcile's unmatched tracked row_keys:
+    // one row each, none of them desired.
     val desiredTracking = desired.select("item_key", "row_key", "value_fp")
     val trackingCommit: StateStore.TableCommit =
       if (planned.destructive) StateStore.Full(desiredTracking)
-      else StateStore.Delta(desiredTracking, deleteKeys)
+      else StateStore.DisjointDelta(desiredTracking, deleteKeys)
 
     // errors reconcile unconditionally: a stage that STOPPED emitting
     // __error must still clear the stale failure records of the
@@ -876,7 +892,8 @@ final class Flow(
     // so later delta-scoped passes can derive survivor tallies from
     // the sidecar instead of counting the corpus.
     st.commitTables(stateTables,
-      countDeltas = Map("component_memo" -> (nNewItems - byCls("gone"))))
+      countDeltas = Map("component_memo" -> (nNewItems - byCls("gone"))),
+      alongside = () => applyTarget())
     afterCommit.foreach(_.apply())
 
     val stats = RunStats(

@@ -294,24 +294,33 @@ final class StateStore(spark: SparkSession, rootDir: String) {
     * O(changed rows) of physical write. Every other directory in the
     * current snapshot carries forward untouched as hard links
     * (metadata-only — a committer of memo+tracking must not lose
-    * id_seq/user_state). Returns the new version. */
+    * id_seq/user_state). Returns the new version.
+    *
+    * The table writes, the carry-forward and `alongside` (an engine
+    * pass's target apply) run concurrently ([[Overlap]]): none reads
+    * what another writes, and `v=next` is invisible until the flip,
+    * which happens only after every branch has succeeded — so the
+    * target apply still lands before the pointer moves. A failed
+    * branch removes the partial `v=next` and rethrows. */
   def commitTables(tables: Map[String, TableCommit],
-      countDeltas: Map[String, Long] = Map.empty): Long = {
+      countDeltas: Map[String, Long] = Map.empty,
+      alongside: () => Unit = () => ()): Long = {
     val cur = currentVersion
     val next = cur + 1
     val dir = root.resolve(s"v=$next")
-    var counts = countsAt(cur)
+    // the pointer still names `cur`, so an existing v=next is what a
+    // crashed or failed commit left behind: its stale segment dirs,
+    // or a crashed compaction's parts beside hard-linked base files,
+    // would go live at this commit's flip
+    deleteRecursively(dir)
     // footer-only recount of a freshly-rewritten table, driver-side
     // (no Spark job — a per-commit count job would tax every engine
     // pass ~100-300 ms of pure scheduling); keyless tables (e.g. the
     // 1-row target_state rewritten every run) carry no counts at all
-    def recount(name: String): Unit =
-      if (mergeKeysOf(name).nonEmpty)
-        counts += name -> parquetFooterRows(dir.resolve(name))
-    // resolve Delta → physical write plan; a family over MaxSegments
-    // compacts: its merged current content + the delta rewrites as a
-    // fresh base (amortized O(N) every ~MaxSegments delta commits)
-    var written = Set.empty[String] // logical tables written this commit
+    type CountUpdate = Map[String, Long] => Map[String, Long]
+    def recount(name: String): CountUpdate =
+      if (mergeKeysOf(name).isEmpty) identity
+      else _ + (name -> parquetFooterRows(dir.resolve(name)))
     // bases are CLUSTERED by their merge keys (range-partitioned +
     // sorted within partitions) so a keyed read's IN predicate prunes
     // parquet row groups by column statistics — the difference between
@@ -327,13 +336,19 @@ final class StateStore(spark: SparkSession, rootDir: String) {
       else df.repartitionByRange(keys.map(col).toIndexedSeq: _*)
         .sortWithinPartitions(keys.map(col).toIndexedSeq: _*)
     }
-    tables.foreach {
-      case (name, Full(df)) =>
-        clustered(df, name).write.mode("overwrite")
-          .parquet(dir.resolve(name).toString)
-        recount(name)
-        written += name
-      case (name, Delta(upserts, deleteKeys)) =>
+    def rewrite(df: DataFrame, name: String): CountUpdate = {
+      clustered(df, name).write.mode("overwrite")
+        .parquet(dir.resolve(name).toString)
+      recount(name)
+    }
+    // resolve each table to (rewritten?, its write) on the driver; a
+    // family over MaxSegments compacts: its merged current content +
+    // the delta rewrites as a fresh base (amortized O(N) every
+    // ~MaxSegments delta commits)
+    val plans: Seq[(String, Boolean, () => CountUpdate)] = tables.toSeq.map {
+      case (name, Full(df)) => (name, true, () => rewrite(df, name))
+      case (name, delta: KeyedDelta) =>
+        import delta.{upserts, deleteKeys}
         val keys = mergeKeysOf(name)
         require(keys.nonEmpty,
           s"Delta commit of $name: no registered merge keys")
@@ -369,41 +384,35 @@ final class StateStore(spark: SparkSession, rootDir: String) {
           val baseBytes = dirBytes(root.resolve(s"v=$cur").resolve(name))
           segs.size >= HardMaxSegments || segBytes * 4L >= baseBytes
         }
-        if (!hasBase && segs.isEmpty) {
+        val upsertRows =
+          upserts.select(schema.fieldNames.map(col).toIndexedSeq: _*)
+        if (!hasBase && segs.isEmpty)
           // first commit of this table: the delta IS the content —
           // write it as a clean base (tombstones have nothing to hit),
           // so steady-state reads start from a single dir
-          clustered(upserts.select(
-              schema.fieldNames.map(col).toIndexedSeq: _*), name)
-            .write.mode("overwrite").parquet(dir.resolve(name).toString)
-          recount(name)
-          written += name
-        } else if (shouldCompact) {
+          (name, true, () => rewrite(upsertRows, name))
+        else if (shouldCompact)
           // compact: merged view (lazy over the CURRENT version's
           // files, which survive until prune keeps `next`-1) + delta
-          val base = read(name, schema)
-          val delKeys = deleteKeys
-            .select(keys.map(c => col(c)).toIndexedSeq: _*).distinct()
-          val merged = base
-            .join(upserts.select(keys.map(col).toIndexedSeq: _*)
-              .union(delKeys), keys, "left_anti")
-            .unionByName(upserts.select(schema.fieldNames.map(col)
-              .toIndexedSeq: _*))
-          clustered(merged, name).write.mode("overwrite")
-            .parquet(dir.resolve(name).toString)
-          recount(name)
-          written += name
-        } else {
+          (name, true, () => {
+            val delKeys = deleteKeys
+              .select(keys.map(c => col(c)).toIndexedSeq: _*).distinct()
+            rewrite(read(name, schema)
+              .join(upserts.select(keys.map(col).toIndexedSeq: _*)
+                .union(delKeys), keys, "left_anti")
+              .unionByName(upsertRows), name)
+          })
+        else (name, false, () => {
           val nextSeq = segs.lastOption.map(_._2 + 1).getOrElse(1L)
+          val keyCols = keys.map(col).toIndexedSeq
           // a key both deleted and re-upserted must survive: the
           // upsert wins within a segment (tombstones are anti-joined)
-          val ups = upserts
-            .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-            .withColumn(DelCol, lit(false))
-          val tombs = deleteKeys
-            .select(keys.map(col).toIndexedSeq: _*).distinct()
-            .join(upserts.select(keys.map(col).toIndexedSeq: _*),
-              keys, "left_anti")
+          // — unless the caller's sides are disjoint by construction,
+          // which makes the segment one write job instead of three
+          val tombs =
+            if (delta.disjoint) deleteKeys.select(keyCols: _*)
+            else deleteKeys.select(keyCols: _*).distinct()
+              .join(upserts.select(keyCols: _*), keys, "left_anti")
           val tombRows = schema.fields.filterNot(f => keys.contains(f.name))
             .foldLeft(tombs)((df, f) =>
               df.withColumn(f.name, lit(null).cast(f.dataType)))
@@ -413,22 +422,24 @@ final class StateStore(spark: SparkSession, rootDir: String) {
           // of a 1-row change must be one small file, not 32 shards
           // sorted within the (single) file so scoped reads prune
           // parquet row groups in segments too, not just the base
-          ups.unionByName(tombRows).coalesce(1)
-            .sortWithinPartitions(keys.map(col).toIndexedSeq: _*)
+          upsertRows.withColumn(DelCol, lit(false)).unionByName(tombRows)
+            .coalesce(1).sortWithinPartitions(keyCols: _*)
             .write.mode("overwrite")
             .parquet(dir.resolve(f"$name$SegSep$nextSeq%06d").toString)
-          // base + prior segments of this family carry forward below;
-          // the count advances by the caller's declared exact delta,
-          // or invalidates (see the counts sidecar notes)
-          counts = countDeltas.get(name) match {
+          // base + prior segments of this family carry forward; the
+          // count advances by the caller's declared exact delta, or
+          // invalidates (see the counts sidecar notes)
+          (counts: Map[String, Long]) => countDeltas.get(name) match {
             case Some(d) if counts.contains(name) =>
               counts + (name -> (counts(name) + d))
             case _ => counts - name
           }
-        }
+        })
     }
+    // logical tables rewritten this commit (Full/first/compaction)
+    val written = plans.collect { case (name, true, _) => name }.toSet
     val prevDir = root.resolve(s"v=$cur")
-    if (cur > 0 && Files.exists(prevDir)) {
+    def carryForward(): Unit = if (cur > 0 && Files.exists(prevDir)) {
       import scala.jdk.CollectionConverters._
       // a directory carries forward unless its logical table was
       // REWRITTEN this commit (Full/compaction replaces base+segments)
@@ -458,6 +469,12 @@ final class StateStore(spark: SparkSession, rootDir: String) {
           } finally stream.close()
         }
     }
+    val updates =
+      try Overlap.all[Option[CountUpdate]](
+        plans.map { case (_, _, write) => () => Some(write()) } ++
+          Seq(() => { carryForward(); None }, () => { alongside(); None }))
+      catch { case e: Throwable => deleteRecursively(dir); throw e }
+    val counts = updates.flatten.foldLeft(countsAt(cur))((c, u) => u(c))
     // counts land inside the snapshot dir BEFORE the version flip, so
     // they are exactly as atomic as the tables they describe
     Files.createDirectories(dir)
@@ -678,8 +695,22 @@ object StateStore {
     * one segment of upserts + delete-key tombstones (O(changed)). */
   sealed trait TableCommit
   final case class Full(df: DataFrame) extends TableCommit
+  /** A segment commit: `upserts` rows plus tombstones for `deleteKeys`. */
+  sealed trait KeyedDelta extends TableCommit {
+    def upserts: DataFrame
+    def deleteKeys: DataFrame
+    def disjoint: Boolean
+  }
+  /** The general segment commit: delete keys may repeat, and a key both
+    * deleted and upserted keeps its upsert. */
   final case class Delta(upserts: DataFrame, deleteKeys: DataFrame)
-      extends TableCommit
+      extends KeyedDelta { def disjoint = false }
+  /** A segment commit whose caller guarantees, by construction, that
+    * `deleteKeys` holds no duplicate and no key of `upserts`: the
+    * segment writes both sides as they are — one write job, without
+    * the general path's distinct and anti-join. */
+  final case class DisjointDelta(upserts: DataFrame, deleteKeys: DataFrame)
+      extends KeyedDelta { def disjoint = true }
 
   /** Latest-wins merge keys per state family (shard names resolve to
     * their family). A family absent here is Full-commit-only. */

@@ -342,24 +342,29 @@ final case class ParquetTableTarget(dir: String, numBuckets: Int = 16,
   private def bucketOf = pmod(xxhash64(expr(bucketKeySql)), lit(numBuckets))
     .cast("int")
 
-  /** Physically cluster `df` by [[clusterBySql]] before a write (no-op
-    * when unset — the default keeps every existing target's
-    * shuffle-free write plans byte-identical).
+  /** Lay `df` out for a `partitionBy("bucket")` write.
     *
-    * The range partitioning leads with `bucket` (r18): these frames
-    * are written `partitionBy("bucket")`, and ranging on the cluster
-    * key ALONE hands every write task rows of every bucket — each
-    * task then opens one file per bucket dir (tasks × numBuckets tiny
-    * files per write, 2,048 for the export's 64-bucket base at 32
-    * tasks) and the writer's own required sort on the partition
-    * column reorders rows the cluster sort just arranged. Leading
+    * Without [[clusterBySql]] the rows hash-repartition on `bucket`:
+    * every bucket lands in ONE write task, so a write opens at most
+    * `numBuckets` files. Written as it comes, each input partition
+    * opens one file per bucket it holds — a 12-partition delta over 8
+    * buckets wrote 96 tiny files (plus their checksums), where the
+    * small shuffle costs far less than the file creates it saves.
+    *
+    * With [[clusterBySql]] the range partitioning leads with `bucket`
+    * (r18): ranging on the cluster key ALONE would hand every write
+    * task rows of every bucket — each task would then open one file
+    * per bucket dir (tasks × numBuckets tiny files per write, 2,048
+    * for the export's 64-bucket base at 32 tasks), and the writer's
+    * own required sort on the partition column would reorder rows
+    * the cluster sort just arranged. Leading
     * with bucket gives each task a contiguous slice of ONE bucket
     * (±1 at range boundaries): O(tasks) right-sized files, and the
     * (bucket, key) sort already satisfies the writer's requirement so
     * no second sort runs — files keep their key order and row-group
     * min/max stats stay tight for the keyed fetches. */
   private def clustered(df: DataFrame): DataFrame =
-    clusterBySql.fold(df)(c =>
+    clusterBySql.fold(df.repartition(col("bucket")))(c =>
       df.repartitionByRange(col("bucket"), expr(c))
         .sortWithinPartitions(col("bucket"), expr(c)))
 

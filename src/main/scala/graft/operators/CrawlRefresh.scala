@@ -250,21 +250,32 @@ object CrawlRefresh {
         .head.getLong(0)
       (n, manifest)
     }
+    // the sidecar as the night found it, collected once (O(shards)
+    // rows) into a local relation: the night-start size and a no-op
+    // night's returned manifest both come from this one read, which
+    // stays valid until the night's first export mutation
+    private var opening: Option[DataFrame] = None
+    private def openingManifest(sp: SparkSession): DataFrame =
+      opening.getOrElse {
+        val m = Curation.readManifest(sp, exportDir).fold(
+          Curation.emptyManifest(sp))(df => sp.createDataFrame(
+            java.util.Arrays.asList(df.collect(): _*), df.schema))
+        opening = Some(m)
+        m
+      }
     def prevTotal(sp: SparkSession): Long =
-      Curation.readManifest(sp, exportDir)
-        .map(_.agg(coalesce(sum("n_rows"), lit(0L)).as("n"))
-          .head.getLong(0))
-        .getOrElse(0L)
-    def applyRetire(sp: SparkSession, retireIds: DataFrame): Unit =
+      openingManifest(sp).collect().map(_.getAs[Long]("n_rows")).sum
+    def applyRetire(sp: SparkSession, retireIds: DataFrame): Unit = {
+      opening = None
       Curation.exportApplyDelta(sp, exportDir, retireIds, emptyLike,
         idCol, hashCols, hexDigits)
-    def applyAdmit(sp: SparkSession, kept: DataFrame): DataFrame =
+    }
+    def applyAdmit(sp: SparkSession, kept: DataFrame): DataFrame = {
+      opening = None
       Curation.exportApplyDelta(sp, exportDir,
         emptyLike.select(col(idCol)), kept, idCol, hashCols, hexDigits)
-    // the sidecar, pinned: the next night overwrites it in place
-    def currentManifest(sp: SparkSession): DataFrame =
-      Curation.readManifest(sp, exportDir)
-        .fold(Curation.emptyManifest(sp))(_.localCheckpoint())
+    }
+    def currentManifest(sp: SparkSession): DataFrame = openingManifest(sp)
     def keyedSlice(sp: SparkSession, keys: Seq[String]): DataFrame = {
       // export read pruned to the keys' shard dirs, and the key
       // filter lands on the id column in its NATIVE type
@@ -680,14 +691,17 @@ object CrawlRefresh {
       val (n, manifest) = inPhase("boot_export") {
         store.bootstrap(spark, newSnap.select(col(idCol), col(textCol)))
       }
-      inPhase("boot_keyidx") {
-        Dedup.keyIndexInit(spark, keyIdx, textCol, expectedKeys)
-        Dedup.keyIndexAppend(spark, keyIdx, readExport(spark))
-      }
-      inPhase("boot_flows") {
-        flow.run(spark)
-        srpFlow.foreach(_.run(spark))
-      }
+      // the key index and the band-index flows are independent
+      // writers over the written export: they build side by side
+      graft.engine.Overlap.both(
+        inPhase("boot_keyidx") {
+          Dedup.keyIndexInit(spark, keyIdx, textCol, expectedKeys)
+          Dedup.keyIndexAppend(spark, keyIdx, readExport(spark))
+        },
+        inPhase("boot_flows") {
+          flow.run(spark)
+          srpFlow.foreach(_.run(spark))
+        })
       store.commitTotal(spark, n)
       java.nio.file.Files.deleteIfExists(nightMarker.toPath)
       return NightlyStats(bootstrap = true, sliceSize = n,
@@ -903,8 +917,8 @@ object CrawlRefresh {
     // then each band index reconciles ONCE over every key touched
     // tonight (retired ∪ admitted): the delta re-stat compares each
     // key against the FINAL export, so retired docs drop, changed
-    // docs re-band and survivors add. The survivors' keys then commit
-    // to the bloom+key index.
+    // docs re-band and survivors add. The survivors' keys commit to
+    // the bloom+key index beside the reconcile (independent writers).
     val (manifest, rebuilt) = inPhase("admit") {
       val m = store.applyAdmit(spark, kept)
       if (nightlyCrashAfterAdmitExport)
@@ -916,9 +930,12 @@ object CrawlRefresh {
         union = (r ++ a).distinct
         if union.size <= MaxDeltaKeys
       } yield union
-      reconcile(flow, nightKeys)
-      srpFlow.foreach(reconcile(_, nightKeys))
-      Dedup.keyIndexAppend(spark, keyIdx, kept)
+      graft.engine.Overlap.both(
+        {
+          reconcile(flow, nightKeys)
+          srpFlow.foreach(reconcile(_, nightKeys))
+        },
+        Dedup.keyIndexAppend(spark, keyIdx, kept))
       val rb =
         if (Dedup.keyIndexNeedsRebuild(keyIdx)) {
           Dedup.keyIndexRebuild(spark, keyIdx); true

@@ -631,13 +631,18 @@ object Curation {
     * consuming it costs no job. */
   private[graft] def emptyManifest(
       spark: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.types._
+      : org.apache.spark.sql.DataFrame =
     spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      StructType(Seq("shard", "n_rows", "content_hash", "min_id",
-        "max_id").map(StructField(_, LongType))))
-  }
+      ManifestSchema)
+
+  /** The manifest's columns, all longs (see [[shardManifest]]). Its
+    * sidecar reads pass this schema: an inferred read costs a Spark
+    * job per read just to learn it. */
+  private val ManifestSchema = org.apache.spark.sql.types.StructType(
+    Seq("shard", "n_rows", "content_hash", "min_id", "max_id").map(
+      org.apache.spark.sql.types.StructField(_,
+        org.apache.spark.sql.types.LongType)))
 
   /** Incremental re-export (r14 verdict task #7): [[exportShards]]
     * rewrites the FULL shard layout on every call — at 100 TB a
@@ -672,7 +677,8 @@ object Curation {
     val sideDir = manifestSidecarDir(outDir)
     if (!new java.io.File(sideDir).isDirectory)
       return exportShards(df, outDir, idCol, hashCols, hexDigits)
-    val prev = spark.read.parquet(sideDir).localCheckpoint()
+    val prev = spark.read.schema(ManifestSchema).parquet(sideDir)
+      .localCheckpoint()
     val desired = shardManifest(df, idCol, hashCols, hexDigits)
       .localCheckpoint()
     val manifestCols = Seq("shard", "n_rows", "content_hash",
@@ -762,7 +768,7 @@ object Curation {
         "export with exportShards/exportShardsIncremental first")
     val manifestCols = Seq("shard", "n_rows", "content_hash",
       "min_id", "max_id")
-    val prev = spark.read.parquet(sideDir)
+    val prev = spark.read.schema(ManifestSchema).parquet(sideDir)
       .select(manifestCols.map(col): _*).localCheckpoint()
     val shard = shardOf(idCol, hexDigits)
     val retire = retireIds
@@ -828,7 +834,8 @@ object Curation {
       spark: org.apache.spark.sql.SparkSession, outDir: String)
       : Option[org.apache.spark.sql.DataFrame] = {
     val d = manifestSidecarDir(outDir)
-    if (new java.io.File(d).isDirectory) Some(spark.read.parquet(d))
+    if (new java.io.File(d).isDirectory)
+      Some(spark.read.schema(ManifestSchema).parquet(d))
     else None
   }
 

@@ -1019,6 +1019,15 @@ object Dedup {
     * layout fails loudly — re-init and re-append from the corpus. */
   val KeyIndexLayout = "fp-md5"
 
+  /** The `fp-md5` keys table: the key fingerprint and its hash
+    * partition (a `__kp=` directory). Its reads pass this schema — an
+    * inferred read costs a Spark job per read just to learn it. */
+  private val KeyIndexKeysSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("key_fp",
+      org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("__kp",
+      org.apache.spark.sql.types.IntegerType)))
+
   private def keyIndexRequireLayout(
       indexDir: String, meta: Map[String, String]): Unit =
     if (!meta.get("layout").contains(KeyIndexLayout))
@@ -1195,7 +1204,7 @@ object Dedup {
       val keysDir = new java.io.File(indexDir, "keys")
       val oldDir = new java.io.File(indexDir, "keys.old")
       keyIndexRecoverCompaction(indexDir)
-      val keys = spark.read.parquet(keysDir.getPath)
+      val keys = spark.read.schema(KeyIndexKeysSchema).parquet(keysDir.getPath)
         .select(col("key_fp")).distinct().localCheckpoint()
       val n = math.max(keys.count(), 1L)
       // compact the keys table from the same distinct read: nightly
@@ -1487,7 +1496,7 @@ object Dedup {
       math.min(0.01, math.max(1e-6, 10.0 * nCand / itemsAdded.toDouble))
     val candBf = keyBloom(
       candidates.select(fpOf.as("key_fp")), "key_fp", confirmFpp, nCand)
-    val corpusKeys = spark.read
+    val corpusKeys = spark.read.schema(KeyIndexKeysSchema)
       .parquet(keyIndexKeysDirForRead(indexDir).getPath)
       .filter(col("__kp").isin(parts: _*)) // directory-level pruning
       .filter(keyMightContain(candBf, col("key_fp")))

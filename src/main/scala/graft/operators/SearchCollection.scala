@@ -65,32 +65,14 @@ final class SearchCollection private (
     val r = rows.run(spark)
     if (ivfFlow == null) ivfFlow = mkIvf(spark)
     if (ftsFlows == null) ftsFlows = mkFts(spark)
+    // Overlap joins BOTH flows before control leaves the shared-scan
+    // cycle, even when one throws (ADVICE r18): an orphan writer still
+    // running would have cycle()'s finally drop the shared-scan caches
+    // under it, and a retried sync() would start a second run racing
+    // it on the same state dir (StateStore.commitTables has no
+    // cross-writer locking — both compute v=cur+1)
     val (i, f) = SharedScanSource.cycle(shared) {
-      val ivfTask = new java.util.concurrent.FutureTask(
-        () => ivfFlow.run(spark))
-      val t = new Thread(ivfTask, "graft-sync-ivf")
-      t.setDaemon(true)
-      t.start()
-      // the IVF task is ALWAYS awaited before control leaves the
-      // shared-scan cycle (ADVICE r18): if the FTS flow throws while
-      // the orphan IVF writer is still running, cycle()'s finally
-      // would drop the shared-scan caches under it, and a retried
-      // sync() would start a second ivfFlow.run racing the orphan on
-      // the same state dir (StateStore.commitTables has no
-      // cross-writer locking — both compute v=cur+1)
-      val fts =
-        try ftsFlows.run(spark)
-        catch { case e: Throwable =>
-          try { ivfTask.get(); t.join() }
-          catch { case suppressed: Throwable =>
-            e.addSuppressed(suppressed) }
-          throw e
-        }
-      val ivf =
-        try { val r = ivfTask.get(); t.join(); r }
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause }
-      (ivf, fts)
+      Overlap.both(ivfFlow.run(spark), ftsFlows.run(spark))
     }
     (r, i, f)
   }

@@ -897,9 +897,10 @@ class CrawlRefreshSpec extends SparkSpec {
     info(s"idle-night jobs: delta-log $deltaJobs, shards $shardJobs")
     // jobsWhile counts (broadcasts excluded). Before the empty-drain
     // exit each idle night launched 7 (delta-log) and 14 (shards)
-    // jobs; the shard layout's 5 left read its manifest sidecar for
-    // the size and pin it as the returned manifest
-    assert(deltaJobs.forall(_ == 0) && shardJobs.forall(_ <= 5),
+    // jobs; the shard layout's 5 left read its manifest sidecar twice,
+    // once for the size and once to pin it as the returned manifest.
+    // Its 1 now is the one collected read that serves both
+    assert(deltaJobs.forall(_ == 0) && shardJobs.forall(_ <= 1),
       s"delta-log $deltaJobs, shards $shardJobs")
   }
 
@@ -931,5 +932,70 @@ class CrawlRefreshSpec extends SparkSpec {
     // launched 14 (delta-log) and 21 (shards) jobs
     assert(deltaJobs <= 5 && shardJobs <= 11,
       s"delta-log $deltaJobs, shards $shardJobs")
+  }
+
+  /** `body`'s result and the `graft.nightly.phase` of every Spark job
+    * it launched in this thread's job group — threads `body` starts
+    * inherit the group, so their jobs are seen too (null: no phase). */
+  private def phasesWhile[T](body: => T): (T, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"graft-phases-${System.nanoTime}"
+    val seen = new java.util.concurrent.ConcurrentHashMap[Int, Option[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => seen.put(e.jobId,
+            Option(p.getProperty("graft.nightly.phase"))))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "the phase tags of one night")
+      val (out, sentinel) =
+        try {
+          val o = body
+          val f = sc.parallelize(Seq(1), 1).countAsync()
+          f.get()
+          (o, f.jobIds.head)
+        } finally sc.clearJobGroup()
+      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+      while (!seen.containsKey(sentinel) && System.nanoTime < deadline)
+        Thread.sleep(20)
+      assert(seen.containsKey(sentinel), s"sentinel job $sentinel never reported")
+      import scala.jdk.CollectionConverters._
+      (out, seen.asScala.toSeq.collect {
+        case (id, phase) if id != sentinel => phase.orNull })
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("every job of an overlapped phase carries its phase tag") {
+    import spark.implicits._
+    val work = java.nio.file.Files.createTempDirectory("graft-crawl-phases")
+    work.toFile.deleteOnExit()
+    val wd = work.resolve("state").toString
+    val snapA = (1 to 40).map(i => doc(i, words(i))).toDF("doc_id", "text")
+    // bootstrap: the key index builds beside the band-index flow
+    val (boot, bootPhases) = phasesWhile(
+      CrawlRefresh.nightly(spark, wd, snapA, exportDeltaLog = true))
+    assert(boot.bootstrap && boot.keptSize === 40, boot)
+    val bootCounts = bootPhases.groupBy(identity).map { case (p, ps) => p -> ps.size }
+    info(s"bootstrap jobs by phase: $bootCounts")
+    assert(bootPhases.forall(Set("boot_export", "boot_keyidx", "boot_flows")),
+      s"untagged or stray bootstrap jobs: $bootCounts")
+    assert(bootCounts.getOrElse("boot_keyidx", 0) > 0 &&
+      bootCounts.getOrElse("boot_flows", 0) > 0, s"$bootCounts")
+    // a refresh night: the key-index append runs beside the reconcile
+    val snapB = snapA.filter(col("doc_id") =!= 5)
+      .union(Seq(doc(41, words(41)), doc(42, words(3))).toDF("doc_id", "text"))
+    val (night, phases) = phasesWhile(
+      CrawlRefresh.nightly(spark, wd, snapB, exportDeltaLog = true))
+    assert(night.removedSize === 1 && night.sliceSize === 2 &&
+      night.screenedOut === 1 && night.keptSize === 40, night)
+    val counts = phases.groupBy(identity).map { case (p, ps) => p -> ps.size }
+    info(s"refresh jobs by phase: $counts")
+    assert(phases.forall(Set("diff", "retire", "screens", "admit")),
+      s"untagged or stray refresh jobs: $counts")
+    assert(counts.getOrElse("admit", 0) > 0, s"$counts")
   }
 }

@@ -104,6 +104,31 @@ class DeltaTargetSpec extends graft.SparkSpec {
       m.size == 4999)
   }
 
+  test("a write from a 12-partition frame lands at most numBuckets files") {
+    val work = tmp()
+    val dir = work.resolve("t").toString
+    val t = ParquetTableTarget(dir, numBuckets = 8)
+    import spark.implicits._
+    val base = (1 to 600).map(i => (s"k$i", i)).toDF("row_key", "v")
+      .repartition(12)
+    t.apply(spark, base, keys())
+    assert(filesUnder(new java.io.File(dir, "base")).size <= 8)
+    val upserts = (1 to 300 by 2).map(i => (s"k$i", -i)).toDF("row_key", "v")
+      .repartition(12)
+    val deletes = (2 to 300 by 10).map(i => s"k$i").toDF("row_key")
+      .repartition(12)
+    t.apply(spark, upserts, deletes)
+    val seg = segDirs(dir)
+    assert(seg.size == 1)
+    val segFiles = filesUnder(seg.head)
+    assert(segFiles.nonEmpty && segFiles.size <= 8,
+      s"${segFiles.size} files in one segment over 8 buckets")
+    val model = (1 to 600).map(i => s"k$i" -> i).toMap --
+      (2 to 300 by 10).map(i => s"k$i") ++
+      (1 to 300 by 2).map(i => s"k$i" -> -i)
+    assert(contents(t) == model.toSet)
+  }
+
   test("latest-wins across segments; count consolidates, compact folds") {
     val work = tmp()
     val dir = work.resolve("t").toString

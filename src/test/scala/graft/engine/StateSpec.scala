@@ -2,6 +2,7 @@ package graft.engine
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
 import java.nio.file.Files
 import java.nio.charset.StandardCharsets
 
@@ -210,5 +211,54 @@ class StateSpec extends SparkSpec {
     val uncounted = store.read("target_state", TargetStateSchema)
     assert(!uncounted.isLocal && uncounted.count() == 0)
     assert(exchanges(uncounted.select(col("main").as("row_key"))))
+  }
+
+  test("a stale v=next left by a failed commit never goes live") {
+    import StateStore._
+    val root = tmp("stale-next")
+    val store = new StateStore(spark, root.toString)
+    def frame(schema: org.apache.spark.sql.types.StructType,
+        rows: Seq[Any]*): org.apache.spark.sql.DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(
+        rows.map(r => org.apache.spark.sql.Row(r: _*)): _*), schema)
+    def keysOf(cols: String*) = frame(org.apache.spark.sql.types.StructType(
+      cols.map(org.apache.spark.sql.types.StructField(_,
+        org.apache.spark.sql.types.StringType))))
+    def memoRows(keys: String*) = keys.map(k => Seq(k, "p", s"m-$k", null))
+    var memoModel = Map("a" -> "m-a", "b" -> "m-b")
+    val errorsModel = Set(("a", "r1", "boom"))
+    store.commitTables(Map(
+      "component_memo" -> Delta(
+        frame(ComponentMemoSchema, memoRows("a", "b"): _*), keysOf("item_key")),
+      "errors" -> Delta(frame(ErrorsSchema, Seq("a", "r1", "boom")),
+        keysOf("item_key", "row_key"))))
+    val v1 = store.currentVersion
+
+    // what a crashed commit leaves in v=next: a segment dir of its own,
+    // and compaction parts where the memo base will be linked
+    val next = root.resolve(s"v=${v1 + 1}")
+    frame(StructType(ErrorsSchema.fields :+ StructField(DelCol, BooleanType)),
+      Seq("z", "r9", "stale", false))
+      .write.parquet(next.resolve(s"errors${SegSep}000009").toString)
+    val parts = root.resolve("stray-parts")
+    frame(ComponentMemoSchema, memoRows("zombie"): _*).coalesce(1)
+      .write.parquet(parts.toString)
+    Files.createDirectories(next.resolve("component_memo"))
+    parts.toFile.listFiles().filter(_.getName.endsWith(".parquet"))
+      .foreach(f => Files.copy(f.toPath,
+        next.resolve("component_memo").resolve("part-99999-stale.parquet")))
+
+    // the next commit appends a memo segment and carries the memo
+    // base and the errors table forward
+    store.commitTables(Map("component_memo" -> Delta(
+      frame(ComponentMemoSchema, memoRows("c"): _*), keysOf("item_key"))))
+    memoModel += "c" -> "m-c"
+    assert(store.currentVersion == v1 + 1)
+    assert(store.read("component_memo", ComponentMemoSchema).collect()
+      .map(r => r.getString(0) -> r.getString(2)).toMap == memoModel)
+    assert(store.read("errors", ErrorsSchema).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet ==
+      errorsModel)
+    assert(!Files.exists(next.resolve(s"errors${SegSep}000009")))
   }
 }
