@@ -758,6 +758,7 @@ final class Flow(
       .join(tracked, Seq("row_key"), "full_outer")
       .withColumn("action",
         when(col("value_fp").isNull, lit("delete"))     // tracked, not redeclared
+          .when(col("row_key").isNull, lit("null_key")) // refused below
           .when(col("prev_fp").isNull, lit("insert"))
           .when(lit(planned.lossy) ||
             col("prev_fp") =!= col("value_fp"), lit("update"))
@@ -774,6 +775,11 @@ final class Flow(
     // apply/commit scan after it is a memory read.
     val byAction = actions.groupBy("action").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
+    // a null row_key matches no tracking row and no target row, so it
+    // could be neither updated nor deleted later: refuse the pass
+    // before anything is written
+    require(byAction("null_key") == 0,
+      s"stage output has ${byAction("null_key")} row(s) with a null row_key")
 
     // ---- the target apply (idempotent; it lands BEFORE the state
     // pointer flips — crash before the flip ⇒ roll-forward on rerun).
@@ -785,9 +791,9 @@ final class Flow(
     // crash between truncate and apply still converges: the stored
     // record keeps the old generation, so the rerun re-plans the same
     // destructive transition and re-truncates idempotently.
-    // every desired row is an insert or an update unless some are
-    // noops (a bootstrap, a pass whose every row changed value): then
-    // the upserts are the desired rows, with no semi join to plan
+    // with no noop rows, every desired row is an insert or update
+    // (a bootstrap, a pass whose every row changed value): the upserts
+    // are the desired rows, with no semi join to plan
     val upserts =
       if (byAction("noop") == 0) desired.drop("value_fp")
       else desired.drop("value_fp").join(actions
@@ -814,9 +820,6 @@ final class Flow(
     // any segment: their memo/tracking/state rows stay physically in
     // place in the base. An empty refresh set is a local relation, so
     // its two joins fold away instead of costing broadcast-build jobs.
-    // Memo and tracking commit as DisjointDeltas: their tombstones are
-    // duplicate-free and miss every upsert key by construction (noted
-    // at each), so each segment is one write job.
     val refreshedMemo = memo.drop("memo_state")
       .join(scope.refreshed, Seq("item_key"), "left_semi")
       .join(listing, Seq("item_key"))
@@ -833,9 +836,7 @@ final class Flow(
         .join(loadedFps, Seq("item_key"), "left")
         .select(col("item_key"), lit(pFp).as("processor_fp"),
           col("memo_state"), col("__content_fp").as("content_fp"))
-    // upserts are listed items (changed or refreshed), tombstones the
-    // gone items — the ones the listing no longer holds
-    val memoCommit = StateStore.DisjointDelta(
+    val memoCommit = StateStore.Delta(
       refreshedMemo.unionByName(recomputedMemo), scope.gone)
 
     // tracking: every desired row upserts — latest-wins on row_key IS
@@ -843,13 +844,11 @@ final class Flow(
     // row_key declared this run shadows any stale tracking row held by
     // another component. Delete-action rows tombstone. Destructive:
     // the container was recreated — no pre-existing row survived, so
-    // tracking is rewritten as exactly the desired set. The delete
-    // keys are the full outer reconcile's unmatched tracked row_keys:
-    // one row each, none of them desired.
+    // tracking is rewritten as exactly the desired set.
     val desiredTracking = desired.select("item_key", "row_key", "value_fp")
     val trackingCommit: StateStore.TableCommit =
       if (planned.destructive) StateStore.Full(desiredTracking)
-      else StateStore.DisjointDelta(desiredTracking, deleteKeys)
+      else StateStore.Delta(desiredTracking, deleteKeys)
 
     // errors reconcile unconditionally: a stage that STOPPED emitting
     // __error must still clear the stale failure records of the

@@ -178,8 +178,13 @@ final class StateStore(spark: SparkSession, rootDir: String) {
           .parquet(snapshot.resolve(name).toString)
           .withColumn(SeqCol, lit(seq))
       }
+    // within one segment an upsert beats a tombstone of its own key
+    // (false sorts first), so a commit writes its tombstones as given:
+    // a key both deleted and re-upserted survives, and a repeated
+    // tombstone is harmless
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*).orderBy(col(SeqCol).desc)
+      .partitionBy(keys.map(col): _*)
+      .orderBy(col(SeqCol).desc, col(DelCol).asc)
     pred.fold(parts)(p => parts.map(_.filter(p || col(DelCol))))
       .reduce(_.unionByName(_))
       .withColumn("__rn", row_number().over(w))
@@ -347,8 +352,7 @@ final class StateStore(spark: SparkSession, rootDir: String) {
     // ~MaxSegments delta commits)
     val plans: Seq[(String, Boolean, () => CountUpdate)] = tables.toSeq.map {
       case (name, Full(df)) => (name, true, () => rewrite(df, name))
-      case (name, delta: KeyedDelta) =>
-        import delta.{upserts, deleteKeys}
+      case (name, Delta(upserts, deleteKeys)) =>
         val keys = mergeKeysOf(name)
         require(keys.nonEmpty,
           s"Delta commit of $name: no registered merge keys")
@@ -405,16 +409,11 @@ final class StateStore(spark: SparkSession, rootDir: String) {
         else (name, false, () => {
           val nextSeq = segs.lastOption.map(_._2 + 1).getOrElse(1L)
           val keyCols = keys.map(col).toIndexedSeq
-          // a key both deleted and re-upserted must survive: the
-          // upsert wins within a segment (tombstones are anti-joined)
-          // — unless the caller's sides are disjoint by construction,
-          // which makes the segment one write job instead of three
-          val tombs =
-            if (delta.disjoint) deleteKeys.select(keyCols: _*)
-            else deleteKeys.select(keyCols: _*).distinct()
-              .join(upserts.select(keyCols: _*), keys, "left_anti")
+          // tombstones go in as given — one write job per segment: the
+          // merged read lets an upsert win over its own key's tombstone
+          // in the same segment (see mergedView)
           val tombRows = schema.fields.filterNot(f => keys.contains(f.name))
-            .foldLeft(tombs)((df, f) =>
+            .foldLeft(deleteKeys.select(keyCols: _*))((df, f) =>
               df.withColumn(f.name, lit(null).cast(f.dataType)))
             .select(schema.fieldNames.map(col).toIndexedSeq: _*)
             .withColumn(DelCol, lit(true))
@@ -695,22 +694,11 @@ object StateStore {
     * one segment of upserts + delete-key tombstones (O(changed)). */
   sealed trait TableCommit
   final case class Full(df: DataFrame) extends TableCommit
-  /** A segment commit: `upserts` rows plus tombstones for `deleteKeys`. */
-  sealed trait KeyedDelta extends TableCommit {
-    def upserts: DataFrame
-    def deleteKeys: DataFrame
-    def disjoint: Boolean
-  }
-  /** The general segment commit: delete keys may repeat, and a key both
-    * deleted and upserted keeps its upsert. */
+  /** A segment commit: `upserts` rows plus tombstones for
+    * `deleteKeys`. Delete keys may repeat, and a key both deleted and
+    * upserted keeps its upsert. */
   final case class Delta(upserts: DataFrame, deleteKeys: DataFrame)
-      extends KeyedDelta { def disjoint = false }
-  /** A segment commit whose caller guarantees, by construction, that
-    * `deleteKeys` holds no duplicate and no key of `upserts`: the
-    * segment writes both sides as they are — one write job, without
-    * the general path's distinct and anti-join. */
-  final case class DisjointDelta(upserts: DataFrame, deleteKeys: DataFrame)
-      extends KeyedDelta { def disjoint = true }
+      extends TableCommit
 
   /** Latest-wins merge keys per state family (shard names resolve to
     * their family). A family absent here is Full-commit-only. */

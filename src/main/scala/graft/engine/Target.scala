@@ -342,29 +342,24 @@ final case class ParquetTableTarget(dir: String, numBuckets: Int = 16,
   private def bucketOf = pmod(xxhash64(expr(bucketKeySql)), lit(numBuckets))
     .cast("int")
 
-  /** Lay `df` out for a `partitionBy("bucket")` write.
+  /** Physically cluster `df` by [[clusterBySql]] before a write (no-op
+    * when unset — the default keeps every existing target's
+    * shuffle-free write plans byte-identical).
     *
-    * Without [[clusterBySql]] the rows hash-repartition on `bucket`:
-    * every bucket lands in ONE write task, so a write opens at most
-    * `numBuckets` files. Written as it comes, each input partition
-    * opens one file per bucket it holds — a 12-partition delta over 8
-    * buckets wrote 96 tiny files (plus their checksums), where the
-    * small shuffle costs far less than the file creates it saves.
-    *
-    * With [[clusterBySql]] the range partitioning leads with `bucket`
-    * (r18): ranging on the cluster key ALONE would hand every write
-    * task rows of every bucket — each task would then open one file
-    * per bucket dir (tasks × numBuckets tiny files per write, 2,048
-    * for the export's 64-bucket base at 32 tasks), and the writer's
-    * own required sort on the partition column would reorder rows
-    * the cluster sort just arranged. Leading
+    * The range partitioning leads with `bucket` (r18): these frames
+    * are written `partitionBy("bucket")`, and ranging on the cluster
+    * key ALONE hands every write task rows of every bucket — each
+    * task then opens one file per bucket dir (tasks × numBuckets tiny
+    * files per write, 2,048 for the export's 64-bucket base at 32
+    * tasks) and the writer's own required sort on the partition
+    * column reorders rows the cluster sort just arranged. Leading
     * with bucket gives each task a contiguous slice of ONE bucket
     * (±1 at range boundaries): O(tasks) right-sized files, and the
     * (bucket, key) sort already satisfies the writer's requirement so
     * no second sort runs — files keep their key order and row-group
     * min/max stats stay tight for the keyed fetches. */
   private def clustered(df: DataFrame): DataFrame =
-    clusterBySql.fold(df.repartition(col("bucket")))(c =>
+    clusterBySql.fold(df)(c =>
       df.repartitionByRange(col("bucket"), expr(c))
         .sortWithinPartitions(col("bucket"), expr(c)))
 
@@ -491,8 +486,14 @@ final case class ParquetTableTarget(dir: String, numBuckets: Int = 16,
     val segId = (deltaSegs.map(_._1) :+ -1L).max + 1
     val segDir = new java.io.File(deltaRoot, s"seg=$segId")
     val obs = org.apache.spark.sql.Observation()
-    // observe ABOVE the clustering exchange (see the bootstrap branch)
-    clustered(seg).observe(obs,
+    // an unclustered segment hash-repartitions on `bucket`, so each
+    // bucket lands in ONE write task: the segment opens at most
+    // numBuckets files, where written as it comes each input partition
+    // opens one per bucket it holds (a 12-partition delta over 8
+    // buckets wrote 96 tiny files). Observe ABOVE the exchange (see
+    // the bootstrap branch).
+    clusterBySql.fold(seg.repartition(col("bucket")))(_ => clustered(seg))
+      .observe(obs,
         sum(when(col("__deleted"), 0L).otherwise(1L)).as("n_up"),
         sum(when(col("__deleted"), 1L).otherwise(0L)).as("n_del"))
       .write.partitionBy("bucket").mode(SaveMode.Overwrite)

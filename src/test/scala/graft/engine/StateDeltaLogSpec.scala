@@ -60,14 +60,19 @@ class StateDeltaLogSpec extends SparkSpec {
     val curBase = inodes(root.resolve(s"v=$v").resolve("tracking"))
     assert(prevBase == curBase, "base must be hard-linked, not rewritten")
 
-    // a key deleted and re-upserted in ONE commit survives (upsert wins)
+    // a key deleted and re-upserted in ONE commit survives (upsert
+    // wins), and a repeated tombstone deletes once
     st.commitTables(Map("tracking" -> StateStore.Delta(
       mkTracking(Seq(trackingRow("r3", "v3"))),
-      mkTracking(Seq(trackingRow("r3", "x"), trackingRow("r4", "x")))
-        .select("row_key"))))
+      mkTracking(Seq(trackingRow("r3", "x"), trackingRow("r4", "x"),
+        trackingRow("r4", "x"))).select("row_key"))))
     val back2 = st.read("tracking", StateStore.TrackingSchema)
       .collect().map(r => r.getString(1) -> r.getString(2)).toMap
     assert(back2 == Map("r1" -> "v1", "r2" -> "v2", "r3" -> "v3"))
+    assert(st.readWhere("tracking", StateStore.TrackingSchema,
+      org.apache.spark.sql.functions.col("row_key").isin("r3", "r4"))
+      .collect().map(r => r.getString(1) -> r.getString(2)).toMap ==
+      Map("r3" -> "v3"))
   }
 
   test("segments compact back to one base past MaxSegments") {

@@ -2,7 +2,7 @@
 """A/B pairs of the incremental-sync benchmark across two checkouts.
 
     python3 tools/ab_syncbench.py --parent DIR --change DIR
-        [--workload crawl_nightly] [--pairs 6] [--first-seed 1]
+        [--workload crawl_nightly] [--pairs 10] [--first-seed 1]
         [--json OUT]
 
 Runs `python3 syncbench/run.py --workload W --seed S --trace 0` in each
@@ -52,7 +52,7 @@ def main():
     ap.add_argument("--parent", required=True, help="checkout of the parent commit")
     ap.add_argument("--change", required=True, help="checkout of the change")
     ap.add_argument("--workload", default="crawl_nightly")
-    ap.add_argument("--pairs", type=int, default=6)
+    ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--first-seed", type=int, default=1)
     ap.add_argument("--json", help="also write every run's result here")
     args = ap.parse_args()
